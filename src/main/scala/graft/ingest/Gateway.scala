@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{LocalFrames, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** The reference's full HTTP surface (src/main.go:224-332) with the
@@ -12,9 +13,11 @@ import org.apache.spark.sql.functions._
   *
   * Routes (src/main.go):
   *   - `GET /` (:234-245) — the two registers as JSON.
-  *   - `POST /` (:248-331) — envelope validation (same messages, same
-  *     order, HTTP 400), parquet write to `<warehouse>/<source>/YYYY/MM/
-  *     DD/HH` (A4/A6), last-writer-wins `lastTimeGenerated` + monotone
+  *   - `POST /` (:248-331) — one parse of the envelope, collected to the
+  *     driver: validation (same messages, same order, HTTP 400) and the
+  *     batch max read off the collected row, then the parquet write to
+  *     `<warehouse>/<source>/YYYY/MM/DD/HH` (A4/A6) from that same row
+  *     (no second parse), last-writer-wins `lastTimeGenerated` + monotone
   *     `maxTimestamp` register update (A8/A9), 200 echo of
   *     {id, timeGenerated, batch maxTimestamp}.
   *   - `POST /query` (:247) — the reference reverse-proxies to ADX; here
@@ -69,20 +72,17 @@ class Gateway(spark: SparkSession, warehouse: String,
 
   private def ingest(body: String): Response = {
     import spark.implicits._
-    // ONE parse: the collected row carries the content array, so the
-    // batch max comes out driver-side and the only other job is the write
-    val envDf = Ingest.parseEnvelopes(Seq(body).toDF("json"))
-    val env = envDf.collect()(0)
-    if (!env.getAs[Boolean]("_valid"))
+    // one parse per POST: the envelope is parsed by one collect, and the
+    // write reads those collected rows through a LocalRelation, so no
+    // from_json runs again inside the write's optimizer (under the lock)
+    val (envRows, envDf) =
+      LocalFrames.collectLocal(Ingest.parseEnvelopes(Seq(body).toDF("json")))
+    val env = envRows(0)
+    val field = envDf.schema.fieldIndex _
+    if (!env.getBoolean(field("_valid")))
       return Response(400,
-        s"""{"error":"Malformed request: ${env.getAs[String]("_reject_reason")}"}""")
-    // a null ELEMENT inside content passes validation (the array itself
-    // is non-empty) — Go's unmarshal gives it zero values, and
-    // explodeContent coalesces it to 0; mirror that here instead of NPEing
-    val batchMax = env.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("content")
-      .map(r => Option(r).flatMap(row =>
-        Option(row.getAs[java.lang.Long]("timestamp"))).map(_.toLong)
-        .getOrElse(0L)).max
+        s"""{"error":"Malformed request: ${env.getUTF8String(field("_reject_reason"))}"}""")
+    val batchMax = contentMax(env.getArray(field("content")))
     val rows = Ingest.withPartitionColumns(
       Ingest.explodeContent(envDf),
       substring_index(col("file"), "/", 1),
@@ -95,14 +95,14 @@ class Gateway(spark: SparkSession, warehouse: String,
     writeLock.synchronized {
       Ingest.writeBatch(rows, warehouse, mode = "append")
     }
-    val timeGenerated = env.getAs[Long]("timeGenerated")
+    val timeGenerated = env.getLong(field("timeGenerated"))
     synchronized {
       lastTimeGenerated = timeGenerated // A9: last writer wins
       if (batchMax > maxTimestamp) maxTimestamp = batchMax // A8: monotone
     }
     // the envelope schema puts no character restriction on id, so it must
     // be escaped on the way back out or a quote in it breaks the body
-    Response(200, s"""{"id":"${jsonEscape(env.getAs[String]("id"))}",""" +
+    Response(200, s"""{"id":"${jsonEscape(env.getUTF8String(field("id")).toString)}",""" +
       s""""timeGenerated":$timeGenerated,"maxTimestamp":$batchMax}""")
   }
 
@@ -170,7 +170,7 @@ class Gateway(spark: SparkSession, warehouse: String,
     if (!t.startsWith("{")) None
     else
       try {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
+        val node = jsonMapper.readTree(t)
         Option(node.get("csl")).filter(_.isTextual).map(_.asText)
       } catch { case _: Exception => None }
   }
@@ -180,6 +180,33 @@ object Gateway {
   case class Request(method: String, path: String,
       query: Map[String, String] = Map.empty, body: String = "")
   case class Response(status: Int, body: String)
+
+  // readTree is thread-safe, so every /query shares one mapper
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private val rowFields = Ingest.rowSchema.length
+  private val timestampField = Ingest.rowSchema.fieldIndex("timestamp")
+
+  /** The batch max over a parsed, non-empty `content` array. A null
+    * ELEMENT passes validation (the array itself is non-empty) — Go's
+    * unmarshal gives it zero values and explodeContent coalesces it to 0,
+    * so a null element or a null timestamp counts as 0 here too.
+    */
+  private def contentMax(content: ArrayData): Long = {
+    var hi = Long.MinValue
+    var i = 0
+    while (i < content.numElements()) {
+      val ts =
+        if (content.isNullAt(i)) 0L
+        else {
+          val r = content.getStruct(i, rowFields)
+          if (r.isNullAt(timestampField)) 0L else r.getLong(timestampField)
+        }
+      if (ts > hi) hi = ts
+      i += 1
+    }
+    hi
+  }
 
   // one append lock per warehouse path, shared by every Gateway instance
   // in the JVM (see the writeLock note in the class)

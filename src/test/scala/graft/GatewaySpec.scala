@@ -97,6 +97,99 @@ class GatewaySpec extends SparkSpec {
     } finally rm(wh)
   }
 
+  test("a POST parses its envelope once; the write reads the parsed row and keeps its explode") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    def parses(p: LogicalPlan) = p.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])))
+    def writes(p: LogicalPlan) = p.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])
+    // listener events arrive in order on the bus: once a marker action is
+    // seen, every execution the POST started has been delivered
+    var marks = 0
+    def executionsOf(post: => Response): (Response, Seq[QueryExecution]) = {
+      seen.clear()
+      val resp = post
+      marks += 1
+      val marker = marks
+      spark.range(marker).collect()
+      def isMarker(qe: QueryExecution) = qe.analyzed.exists {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Range => r.end == marker
+        case _ => false
+      }
+      eventually(timeout(30.seconds)) {
+        assert(seen.toArray(Array.empty[QueryExecution]).exists(isMarker))
+      }
+      (resp, seen.toArray(Array.empty[QueryExecution]).toSeq.filterNot(isMarker))
+    }
+    val wh = tmpWarehouse()
+    spark.listenerManager.register(listener)
+    try {
+      val gw = new Gateway(spark, wh)
+      val (ok, okRuns) = executionsOf(gw.handle(Request("POST", "/", body = IngestOps.fixtures(0)._2)))
+      assert(ok.status === 200, ok)
+      assert(okRuns.count(qe => parses(qe.analyzed)) === 1, okRuns.map(_.analyzed).mkString("\n"))
+      val write = okRuns.filter(qe => writes(qe.analyzed))
+      assert(write.size === 1)
+      assert(!parses(write.head.analyzed), "the write must not parse the envelope again")
+      assert(write.head.analyzed.exists(_.isInstanceOf[LocalRelation]))
+      // the explode is not folded onto the driver: it runs in the write task
+      val helper = new AdaptiveSparkPlanHelper {}
+      assert(helper.collect(write.head.executedPlan) { case g: GenerateExec => g }.nonEmpty,
+        write.head.executedPlan.toString)
+
+      val (bad, badRuns) = executionsOf(gw.handle(Request("POST", "/", body = IngestOps.fixtures(2)._2)))
+      assert(bad === Response(400, """{"error":"Malformed request: file is required"}"""))
+      assert(badRuns.count(qe => parses(qe.analyzed)) === 1)
+      assert(!badRuns.exists(qe => writes(qe.analyzed)), "a rejected envelope writes nothing")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      rm(wh)
+    }
+  }
+
+  test("Go zero values through the gateway: null elements and missing timestamps count as 0") {
+    val wh = tmpWarehouse()
+    try {
+      val gw = new Gateway(spark, wh)
+      // every row zero-timestamped: the batch max is 0 and the register stays 0
+      val zero = """{"content":[null,{"value":1.0}],"id":"z-1",""" +
+        """"timeGenerated":1697049600000,"file":"factory-z/2023/10/11/18/z.parquet"}"""
+      assert(gw.handle(Request("POST", "/", body = zero)) === Response(200,
+        """{"id":"z-1","timeGenerated":1697049600000,"maxTimestamp":0}"""))
+      assert(gw.handle(Request("GET", "/")).body ===
+        """{"lastTimeGenerated":1697049600000,"maxTimestamp":0}""")
+      // a null element and a row without timestamp beside a real one
+      val mixed = """{"content":[null,{"value":2.0},{"timestamp":1697049605000,"value":3.0}],""" +
+        """"id":"z-2","timeGenerated":1697049700000,"file":"factory-z/2023/10/11/18/y.parquet"}"""
+      assert(gw.handle(Request("POST", "/", body = mixed)) === Response(200,
+        """{"id":"z-2","timeGenerated":1697049700000,"maxTimestamp":1697049605000}"""))
+      assert(gw.handle(Request("GET", "/")).body ===
+        """{"lastTimeGenerated":1697049700000,"maxTimestamp":1697049605000}""")
+      // the stored rows carry Go's zero values: 0 / "" / 0.0
+      val stored = spark.read.parquet(wh)
+        .select("id", "timestamp", "timeOffsetHours", "pointId", "sequence",
+          "project", "value", "res", "quality", "year", "hour")
+        .orderBy("id", "value").collect().map(_.toSeq).toSeq
+      assert(stored === Seq(
+        Seq("z-1", 0L, 0L, "", 0L, "", 0.0, "", 0L, 1970, 0),
+        Seq("z-1", 0L, 0L, "", 0L, "", 1.0, "", 0L, 1970, 0),
+        Seq("z-2", 0L, 0L, "", 0L, "", 0.0, "", 0L, 1970, 0),
+        Seq("z-2", 0L, 0L, "", 0L, "", 2.0, "", 0L, 1970, 0),
+        Seq("z-2", 1697049605000L, 0L, "", 0L, "", 3.0, "", 0L, 2023, 18)))
+    } finally rm(wh)
+  }
+
   test("api key gate runs before every route (KeyRequired semantics)") {
     val wh = tmpWarehouse()
     try {
