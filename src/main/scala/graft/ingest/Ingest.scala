@@ -89,6 +89,12 @@ object Ingest {
         z(col("r.quality"), lit(0L)).as("quality"))
   }
 
+  /** The ledger's partition layout, outermost first (README.md:5
+    * `<source>/YYYY/MM/DD/HH/...`): every writer of the ledger
+    * partitions by exactly these columns.
+    */
+  val partitionColumns: Seq[String] = Seq("source", "year", "month", "day", "hour")
+
   /** Derive the reference's mandated partition columns from an epoch-ms
     * column (README.md:5 `<source>/YYYY/MM/DD/HH/...`). With
     * `partitionBy(source, year, month, day, hour)` Spark gets partition
@@ -133,7 +139,7 @@ object Ingest {
       .option("compression", "snappy")
       .option("parquet.block.size", (128 * 1024 * 1024).toString)
       .options(options)
-      .partitionBy("source", "year", "month", "day", "hour")
+      .partitionBy(partitionColumns: _*)
       .parquet(basePath)
 
   /** Partition compaction for the ingest sink. The reference writes ONE
@@ -149,7 +155,6 @@ object Ingest {
     */
   def compactPartitions(s: SparkSession, basePath: String,
       partitionPredicate: Column, filesPerPart: Int = 1): Long = {
-    val partCols = Seq("source", "year", "month", "day", "hour").map(col)
     // localCheckpoint cuts the file-source lineage: Spark (correctly)
     // refuses to overwrite a path its plan still reads. Production-scale
     // variant: write to a temp prefix and swap — same shuffle shape.
@@ -163,14 +168,8 @@ object Ingest {
       // task, partitions compact in parallel, each dir gets filesPerPart
       // files
       val salt = pmod(xxhash64(df.columns.map(col): _*), lit(filesPerPart))
-      df.repartition((partCols :+ salt): _*)
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", "snappy")
-        .option("parquet.block.size", (128 * 1024 * 1024).toString)
-        .partitionBy("source", "year", "month", "day", "hour")
-        .parquet(basePath)
+      writeBatch(df.repartition((partitionColumns.map(col) :+ salt): _*),
+        basePath)
     }
     n
   }

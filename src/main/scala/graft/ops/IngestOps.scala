@@ -165,7 +165,7 @@ object IngestOps {
         // session's parallelism (local[4] Verify vs local[32] Bench)
         src.repartition(2)
           .write.mode("append")
-          .partitionBy("source", "year", "month", "day", "hour")
+          .partitionBy(Ingest.partitionColumns: _*)
           .parquet(out)
       }
       def nFiles = {

@@ -30,6 +30,42 @@ object Vectors {
   private def cos(s: SparkSession, a: Column, b: Column): Column =
     graft.functions.VectorFunctions.cosine_sim(s, a, b)
 
+  /** The (vec_id, embedding) corpus projection every index reads. */
+  private def emb(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+
+  /** The query frame (qid, qv) of the single-query entries: the one row
+    * vec_id 0, i.e. the recall panel's qid 0 ([[panelQ]]). Every ANN
+    * stage below is keyed on a query frame, so a single-query entry and
+    * its panel branch run the same stages; only the final cut differs
+    * (a TakeOrderedAndProject here, [[topPerQ]] on the panel).
+    */
+  private def queryZero(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") === 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  /** Exact-score stage: the 4-dp-rounded cosine of every candidate row
+    * (vec_id, embedding) against its query's qv, the query vector itself
+    * excluded. Un-cut: (qid, vec_id, keep…, cos). Rounding BEFORE any
+    * sort with vec_id breaking ties is what makes every top-k cut on it
+    * deterministic, so both engines cut identically.
+    */
+  private def exactScore(s: SparkSession, cands: DataFrame,
+      keep: String*): DataFrame =
+    cands.filter(col("vec_id") =!= col("qid"))
+      .select((Seq(col("qid"), col("vec_id")) ++ keep.map(col) :+
+        round(cos(s, col("embedding"), col("qv")), 4).as("cos")): _*)
+
+  /** Brute-force candidates: the whole of `e` exact-scored against each
+    * query of the broadcast query frame.
+    */
+  private def bruteCands(s: SparkSession, e: DataFrame,
+      qf: DataFrame): DataFrame =
+    exactScore(s, e.crossJoin(broadcast(qf)))
+
+  private val byCos = Seq(col("cos").desc, col("vec_id"))
+  private val byAdc = Seq(col("adc").asc, col("vec_id"))
+
   /** Cosine of every vector against the query vector (vec_id 0),
     * emitted for ALL rows ordered by id — the oracle-stable formulation
     * (no top-k cut whose membership could flip on an ulp). The query
@@ -52,14 +88,9 @@ object Vectors {
     * the per-row values hash-match).
     */
   private def simTopk(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    e.crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .filter(col("vec_id") =!= 0)
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(10)
+    val e = emb(s, dir)
+    bruteCands(s, e, queryZero(e)).orderBy(byCos: _*).limit(10)
+      .select("vec_id", "cos")
   }
 
   /** Deterministic random hyperplanes for LSH: 16 planes × 64 dims from a
@@ -95,32 +126,21 @@ object Vectors {
     * multi-probe here is the Hamming≤1 bucket set.
     */
   private def annLsh(s: SparkSession, dir: String): DataFrame = {
-    // 6-bit signature (64 coarse buckets) + Hamming≤1 multi-probe: the
-    // probe set is 7 of 64 buckets ⇒ ~11% of the corpus scanned exactly.
-    val e = Tables.embeddings(s, dir).withColumn("sig", lshSig(s, col("embedding"), 6))
-    val q = e.filter(col("vec_id") === 0)
-      .select(col("sig").as("qsig"), col("embedding").as("qv"))
-    e.join(broadcast(q), bit_count(col("sig").bitwiseXOR(col("qsig"))) <= 1)
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(10)
+    val e = emb(s, dir)
+    lshCands(s, e, queryZero(e)).orderBy(byCos: _*).limit(10)
+      .select("vec_id", "cos")
   }
 
-  /** Embedding near-dup pairs via k-means-cluster × LSH-signature cells
-    * + exact cosine ≥ 0.95 within a cell.
-    * The corpus has no natural near-dups (max pairwise cosine ≈ 0.48),
-    * so the operator demonstrates itself on planted duplicates: vec_id
-    * < 5 re-enter scaled ×1.01 as vec_id+100000 (same direction ⇒ same
-    * signature ⇒ guaranteed bucket collision, cosine ≈ 1). Oracled via
-    * the exact all-pairs formulation: LSH is approximate by
-    * construction, but at the gate SFs the ≥0.95 pair set IS exactly
-    * the planted pairs (spec-pinned) and every planted pair collides in
-    * signature, so the exact DuckDB twin produces the identical rows;
-    * the double-scale-then-round-to-float planting is IEEE-identical in
-    * both engines.
+  /** LSH candidates per query: 6-bit signature (64 coarse buckets) +
+    * Hamming≤1 multi-probe — the probe set is 7 of 64 buckets, so ~11%
+    * of the corpus is exact-scored. Un-cut.
     */
+  private def lshCands(s: SparkSession, e: DataFrame,
+      qf: DataFrame): DataFrame =
+    exactScore(s, e.withColumn("sig", lshSig(s, col("embedding"), 6))
+      .join(broadcast(qf.withColumn("qsig", lshSig(s, col("qv"), 6))),
+        bit_count(col("sig").bitwiseXOR(col("qsig"))) <= 1))
+
   /** Base corpus plus planted near-dups: vec_id < 5 re-enter scaled
     * ×1.01 (same direction ⇒ same signs/signatures, cosine ≈ 1) as
     * vec_id + 100000. Same direction also means identical cosine to
@@ -150,6 +170,19 @@ object Vectors {
       .select(col("vec_id"), col("embedding"), col("c"))
       .withColumn("sig", lshSig(s, col("embedding")))
 
+  /** Embedding near-dup pairs via k-means-cluster × LSH-signature cells
+    * + exact cosine ≥ 0.95 within a cell.
+    * The corpus has no natural near-dups (max pairwise cosine ≈ 0.48),
+    * so the operator demonstrates itself on planted duplicates: vec_id
+    * < 5 re-enter scaled ×1.01 as vec_id+100000 (same direction ⇒ same
+    * signature ⇒ guaranteed bucket collision, cosine ≈ 1). Oracled via
+    * the exact all-pairs formulation: LSH is approximate by
+    * construction, but at the gate SFs the ≥0.95 pair set IS exactly
+    * the planted pairs (spec-pinned) and every planted pair collides in
+    * signature, so the exact DuckDB twin produces the identical rows;
+    * the double-scale-then-round-to-float planting is IEEE-identical in
+    * both engines.
+    */
   private def dedupEmbed(s: SparkSession, dir: String): DataFrame = {
     // repartition on the cell key so the self-join's two sides share
     // one exchange (k-means + signature derivation runs once — the
@@ -180,7 +213,7 @@ object Vectors {
   private def annIvf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val e = Tables.embeddings(s, dir)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
+    val q = queryZero(e)
     val centroids = e
       .select(col("label"), posexplode(col("embedding")))
       .groupBy("label", "pos")
@@ -196,13 +229,10 @@ object Vectors {
       .orderBy(col("list_sim").desc, col("label")) // label breaks cosine ties
       .limit(2)
     // exact search inside the probed lists only
-    e.join(broadcast(probed), Seq("label"))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("label"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(10)
+    exactScore(s, e.join(broadcast(probed), Seq("label"))
+        .crossJoin(broadcast(q)), "label")
+      .orderBy(byCos: _*).limit(10)
+      .select("vec_id", "label", "cos")
   }
 
   /** Per-label centroid, dimension-wise: posexplode → (label, pos) mean.
@@ -220,36 +250,6 @@ object Vectors {
       .orderBy("label", "pos")
   }
 
-  /** Distributed Lloyd's k-means over the embedding corpus (nlist =
-    * ceil(√N) derived from the corpus count, two unrolled iterations,
-    * deterministic init c₀ = vec_id mod nlist) — the
-    * clustering pass that would train q_ann_ivf's coarse quantizer and
-    * the first stage of SemDeDup-style semantic dedup (cluster, then
-    * near-dup only within clusters). Per iteration: ONE map-side-
-    * combinable decimal-exact centroid reduction (posexplode →
-    * (cluster, dim) mean — q_embed_centroid's layout) and ONE broadcast
-    * reassignment (the k×dim ≈ 4 KB centroid table ships to every
-    * executor; argmax-cosine via a hash-aggregated `max_by`, ties to
-    * the lower cluster id). Nothing collects to the driver; each pass
-    * is linear in corpus size — the MLlib KMeans shape re-expressed as
-    * declarative DataFrame ops, so Catalyst still prunes/pushes the
-    * scan. Fully oracled: DuckDB runs the identical unrolled iterations
-    * (decimal-exact centroid means ⇒ bit-identical doubles ⇒ identical
-    * assignments in both engines).
-    */
-  /** Two unrolled Lloyd iterations over `e` (vec_id, embedding), init
-    * c₀ = vec_id mod k; returns the final assignment (vec_id, embedding,
-    * c, cos — each vector's cosine to its own centroid) AND the trained
-    * centroid table (c, centroid). Shared by q_embed_kmeans (cluster
-    * profile), q_semdedup (cluster-scoped near-dup), and
-    * q_ann_ivf_trained (coarse quantizer).
-    *
-    * Each Lloyd pass re-reads the (2-column-pruned) source through its
-    * lineage rather than caching between iterations — correct for the
-    * oracle path and cheap at 2 unrolled iterations; a long-running
-    * production training loop would persist the assignment per round
-    * (the dupClusters localCheckpoint pattern).
-    */
   // per-cluster dimension-wise mean, assembled into an ordered array
   private def kmCentroids(assigned: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -280,6 +280,36 @@ object Vectors {
         col("best.c").as("c"), col("best.cos").as("cos"))
   }
 
+  /** Distributed Lloyd's k-means over the embedding corpus (nlist =
+    * ceil(√N) derived from the corpus count, two unrolled iterations,
+    * deterministic init c₀ = vec_id mod nlist) — the
+    * clustering pass that would train q_ann_ivf's coarse quantizer and
+    * the first stage of SemDeDup-style semantic dedup (cluster, then
+    * near-dup only within clusters). Per iteration: ONE map-side-
+    * combinable decimal-exact centroid reduction (posexplode →
+    * (cluster, dim) mean — q_embed_centroid's layout) and ONE broadcast
+    * reassignment (the k×dim ≈ 4 KB centroid table ships to every
+    * executor; argmax-cosine via a hash-aggregated `max_by`, ties to
+    * the lower cluster id). Nothing collects to the driver; each pass
+    * is linear in corpus size — the MLlib KMeans shape re-expressed as
+    * declarative DataFrame ops, so Catalyst still prunes/pushes the
+    * scan. Fully oracled: DuckDB runs the identical unrolled iterations
+    * (decimal-exact centroid means ⇒ bit-identical doubles ⇒ identical
+    * assignments in both engines).
+    *
+    * Two unrolled Lloyd iterations over `e` (vec_id, embedding), init
+    * c₀ = vec_id mod k; returns the final assignment (vec_id, embedding,
+    * c, cos — each vector's cosine to its own centroid) AND the trained
+    * centroid table (c, centroid). Shared by q_embed_kmeans (cluster
+    * profile), q_semdedup (cluster-scoped near-dup), and
+    * q_ann_ivf_trained (coarse quantizer).
+    *
+    * Each Lloyd pass re-reads the (2-column-pruned) source through its
+    * lineage rather than caching between iterations — correct for the
+    * oracle path and cheap at 2 unrolled iterations; a long-running
+    * production training loop would persist the assignment per round
+    * (the dupClusters localCheckpoint pattern).
+    */
   private def kmeansFit(e: DataFrame): (DataFrame, DataFrame) = {
     // nlist ≈ √N, derived from the corpus itself as a broadcast 1-row
     // scalar (never a driver-side collect): each inverted list stays
@@ -329,17 +359,16 @@ object Vectors {
     (cur, cents)
   }
 
-  // candidate table (cid, cand) packed for argmax_cosine: ordinal int
-  // ids in cid order (vec_ids can exceed Int at corpus scale; the
-  // ordinal is what the tie-break and the weight regroup key on, and
-  // the DuckDB twin derives the identical ordinal with row_number)
-  private def kmppPacked(cands: DataFrame): DataFrame = {
+  // candidate table (cid, cand) as a centroid table for kmAssign:
+  // ordinal int ids in cid order (vec_ids can exceed Int at corpus
+  // scale; the ordinal is what the tie-break and the weight regroup key
+  // on, and the DuckDB twin derives the identical ordinal with
+  // row_number)
+  private def kmppCents(cands: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    cands.withColumn("ordc",
-        (row_number().over(Window.orderBy("cid")) - 1).cast("int"))
-      .agg(sort_array(collect_list(struct(col("ordc").as("c"),
-        transform(col("cand"), v => v.cast("double")).as("centroid"))))
-        .as("cents"))
+    cands.select(
+      (row_number().over(Window.orderBy("cid")) - 1).cast("int").as("c"),
+      transform(col("cand"), v => v.cast("double")).as("centroid"))
   }
 
   /** k-means|| (scalable k-means++) seeding for the coarse quantizer —
@@ -368,7 +397,7 @@ object Vectors {
     * replays the draws (md5 hex fold), the decimal potential sums,
     * and the argmax tie-breaks CTE for CTE.
     */
-  private def kmppFit(s: SparkSession, e: DataFrame): (DataFrame, DataFrame) = {
+  private def kmppFit(e: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val kDf = e.agg(ceil(sqrt(count(lit(1)))).cast("double").as("k"))
@@ -379,11 +408,8 @@ object Vectors {
       // pin the round's potential pass: `scored` feeds both the Σd
       // reduction and the draw filter, and without the pin the one
       // corpus argmax pass ran twice per sampling round
-      val scored = e.crossJoin(broadcast(kmppPacked(cands)))
-        .withColumn("best", graft.functions.VectorFunctions.argmax_cosine(
-          s, col("embedding"), col("cents")))
-        .select(col("vec_id"), col("embedding"),
-          (lit(1.0) - col("best").getField("cos")).as("d"))
+      val scored = kmAssign(e, kmppCents(cands))
+        .select(col("vec_id"), col("embedding"), (lit(1.0) - col("cos")).as("d"))
         .localCheckpoint(true)
       val tot = scored.agg(
         sum(col("d").cast(DecimalType(30, 12))).cast(DoubleType).as("td"))
@@ -397,10 +423,8 @@ object Vectors {
         .join(broadcast(cands.select("cid")), Seq("cid"), "left_anti")
       cands = cands.unionByName(drawn).localCheckpoint(true)
     }
-    val w = e.crossJoin(broadcast(kmppPacked(cands)))
-      .withColumn("best", graft.functions.VectorFunctions.argmax_cosine(
-        s, col("embedding"), col("cents")))
-      .groupBy(col("best").getField("c").as("ordc"))
+    val w = kmAssign(e, kmppCents(cands))
+      .groupBy(col("c").as("ordc"))
       .agg(count(lit(1)).as("w"))
     val init = cands.withColumn("ordc",
         (row_number().over(Window.orderBy("cid")) - 1).cast("int"))
@@ -416,8 +440,7 @@ object Vectors {
 
   private def embedKmeans(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val (a2, _) = kmeansFit(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
+    val (a2, _) = kmeansFit(emb(s, dir))
     a2.groupBy(col("c").as("cluster"))
       .agg(cnt.as("n_vecs"),
         round(sum(col("cos").cast(DecimalType(30, 12))).cast(DoubleType) /
@@ -466,61 +489,52 @@ object Vectors {
     * q_ann_ivf's doc promises ("you'd k-means the corpus into nlist
     * centroids"): q_embed_kmeans supplies both the inverted lists (the
     * final assignment) and the list centroids; the probe ranks lists by
-    * query→centroid cosine, exact-searches only the top-2 lists
-    * (nlist = ceil(√N) is data-derived, so each list — and the probe's
-    * exact-search cost — stays ≈ √N-bounded at any corpus size), and
+    * query→centroid cosine, exact-searches only the top-nprobe lists
+    * ([[probe]]; nlist = ceil(√N) is data-derived, so each list — and
+    * the probe's exact-search cost — stays ≈ √N-bounded at any corpus
+    * size), and
     * cuts top-10 on the 4-dp-rounded cosine with vec_id tie-break —
     * deterministic, so unlike label-list IVF this variant is fully
     * oracled (DuckDB replays the k-means unroll and the same probe).
-    * Both joins broadcast (centroid table: k rows; probe table: 2 rows).
+    * Both joins broadcast (centroid table: k rows; probe table: nprobe
+    * rows).
     */
   private def annIvfTrained(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val (a2, c2) = kmeansFit(e)
-    ivfTrainedSearch(s, dir, a2, c2)
+    ivfCands(s, a2, c2, queryZero(e)).orderBy(byCos: _*).limit(10)
+      .select(col("vec_id"), col("c").as("cluster"), col("cos"))
   }
 
-  /** The trained-IVF probe given an already-fitted quantizer — shared by
-    * q_ann_ivf_trained (own fit) and q_ann_recall (ONE fit for all
-    * index branches).
+  /** Probe stage: each query's coarse lists ranked by query→centroid
+    * cosine (lower c on ties) and cut at `mult` × the derived nprobe =
+    * ⌈√nlist⌉ (≈ N^(1/4)), counted FROM the centroid table itself as a
+    * broadcast 1-row frame — no driver collect, no hand-tuned constant
+    * that silently under-probes when the corpus grows. The rank window
+    * partitions on qid and orders only nlist ≈ √N rows per query.
+    * Returns (c, centroid, qid, qv, rn) per probed list.
     */
-  /** Probe count derived from the index geometry the way nlist is
-    * derived from N: nprobe = ⌈√nlist⌉ (≈ N^(1/4)), computed FROM the
-    * centroid table itself as a broadcast 1-row frame — no driver
-    * collect, no hand-tuned constant that silently under-probes when
-    * the corpus grows. Callers pass Some(n) to pin a count (the
-    * recall harness's nprobe-trade rows).
-    */
-  private def nprobeDf(s: SparkSession, c2: DataFrame,
-      nprobe: Option[Int], mult: Int = 1): DataFrame = nprobe match {
-    case Some(n) => s.range(1).select(lit(n).cast("int").as("np"))
-    case None =>
-      c2.agg((ceil(sqrt(count(lit(1)))) * mult).cast("int").as("np"))
-  }
-
-  private def ivfTrainedSearch(s: SparkSession, dir: String,
-      a2: DataFrame, c2: DataFrame, nprobe: Option[Int] = None): DataFrame = {
+  private def probe(s: SparkSession, c2: DataFrame, qf: DataFrame,
+      mult: Int = 1): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    // rank-filter instead of limit so the cut can be the DATA-DERIVED
-    // nprobe; the single-partition window ranks only nlist ≈ √N rows
-    val rankW = Window.orderBy(col("list_sim").desc, col("c"))
-    val probed = c2.crossJoin(broadcast(q))
-      .select(col("c"),
-        cos(s, col("centroid"), col("qv")).as("list_sim"))
-      .withColumn("rn", row_number().over(rankW))
-      .crossJoin(broadcast(nprobeDf(s, c2, nprobe)))
+    val np = c2.agg((ceil(sqrt(count(lit(1)))) * mult).cast("int").as("np"))
+    c2.crossJoin(broadcast(qf))
+      .withColumn("ls", cos(s, col("centroid"), col("qv")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(col("ls").desc, col("c"))))
+      .crossJoin(broadcast(np))
       .filter(col("rn") <= col("np"))
-      .select("c")
-    a2.join(broadcast(probed), Seq("c"))
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("c").as("cluster"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(10)
+      .drop("ls", "np")
   }
+
+  /** Trained-IVF candidates: every vector of the assignment `a`
+    * (vec_id, embedding, c) in each query's probed lists, exact-scored
+    * — (qid, vec_id, c, cos), un-cut.
+    */
+  private def ivfCands(s: SparkSession, a: DataFrame, c2: DataFrame,
+      qf: DataFrame, mult: Int = 1): DataFrame =
+    exactScore(s, a.select(col("vec_id"), col("embedding"), col("c"))
+      .join(broadcast(probe(s, c2, qf, mult)), Seq("c")), "c")
 
   /** FILTERED ANN — metadata-constrained top-k (`lang = 'fr'`), the
     * serving problem plain indexes don't solve: a selective predicate
@@ -538,38 +552,23 @@ object Vectors {
     * metadata-partitioned index).
     */
   private def annFiltered(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
+    val q = queryZero(e)
     val (a2, c2) = kmeansFit(e)
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val rankW = Window.orderBy(col("list_sim").desc, col("c"))
-    val probed = c2.crossJoin(broadcast(q))
-      .select(col("c"), cos(s, col("centroid"), col("qv")).as("list_sim"))
-      .withColumn("rn", row_number().over(rankW))
-      .crossJoin(broadcast(nprobeDf(s, c2, None)))
-      .filter(col("rn") <= col("np"))
-      .select("c")
-    val allow = Tables.documents(s, dir)
-      .filter(col("lang") === "fr")
-      .select(col("doc_id").as("vec_id"))
-    val pre = a2.join(broadcast(probed), Seq("c"))
-      .join(allow, "vec_id")
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(10)
-      .select(lit("ivf_prefilter").as("method"), col("vec_id"), col("cos"))
-    val exact = e.join(allow, "vec_id")
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(10)
-      .select(lit("exact").as("method"), col("vec_id"), col("cos"))
-    pre.unionByName(exact)
+    val allow = frAllow(s, dir)
+    def top10(cands: DataFrame, method: String): DataFrame =
+      cands.orderBy(byCos: _*).limit(10)
+        .select(lit(method).as("method"), col("vec_id"), col("cos"))
+    top10(ivfCands(s, a2.join(allow, "vec_id"), c2, q), "ivf_prefilter")
+      .unionByName(top10(bruteCands(s, e.join(allow, "vec_id"), q), "exact"))
       .orderBy(col("method"), col("cos").desc, col("vec_id"))
   }
+
+  /** The filtered-ANN allow-list: ids of the `lang = 'fr'` documents. */
+  private def frAllow(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .filter(col("lang") === "fr")
+      .select(col("doc_id").as("vec_id"))
 
   /** BINARY QUANTIZATION ANN — the 1-bit serving technique (sign-bit
     * codes + Hamming shortlist + exact re-rank): each 64-dim vector
@@ -586,34 +585,34 @@ object Vectors {
     * row-for-row by the oracle.
     */
   private def annBq(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    def packWord(off: Int): Column =
-      aggregate(slice(col("embedding"), off, 32), lit(0L),
-        (a, x) => a * 2 + when(x > lit(0.0f), 1L).otherwise(0L))
-    val p = e.withColumn("b1", packWord(1)).withColumn("b2", packWord(33))
-    val q = p.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"), col("b1").as("qb1"),
-        col("b2").as("qb2"))
-    val short = p.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= 0)
-      .withColumn("ham",
-        (expr("bit_count(b1 ^ qb1)") + expr("bit_count(b2 ^ qb2)")).cast("int"))
-      .orderBy(col("ham"), col("vec_id")).limit(50)
-    val rer = short
-      .select(col("vec_id"), col("ham"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(10)
+    val e = emb(s, dir)
+    val q = queryZero(e)
+    bqCands(s, e, q, topOne).orderBy(byCos: _*).limit(10)
       .select(lit("bq_rerank").as("method"), col("vec_id"), col("ham"),
         col("cos"))
-    val exact = e.crossJoin(broadcast(q.select(col("qv"))))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(10)
-      .select(lit("exact").as("method"), col("vec_id"),
-        lit(null).cast("int").as("ham"), col("cos"))
-    rer.unionByName(exact)
+      .unionByName(bruteCands(s, e, q).orderBy(byCos: _*).limit(10)
+        .select(lit("exact").as("method"), col("vec_id"),
+          lit(null).cast("int").as("ham"), col("cos")))
       .orderBy(col("method"), col("cos").desc, col("vec_id"))
+  }
+
+  /** BQ funnel per query: Hamming-distance shortlist of 50 (cut by
+    * `cut`), exact-scored — (qid, vec_id, ham, cos), un-cut.
+    */
+  private def bqCands(s: SparkSession, e: DataFrame, qf: DataFrame,
+      cut: Cut): DataFrame = {
+    def packWord(v: Column, off: Int): Column =
+      aggregate(slice(v, off, 32), lit(0L),
+        (a, x) => a * 2 + when(x > lit(0.0f), 1L).otherwise(0L))
+    val p = e.withColumn("b1", packWord(col("embedding"), 1))
+      .withColumn("b2", packWord(col("embedding"), 33))
+    val q = qf.withColumn("qb1", packWord(col("qv"), 1))
+      .withColumn("qb2", packWord(col("qv"), 33))
+    exactScore(s, cut(p.crossJoin(broadcast(q))
+        .filter(col("vec_id") =!= col("qid"))
+        .withColumn("ham",
+          (expr("bit_count(b1 ^ qb1)") + expr("bit_count(b2 ^ qb2)")).cast("int")),
+      Seq(col("ham").asc, col("vec_id")), 50), "ham")
   }
 
   /** TRUNCATED-DIMENSION ANN — the Matryoshka serving trick (Kusupati
@@ -633,30 +632,28 @@ object Vectors {
     * tie-breaks.
     */
   private def annTruncdim(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val p = e.withColumn("pre", slice(col("embedding"), 1, 16))
-    val q = p.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"), col("pre").as("qp"))
-    val short = p.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= 0)
-      .withColumn("pcos", round(cos(s, col("pre"), col("qp")), 4))
-      .orderBy(col("pcos").desc, col("vec_id")).limit(50)
-    val rer = short
-      .select(col("vec_id"), col("pcos"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(10)
+    val e = emb(s, dir)
+    val q = queryZero(e)
+    truncCands(s, e, q, topOne).orderBy(byCos: _*).limit(10)
       .select(lit("trunc16_rerank").as("method"), col("vec_id"),
         col("pcos"), col("cos"))
-    val exact = e.crossJoin(broadcast(q.select(col("qv"))))
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id")).limit(10)
-      .select(lit("exact").as("method"), col("vec_id"),
-        lit(null).cast("double").as("pcos"), col("cos"))
-    rer.unionByName(exact)
+      .unionByName(bruteCands(s, e, q).orderBy(byCos: _*).limit(10)
+        .select(lit("exact").as("method"), col("vec_id"),
+          lit(null).cast("double").as("pcos"), col("cos")))
       .orderBy(col("method"), col("cos").desc, col("vec_id"))
   }
+
+  /** Truncated-dimension funnel per query: 16-dim prefix-cosine
+    * shortlist of 50 (cut by `cut`), exact-scored at full width —
+    * (qid, vec_id, pcos, cos), un-cut.
+    */
+  private def truncCands(s: SparkSession, e: DataFrame, qf: DataFrame,
+      cut: Cut): DataFrame =
+    exactScore(s, cut(e.crossJoin(broadcast(qf))
+        .filter(col("vec_id") =!= col("qid"))
+        .withColumn("pcos", round(cos(s, slice(col("embedding"), 1, 16),
+          slice(col("qv"), 1, 16)), 4)),
+      Seq(col("pcos").desc, col("vec_id")), 50), "pcos")
 
   /** Hard-negative mining for contrastive training: for every anchor
     * (vec_id ≡ 0 mod 100 — a deterministic anchor sample), the top-3
@@ -673,72 +670,42 @@ object Vectors {
     * Catalyst makes the same flip once the size estimate crosses the
     * broadcast threshold), with the anchor set itself τ-sampled the way
     * q_embed_pca bounds its covariance sample. The per-anchor top-3
-    * window partitions on a_id over candidates bounded by two inverted
-    * lists (~2·N/nlist rows; nlist ≈ √N at scale keeps every partition
-    * √N-bounded). Deterministic — rank cut on the 4-dp-rounded cosine
+    * window partitions on the anchor id over candidates bounded by two
+    * inverted lists (~2·N/nlist rows; nlist ≈ √N at scale keeps every
+    * partition √N-bounded). Deterministic — rank cut on the 4-dp-rounded cosine
     * with vec_id tie-break — so fully oracled (DuckDB replays the
     * k-means unroll and the per-anchor probe).
     */
   private def hardNegatives(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val (a2raw, c2) = kmeansFit(e)
     val a2 = a2raw.select(col("vec_id"), col("embedding"), col("c"))
     val anchors = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("a_id"), col("embedding").as("av"))
-    val rankW = Window.partitionBy("a_id")
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val rankW = Window.partitionBy("qid")
       .orderBy(col("list_sim").desc, col("c"))
-    val probe = anchors.crossJoin(broadcast(c2))
-      .withColumn("list_sim", cos(s, col("centroid"), col("av")))
+    val lists = anchors.crossJoin(broadcast(c2))
+      .withColumn("list_sim", cos(s, col("centroid"), col("qv")))
       .withColumn("rn", row_number().over(rankW))
       .filter(col("rn") <= 2)
-      .select(col("a_id"), col("av"), col("c"))
-    val candW = Window.partitionBy("a_id")
-      .orderBy(col("cos").desc, col("vec_id"))
-    a2.join(broadcast(probe), Seq("c"))
-      .filter(col("vec_id") =!= col("a_id"))
-      .withColumn("cos", round(cos(s, col("embedding"), col("av")), 4))
+      .select(col("qid"), col("qv"), col("c"))
+    exactScore(s, a2.join(broadcast(lists), Seq("c")))
       .filter(col("cos") < 0.95)
-      .withColumn("rnk", row_number().over(candW))
+      .withColumn("rnk",
+        row_number().over(Window.partitionBy("qid").orderBy(byCos: _*)))
       .filter(col("rnk") <= 3)
-      .select(col("a_id"), col("rnk"), col("vec_id"), col("cos"))
+      .select(col("qid").as("a_id"), col("rnk"), col("vec_id"), col("cos"))
       .orderBy("a_id", "rnk")
   }
 
-  /** Distributed PCA, top principal component — the embedding
-    * preprocessing pass (whitening/decorrelation before quantization or
-    * ANN indexing). Three stages, each scale-bounded:
-    * (1) covariance inputs from a DETERMINISTIC md5-threshold sample —
-    * a 64×64 covariance needs ~10⁶ vectors, never the corpus, so at
-    * 100 TB τ = target/N bounds this stage regardless of corpus size
-    * (fixed τ = 1/2 at gate SFs for test mass); second moments Σxxᵀ and
-    * sums Σx accumulate decimal-exact (the kmeans pattern) through a
-    * 4096-key map-side-combined hash agg — shuffle carries 4096 cells
-    * per partition, never rows. (2) the scatter matrix M = n·Σxxᵀ −
-    * (Σx)(Σx)ᵀ (mean-centering without a division, so no cross-engine
-    * decimal-division semantics) feeds THREE unrolled power-iteration
-    * steps from the all-ones start — matvec + renormalize as 64-row
-    * broadcast joins and index-ordered HOF folds, the same
-    * deterministic-unroll trick q_embed_kmeans proved oracle-able.
-    * (3) every corpus vector projects onto the resulting direction —
-    * one codegen'd projection, no shuffle. Fully oracled: DuckDB
-    * replays the sample, the decimal sums, and all three iterations.
-    *
-    * Plan shape (verified): the FULL corpus is scanned exactly once (the
-    * projection); the three other scans all read the τ-bounded sample
-    * (moments, sums, count), and the three unrolled iterations collapse
-    * to one moment computation via ReusedExchange — cost at 100 TB is
-    * one corpus pass plus O(sample·d²) bounded work.
-    */
   /** The PC1 direction as a 1-row frame (column `v`, unit double
     * array) — embedPca's covariance-sample + 3-step power iteration,
     * factored out so the OPQ rotation (round 14) reuses the identical
     * unroll the oracle replays.
     */
   private def pcaDirection(s: SparkSession, dir: String): DataFrame =
-    powerSteps(s, covMatRows(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-      .localCheckpoint(true))
+    powerSteps(s, covMatRows(emb(s, dir)).localCheckpoint(true))
 
   /** The md5-sampled covariance-proxy matrix M = n·Sxx − Sx·Sxᵀ as
     * 64 index-ordered rows (i, marr) — embedPca's front half, factored
@@ -803,8 +770,33 @@ object Vectors {
     step(step(step(v0)))
   }
 
+  /** Distributed PCA, top principal component — the embedding
+    * preprocessing pass (whitening/decorrelation before quantization or
+    * ANN indexing). Three stages, each scale-bounded:
+    * (1) covariance inputs from a DETERMINISTIC md5-threshold sample —
+    * a 64×64 covariance needs ~10⁶ vectors, never the corpus, so at
+    * 100 TB τ = target/N bounds this stage regardless of corpus size
+    * (fixed τ = 1/2 at gate SFs for test mass); second moments Σxxᵀ and
+    * sums Σx accumulate decimal-exact (the kmeans pattern) through a
+    * 4096-key map-side-combined hash agg — shuffle carries 4096 cells
+    * per partition, never rows. (2) the scatter matrix M = n·Σxxᵀ −
+    * (Σx)(Σx)ᵀ (mean-centering without a division, so no cross-engine
+    * decimal-division semantics) feeds THREE unrolled power-iteration
+    * steps from the all-ones start — matvec + renormalize as 64-row
+    * broadcast joins and index-ordered HOF folds, the same
+    * deterministic-unroll trick q_embed_kmeans proved oracle-able.
+    * (3) every corpus vector projects onto the resulting direction —
+    * one codegen'd projection, no shuffle. Fully oracled: DuckDB
+    * replays the sample, the decimal sums, and all three iterations.
+    *
+    * Plan shape (verified): the FULL corpus is scanned exactly once (the
+    * projection); the three other scans all read the τ-bounded sample
+    * (moments, sums, count), and the three unrolled iterations collapse
+    * to one moment computation via ReusedExchange — cost at 100 TB is
+    * one corpus pass plus O(sample·d²) bounded work.
+    */
   private def embedPca(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     e.crossJoin(broadcast(pcaDirection(s, dir)))
       .select(col("vec_id"), round(dot(col("embedding"), col("v")), 4).as("pc1"))
       .orderBy("vec_id")
@@ -873,8 +865,7 @@ object Vectors {
   }
 
   private def opqHouseholder(s: SparkSession, dir: String): DataFrame =
-    opqHouseholderOf(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
+    opqHouseholderOf(emb(s, dir))
 
   /** H·x over an array column: x − 2(uᵀx)u, with the dot product and
     * the per-element update in the SAME fold order as the DuckDB twin.
@@ -901,7 +892,7 @@ object Vectors {
     * full k-means unroll.
     */
   private def clusterProfile(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val (a2, _) = kmeansFit(e)
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -959,25 +950,6 @@ object Vectors {
       .orderBy("vec_id")
   }
 
-  /** Product quantization (Jégou et al. 2011, "Product Quantization for
-    * Nearest Neighbor Search" — public; the FAISS `PQ` index): split the
-    * 64-dim vector into M=4 subspaces of 16 dims, train a
-    * k=[[PqCodewords]] codebook per subspace with the same 2-pass
-    * unrolled Lloyd shape as [[kmeansFit]] (L2 argmin instead of cosine
-    * — PQ quantizes POSITIONS), and encode every vector as 4 sub-codes
-    * (4 bits each — 2 B/vector packed, vs int8's 64 B). Output carries
-    * the reconstruction MSE next to q_embed_quantize's int8 baseline —
-    * the compression-vs-fidelity trade a 100 TB embedding store is
-    * priced on.
-    *
-    * Scale shape: codebooks are (M × k) rows → packed per subspace and
-    * BROADCAST; encoding is a per-row fold over k candidates (no join
-    * explosion); the only shuffles are the bounded centroid aggregates
-    * (decimal-exact dimension means, the kmeansFit idiom) and the final
-    * per-vector regroup, both map-side combinable. Fully oracled: DuckDB
-    * replays both Lloyd rounds per subspace and the same L2 argmin with
-    * the (d2, c) tie order.
-    */
   /** Codewords per PQ subspace — k = 256 (8-bit codes), the FAISS
     * default. The harness itself priced the smaller sizes: round 8's
     * k = 4 (2-bit) measured ADC recall 0.0 at 20 k vectors (256
@@ -1011,8 +983,8 @@ object Vectors {
     * final assignment (vec_id, m, sv, c, d2) AND the trained codebooks
     * (m, c, centroid). Shared by q_pq_encode (encode the corpus) and
     * q_ann_ivfpq (encode coarse residuals + ADC lookup tables).
-    */
-  /** The trained codebooks always materialize eagerly (r15: the old
+    *
+    * The trained codebooks always materialize eagerly (r15: the old
     * `checkpointFit = false` default relied on exchange reuse across
     * the fit's consumers, but reuse only matches IDENTICAL canonical
     * subtrees — column pruning diverges them, and the executed plans
@@ -1032,24 +1004,6 @@ object Vectors {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("mu")))),
           x => x.getField("mu")).as("centroid"))
 
-    // L2² argmin over the packed per-subspace codebook via the native
-    // codegen'd ArgminL2 (index-ascending double accumulation, strict-
-    // less update over the c-sorted pack ⇒ min d2 with the lower code
-    // on ties — exactly the old array_min-over-(d2, c)-structs HOF twin
-    // and the oracle's ORDER BY d2, c). The HOF form is CodegenFallback:
-    // interpreted it priced fine at k = 16 but is the hot loop at
-    // k = 256 (N × M rows × k × subDim multiply-adds per pass).
-    def assign(cents: DataFrame): DataFrame = {
-      val packed = cents.groupBy("m")
-        .agg(sort_array(collect_list(struct(col("c"), col("centroid"))))
-          .as("codebook"))
-      sub.join(broadcast(packed), "m")
-        .withColumn("best", graft.functions.VectorFunctions.argmin_l2(
-          sub.sparkSession, col("sv"), col("codebook")))
-        .select(col("vec_id"), col("m"), col("sv"),
-          col("best.c").as("c"), col("best.d2").as("d2"))
-    }
-
     val a0 = sub.select(col("vec_id"), col("m"), col("sv"))
       .withColumn("c", (col("vec_id") % k).cast("int"))
     // the trained codebooks are ≤ m·k rows and fan out to the ADC
@@ -1057,10 +1011,50 @@ object Vectors {
     // persisted index — always materialize them (r15: the old
     // checkpointFit=false default relied on exchange reuse, which the
     // executed plans show does not span differently-pruned consumers)
-    val cb2 = centroids(assign(centroids(a0))).localCheckpoint(true)
-    (assign(cb2), cb2)
+    val cb2 = centroids(pqAssign(sub, centroids(a0))).localCheckpoint(true)
+    (pqAssign(sub, cb2), cb2)
   }
 
+  /** PQ-encode stage: each (vec_id, m, sv) row's nearest codeword of
+    * codebook m — L2² argmin over the packed per-subspace codebook via
+    * the native codegen'd ArgminL2 (index-ascending double
+    * accumulation, strict-less update over the c-sorted pack ⇒ min d2
+    * with the lower code on ties — exactly the old
+    * array_min-over-(d2, c)-structs HOF twin and the oracle's ORDER BY
+    * d2, c). The HOF form is CodegenFallback: interpreted it priced
+    * fine at k = 16 but is the hot loop at k = 256 (N × M rows × k ×
+    * subDim multiply-adds per pass). Returns (vec_id, m, sv, c, d2).
+    */
+  private def pqAssign(sub: DataFrame, cb: DataFrame): DataFrame = {
+    val packed = cb.groupBy("m")
+      .agg(sort_array(collect_list(struct(col("c"), col("centroid"))))
+        .as("codebook"))
+    sub.join(broadcast(packed), "m")
+      .withColumn("best", graft.functions.VectorFunctions.argmin_l2(
+        sub.sparkSession, col("sv"), col("codebook")))
+      .select(col("vec_id"), col("m"), col("sv"),
+        col("best.c").as("c"), col("best.d2").as("d2"))
+  }
+
+  /** Product quantization (Jégou et al. 2011, "Product Quantization for
+    * Nearest Neighbor Search" — public; the FAISS `PQ` index): split the
+    * 64-dim vector into M=4 subspaces of 16 dims, train a
+    * k=[[PqCodewords]] codebook per subspace with the same 2-pass
+    * unrolled Lloyd shape as [[kmeansFit]] (L2 argmin instead of cosine
+    * — PQ quantizes POSITIONS), and encode every vector as 4 sub-codes
+    * (4 bits each — 2 B/vector packed, vs int8's 64 B). Output carries
+    * the reconstruction MSE next to q_embed_quantize's int8 baseline —
+    * the compression-vs-fidelity trade a 100 TB embedding store is
+    * priced on.
+    *
+    * Scale shape: codebooks are (M × k) rows → packed per subspace and
+    * BROADCAST; encoding is a per-row fold over k candidates (no join
+    * explosion); the only shuffles are the bounded centroid aggregates
+    * (decimal-exact dimension means, the kmeansFit idiom) and the final
+    * per-vector regroup, both map-side combinable. Fully oracled: DuckDB
+    * replays both Lloyd rounds per subspace and the same L2 argmin with
+    * the (d2, c) tie order.
+    */
   private def pqEncode(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val m = 4
@@ -1122,91 +1116,96 @@ object Vectors {
     * the residual PQ unroll, and the same table-lookup scoring.
     */
   private def annIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val (a2, c2) = kmeansFit(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-    ivfPqSearch(s, dir, a2, c2)
+    val e = emb(s, dir)
+    val (c2, pcb2, codes, asgn) = ivfPqIndex(e)
+    adcServe(s, c2, pcb2, codes, asgn, queryZero(e))
+      .orderBy(byAdc: _*).limit(10)
+      .select(col("vec_id"), col("cluster"), col("adc"))
   }
 
-  /** The ADC-scored candidate set (vec_id, cluster, adc) of the IVF-PQ
-    * index for the probed lists, UN-cut — the shared core of
-    * q_ann_ivfpq (direct top-10), q_ann_rerank (top-50 shortlist →
-    * exact re-rank), and the recall harness's nprobe-trade rows.
-    * nprobe defaults to the data-derived ⌈√nlist⌉ ([[nprobeDf]]).
+  /** The IVF-PQ index of `e`: coarse fit ([[kmeansFit]]) plus its PQ
+    * half ([[ivfPqIndexTables]]) — (c2, pcb2, codes, asgn).
     */
-  private def ivfPqScores(s: SparkSession, dir: String,
-      a2: DataFrame, c2: DataFrame, nprobe: Option[Int]): DataFrame = {
+  private def ivfPqIndex(e: DataFrame)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (a2, c2) = kmeansFit(e)
     val (pcb2, codes, asgn) = ivfPqIndexTables(a2, c2)
-    ivfPqServe(s, dir, c2, pcb2, codes, asgn, nprobe)
+    (c2, pcb2, codes, asgn)
   }
+
+  /** Residual stage: an array minus its list's `centroid`, float
+    * elements widened to double first — the corpus side of the index
+    * and the query side of ADC use the one expression.
+    */
+  private def residual(v: Column): Column =
+    zip_with(v, col("centroid"), (a, b) => a.cast("double") - b)
+
+  /** Corpus residuals of an assignment (vec_id, embedding, c) from its
+    * list centroid: (vec_id, cl, remb).
+    */
+  private def residuals(a: DataFrame, c2: DataFrame): DataFrame =
+    a.join(broadcast(c2), "c")
+      .select(col("vec_id"), col("c").as("cl"),
+        residual(col("embedding")).as("remb"))
 
   /** The PQ half of the IVF-PQ index, built from a fitted coarse
     * quantizer: residuals from the assigned list centroid are PQ-encoded
-    * ([[pqFit]]). Returns the three tables that, with the coarse
+    * ([[pqFit]]) — in the Householder-rotated space when `rot` is given
+    * (the OPQ branch). Returns the three tables that, with the coarse
     * centroids themselves, ARE the index: codebooks (m, c, centroid),
     * codes (vec_id, m, code), list assignments (vec_id, cl).
     */
-  private def ivfPqIndexTables(a2: DataFrame, c2: DataFrame,
-      m: Int = 4): (DataFrame, DataFrame, DataFrame) = {
-    val res = a2.join(broadcast(c2), "c")
-      .select(col("vec_id"), col("c").as("cl"),
-        zip_with(col("embedding"), col("centroid"),
-          (a, b) => a.cast("double") - b).as("remb"))
-    val (pa2, pcb2) =
-      pqFit(subspaces(res, "remb", m), PqCodewords)
+  private def ivfPqIndexTables(a2: DataFrame, c2: DataFrame, m: Int = 4,
+      rot: Option[DataFrame] = None): (DataFrame, DataFrame, DataFrame) = {
+    val res = residuals(a2, c2)
+    // rotated residuals materialize eagerly: codes and codebooks are
+    // consumed by SEPARATE actions, and exchange reuse does not span
+    // actions — without the pin the rotate re-derived per consumer
+    val fitOn = rot.fold(res)(u => rotate(res, "remb", u).localCheckpoint(true))
+    val (pa2, pcb2) = pqFit(subspaces(fitOn, "remb", m), PqCodewords)
     (pcb2, pa2.select(col("vec_id"), col("m"), col("c").as("code")),
       res.select(col("vec_id"), col("cl")))
   }
 
-  /** ADC scoring from the four index tables ALONE — coarse centroids
-    * (c, centroid), PQ codebooks (m, c, centroid), codes
-    * (vec_id, m, code), list assignments (vec_id, cl) — plus the query
-    * vector. This is the serving contract: no corpus vector is ever
-    * read, which is why the same function serves both the in-memory fit
-    * (ivfPqScores) and a parquet-persisted index (q_ann_persist).
+  /** ADC-score stage over the four index tables ALONE — coarse
+    * centroids (c, centroid), PQ codebooks (m, c, centroid), codes
+    * (vec_id, m, code), list assignments (vec_id, cl) — plus a query
+    * frame. This is the serving contract: no corpus vector is ever read,
+    * which is why the same pass serves the in-memory fit, a
+    * parquet-persisted index (q_ann_persist), one query or the panel.
+    * [[probe]] picks each query's lists at `mult` × the derived nprobe;
+    * per probed list the query's [[residual]] — Householder-rotated by
+    * `rot` when given, the OPQ branch's only difference — is sliced
+    * into m subspaces and scored against every codeword with the native
+    * codegen'd l2_sq (same fold order as the HOF twin, oracle-identical).
+    * That ADC table is O(queries · nprobe · m · k) rows — broadcast
+    * here; at 100 TB it flips to a co-partitioned join on
+    * (cl, m, code). The inner join against it both restricts the codes
+    * to the probed lists and scores each code in one lookup. Returns the
+    * un-cut (qid, vec_id, cluster, lrank, adc): lrank is the probe rank
+    * of the candidate's list, so an nprobe = 1 cut is a filter on the
+    * same scored frame.
     */
-  private def ivfPqServe(s: SparkSession, dir: String, c2: DataFrame,
-      pcb2: DataFrame, codes: DataFrame, asgn: DataFrame,
-      nprobe: Option[Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private[graft] def adcServe(s: SparkSession, c2: DataFrame,
+      pcb2: DataFrame, codes: DataFrame, asgn: DataFrame, qf: DataFrame,
+      mult: Int = 1, m: Int = 4, rot: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val m = 4
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select(expr("transform(embedding, v -> CAST(v AS DOUBLE))").as("qv"))
-    // probe: top-nprobe coarse lists by query→centroid cosine (the
-    // house metric, consistent with q_ann_ivf_trained's probe); the
-    // rank window orders only nlist ≈ √N rows
-    val rankW = Window.orderBy(col("ls").desc, col("cl"))
-    val pb = c2.crossJoin(broadcast(q))
-      .select(col("c").as("cl"), col("centroid"),
-        cos(s, col("centroid"), col("qv")).as("ls"))
-      .withColumn("rn", row_number().over(rankW))
-      .crossJoin(broadcast(nprobeDf(s, c2, nprobe)))
-      .filter(col("rn") <= col("np"))
-      .select(col("cl"), col("centroid"))
-    // per-list query residual, sliced into subspaces → the ADC table
-    val qr = pb.crossJoin(broadcast(q))
-      .select(col("cl"),
-        zip_with(col("qv"), col("centroid"), (a, b) => a - b).as("qres"))
-    // the ADC distance table evaluates one L2² per (probed list,
-    // subspace, codeword) — the native codegen'd l2_sq (same fold
-    // order as the HOF twin, oracle-identical) replaces ~3.5 s of
-    // interpreted zip_with/aggregate per serve at the sf0.1 panel
-    val adcT = subspaces(qr, "qres", m)
+    val qr = probe(s, c2, qf, mult)
+      .select(col("qid"), col("c").as("cl"), col("rn").as("lrank"),
+        residual(col("qv")).as("qres"))
+    val adcT = subspaces(rot.fold(qr)(rotate(qr, "qres", _)), "qres", m)
       .join(broadcast(pcb2), "m")
-      .select(col("cl"), col("m"), col("c").as("code"),
-        graft.functions.VectorFunctions.l2_sq(
+      .select(col("qid"), col("cl"), col("lrank"), col("m"),
+        col("c").as("code"), graft.functions.VectorFunctions.l2_sq(
           s, col("sv"), col("centroid")).as("d2"))
-    // candidates = PQ codes of vectors in the probed lists; the inner
-    // join against the broadcast ADC table both restricts to the probe
-    // set and scores each code in one lookup
     codes
       .join(asgn, "vec_id")
       .join(broadcast(adcT), Seq("cl", "m", "code"))
-      .filter(col("vec_id") =!= 0)
-      .groupBy("vec_id", "cl")
+      .filter(col("vec_id") =!= col("qid"))
+      .groupBy("qid", "vec_id", "cl", "lrank")
       .agg(sum(col("d2").cast(DecimalType(30, 12))).cast(DoubleType).as("adc0"))
-      .select(col("vec_id"), col("cl").as("cluster"),
-        round(col("adc0"), 4).as("adc"))
+      .select(col("qid"), col("vec_id"), col("cl").as("cluster"),
+        col("lrank"), round(col("adc0"), 4).as("adc"))
   }
 
   /** Index persistence round-trip — the production index lifecycle
@@ -1214,36 +1213,29 @@ object Vectors {
     * tables once, WRITE them as parquet (coarse centroids, PQ
     * codebooks, codes, list assignments — bytes per vector, the only
     * state a serving tier holds), READ them back, and SERVE the query
-    * from the loaded tables through the FULL serving funnel: the
-    * [[ivfPqServe]] ADC pass plus the exact re-rank tier at the
-    * DERIVED shortlist width ([[shortlistWidth]]) — the operating
-    * point the round-10 ~sf1 panel measured, now what the persisted
-    * stack actually serves. At 100 TB build and serve are different
-    * clusters on different days; this query proves the hand-off loses
-    * nothing — it is oracled against the SAME DuckDB twin as
-    * q_ann_rerank, so the parquet round-trip must reproduce the
-    * in-memory funnel bit-for-bit. The result is checkpointed before
-    * the temp index dir is deleted.
+    * from the loaded tables through the full [[serveFunnel]]: the
+    * [[adcServe]] pass plus the exact re-rank tier at the DERIVED
+    * shortlist width ([[shortlistWidth]]) — the operating point the
+    * round-10 ~sf1 panel measured, now what the persisted stack
+    * actually serves. At 100 TB build and serve are different clusters
+    * on different days; this query proves the hand-off loses nothing —
+    * it is oracled against the SAME DuckDB twin as q_ann_rerank, so the
+    * parquet round-trip must reproduce the in-memory funnel
+    * bit-for-bit. The result is checkpointed before the temp index dir
+    * is deleted.
     */
   private def annPersist(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val (a2, c2) = kmeansFit(e)
-    val (pcb2, codes, asgn) = ivfPqIndexTables(a2, c2)
+    val (c2, pcb2, codes, asgn) = ivfPqIndex(emb(s, dir))
     val idxPath = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx")
     val idx = idxPath.toString
+    def load(t: String): DataFrame = s.read.parquet(s"$idx/$t")
     try {
-      c2.write.mode("overwrite").parquet(s"$idx/coarse")
-      pcb2.write.mode("overwrite").parquet(s"$idx/codebooks")
-      codes.write.mode("overwrite").parquet(s"$idx/codes")
-      asgn.write.mode("overwrite").parquet(s"$idx/assign")
-      exactRerank(s,
-        ivfPqServe(s, dir,
-          s.read.parquet(s"$idx/coarse"),
-          s.read.parquet(s"$idx/codebooks"),
-          s.read.parquet(s"$idx/codes"),
-          s.read.parquet(s"$idx/assign"), None),
-        e, shortlistWidth(e.count()))
-        .localCheckpoint(true)
+      Seq("coarse" -> c2, "codebooks" -> pcb2, "codes" -> codes,
+        "assign" -> asgn).foreach { case (t, df) =>
+        df.write.mode("overwrite").parquet(s"$idx/$t")
+      }
+      serveFunnel(s, dir, load("coarse"), load("codebooks"), load("codes"),
+        load("assign")).localCheckpoint(true)
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(idxPath).iterator().asScala.toSeq
@@ -1253,35 +1245,55 @@ object Vectors {
 
   /** Encode vectors ONTO a frozen index — the add-with-assign half of
     * incremental maintenance: route each vector to its nearest FROZEN
-    * coarse centroid (the same codegen'd ArgmaxCosine, lowest-c ties),
-    * PQ-encode its residual against the FROZEN codebooks (ArgminL2,
-    * lowest-code ties). No Lloyd pass runs; both argmins are
-    * deterministic functions of fixed centroid tables, which is what
-    * makes the whole upsert fully oracle-able. Returns (assignments
-    * (vec_id, cl), codes (vec_id, m, code)) — the rows a production
-    * writer APPENDS to the persisted q_ann_persist tables.
+    * coarse centroid ([[kmAssign]], lowest-c ties), PQ-encode its
+    * residual against the FROZEN codebooks ([[pqAssign]], lowest-code
+    * ties). No Lloyd pass runs; both argmins are deterministic
+    * functions of fixed centroid tables, which is what makes the whole
+    * upsert fully oracle-able. Returns (assignments (vec_id, cl), codes
+    * (vec_id, m, code)) — the rows a production writer APPENDS to the
+    * persisted q_ann_persist tables.
     */
   private[graft] def encodeOnto(s: SparkSession, c2: DataFrame,
       pcb2: DataFrame, vecs: DataFrame): (DataFrame, DataFrame) = {
-    val packed = c2.agg(
-      sort_array(collect_list(struct(col("c"), col("centroid")))).as("cents"))
-    val aN = vecs.crossJoin(broadcast(packed))
-      .withColumn("best", graft.functions.VectorFunctions.argmax_cosine(
-        s, col("embedding"), col("cents")))
-      .select(col("vec_id"), col("embedding"), col("best.c").as("c"))
-    val resN = aN.join(broadcast(c2), "c")
-      .select(col("vec_id"), col("c").as("cl"),
-        zip_with(col("embedding"), col("centroid"),
-          (a, b) => a.cast("double") - b).as("remb"))
-    val packedCb = pcb2.groupBy("m")
-      .agg(sort_array(collect_list(struct(col("c"), col("centroid"))))
-        .as("codebook"))
-    val codesN = subspaces(resN, "remb", 4)
-      .join(broadcast(packedCb), "m")
-      .withColumn("best", graft.functions.VectorFunctions.argmin_l2(
-        s, col("sv"), col("codebook")))
-      .select(col("vec_id"), col("m"), col("best.c").as("code"))
-    (resN.select(col("vec_id"), col("cl")), codesN)
+    val resN = residuals(kmAssign(vecs, c2), c2)
+    (resN.select(col("vec_id"), col("cl")),
+      pqAssign(subspaces(resN, "remb", 4), pcb2)
+        .select(col("vec_id"), col("m"), col("c").as("code")))
+  }
+
+  /** The full serving funnel over explicit index tables for the query
+    * vec_id 0 — [[adcServe]] at the derived probes, the ADC shortlist
+    * cut at the derived width ([[shortlistWidth]]; one metadata-cheap
+    * corpus count keeps that cut a distributed TakeOrderedAndProject —
+    * a global rank window would single-partition the pool), then the
+    * exact [[rerank]] to the final top-10. Serves q_ann_rerank,
+    * q_ann_persist and q_ann_upsert, and is the seam for the STREAMING
+    * upsert sink's spec ([[graft.streaming.StreamOps
+    * .vectorUpsertSink]]): a served read over (frozen tables ∪
+    * streamed generations) must equal the batch upsert bit-for-bit.
+    */
+  private[graft] def serveFunnel(s: SparkSession, dir: String,
+      c2: DataFrame, pcb2: DataFrame, codes: DataFrame,
+      asgn: DataFrame): DataFrame = {
+    val e = emb(s, dir)
+    val q = queryZero(e)
+    rerank(s, adcServe(s, c2, pcb2, codes, asgn, q)
+        .orderBy(byAdc: _*).limit(shortlistWidth(e.count())), e, q)
+      .orderBy(byCos: _*).limit(10)
+      .select(col("vec_id"), col("cluster"), col("adc"), col("cos"))
+  }
+
+  /** The frozen-index fixture: base-generation fit + its index tables,
+    * materialized — (c2, pcb2, codesB, asgnB, base). Seam shared by
+    * [[annUpsert]] and the spec that proves encode idempotence
+    * (re-encoding the base through [[encodeOnto]] reproduces the fit's
+    * own tables bit-for-bit).
+    */
+  private[graft] def upsertParts(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val base = emb(s, dir).filter(col("vec_id") % 5 =!= 4)
+    val (c2, pcb2, codesB, asgnB) = ivfPqIndex(base)
+    (c2, pcb2, codesB, asgnB, base)
   }
 
   /** Incremental ANN index maintenance (q_ann_upsert) — the missing
@@ -1307,45 +1319,12 @@ object Vectors {
     * vector re-derives identical rows), so replayed appends are
     * dedup-safe on vec_id.
     */
-  /** The full serving funnel over explicit index tables — ADC at the
-    * derived probes + exact re-rank at the derived shortlist. Seam for
-    * the STREAMING upsert sink's spec ([[graft.streaming.StreamOps
-    * .vectorUpsertSink]]): a served read over (frozen tables ∪
-    * streamed generations) must equal the batch upsert bit-for-bit.
-    */
-  private[graft] def serveFunnel(s: SparkSession, dir: String,
-      c2: DataFrame, pcb2: DataFrame, codes: DataFrame,
-      asgn: DataFrame): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    exactRerank(s, ivfPqServe(s, dir, c2, pcb2, codes, asgn, None), e,
-      shortlistWidth(e.count()))
-  }
-
-  /** The frozen-index fixture: base-generation fit + its index tables,
-    * materialized — (c2, pcb2, codesB, asgnB, base). Seam shared by
-    * [[annUpsert]] and the spec that proves encode idempotence
-    * (re-encoding the base through [[encodeOnto]] reproduces the fit's
-    * own tables bit-for-bit).
-    */
-  private[graft] def upsertParts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val base = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") % 5 =!= 4)
-    val (a2, c2) = kmeansFit(base)
-    val (pcb2, codesB, asgnB) = ivfPqIndexTables(a2, c2)
-    (c2, pcb2, codesB, asgnB, base)
-  }
-
   private def annUpsert(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val incoming = e.filter(col("vec_id") % 5 === 4)
     val (c2, pcb2, codesB, asgnB, _) = upsertParts(s, dir)
-    val (asgnN, codesN) = encodeOnto(s, c2, pcb2, incoming)
-    val codes = codesB.unionByName(codesN)
-    val asgn = asgnB.unionByName(asgnN)
-    exactRerank(s, ivfPqServe(s, dir, c2, pcb2, codes, asgn, None), e,
-      shortlistWidth(e.count()))
+    val (asgnN, codesN) = encodeOnto(s, c2, pcb2,
+      emb(s, dir).filter(col("vec_id") % 5 === 4))
+    serveFunnel(s, dir, c2, pcb2, codesB.unionByName(codesN),
+      asgnB.unionByName(asgnN))
       .withColumn("is_new", (col("vec_id") % 5 === 4).cast("int"))
   }
 
@@ -1366,19 +1345,13 @@ object Vectors {
     * class.
     */
   private def annDrift(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val base = e.filter(col("vec_id") % 5 =!= 4)
     val (a2r, c2) = kmeansFit(base)
     val a2 = a2r.select(col("vec_id"), col("embedding"), col("c"))
     // route a batch onto the FROZEN centroids — the coarse half of
-    // encodeOnto (same packed broadcast + codegen'd argmax, same ties)
-    val packed = broadcast(c2.agg(
-      sort_array(collect_list(struct(col("c"), col("centroid")))).as("cents")))
-    def assignOnto(vecs: DataFrame): DataFrame =
-      vecs.crossJoin(packed)
-        .withColumn("best", graft.functions.VectorFunctions.argmax_cosine(
-          s, col("embedding"), col("cents")))
-        .select(col("best.c").as("c"))
+    // encodeOnto (same kmAssign argmax, same ties)
+    def assignOnto(vecs: DataFrame): DataFrame = kmAssign(vecs, c2).select("c")
     val uni = e.filter(col("vec_id") % 5 === 4)
     val cnts = a2.groupBy("c").count()
     val maxCl = cnts.orderBy(col("count").desc, col("c")).limit(1).select("c")
@@ -1411,15 +1384,6 @@ object Vectors {
       .orderBy("scenario")
   }
 
-  /** The IVF-PQ/ADC search given an already-fitted coarse quantizer —
-    * shared by q_ann_ivfpq (own fit) and q_ann_recall (one fit).
-    */
-  private def ivfPqSearch(s: SparkSession, dir: String,
-      a2: DataFrame, c2: DataFrame, nprobe: Option[Int] = None): DataFrame =
-    ivfPqScores(s, dir, a2, c2, nprobe)
-      .orderBy(col("adc").asc, col("vec_id"))
-      .limit(10)
-
   /** The served re-rank SHORTLIST WIDTH, derived from index geometry
     * the way every other budget in this family is (nlist = ⌈√N⌉,
     * nprobe = ⌈√nlist⌉): the exact tier re-ranks k·⌈√pool⌉ of the
@@ -1443,10 +1407,10 @@ object Vectors {
     (k * math.ceil(math.sqrt(nprobe * n.toDouble / nlist))).toInt
   }
 
-  /** [[shortlistWidth]] as a broadcast 1-row frame (column `sl`) —
-    * the [[nprobeDf]] pattern for the panel harness, where the cut is
-    * a filter on a per-qid rank window and a driver-side count would
-    * be a needless job on the already-loaded corpus.
+  /** [[shortlistWidth]] as a broadcast 1-row frame (column `sl`) — the
+    * form [[probe]] uses for nprobe, for the panel harness, where the
+    * cut is a filter on a per-qid rank window and a driver-side count
+    * would be a needless job on the already-loaded corpus.
     */
   private[graft] def shortlistDf(e: DataFrame): DataFrame =
     e.agg(count(lit(1)).cast("double").as("n"))
@@ -1455,24 +1419,19 @@ object Vectors {
           col("n") / ceil(sqrt(col("n"))).cast("double"))))
         .cast("int").as("sl"))
 
-  /** The exact re-rank tier over an ADC-scored candidate frame: cut
-    * the top-`sl` shortlist on the code distance, fetch ONLY those
-    * vectors (a primary-key join against the vector store — the one
-    * place full vectors are read at all), score the exact cosine, and
-    * cut the final top-10 on it. Shared by q_ann_rerank (in-memory
-    * fit) and q_ann_persist (the loaded-from-parquet index).
+  /** Exact re-rank stage over an ADC shortlist (qid, vec_id, cluster,
+    * adc, …): fetch ONLY those vectors (a primary-key join against the
+    * vector store — the one place full vectors are read at all) and
+    * exact-score them against their query — (qid, vec_id, cluster, adc,
+    * cos), un-cut. This is what recovers the recall the lossy codes give
+    * up: an answer mis-ranked below k by quantization error is
+    * re-admitted by the exact pass, while the scan still never touches
+    * more than shortlist + probed-codes rows.
     */
-  private def exactRerank(s: SparkSession, scores: DataFrame,
-      e: DataFrame, sl: Int): DataFrame = {
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    scores.orderBy(col("adc").asc, col("vec_id")).limit(sl)
-      .join(e, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cluster"), col("adc"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(10)
-  }
+  private def rerank(s: SparkSession, short: DataFrame, e: DataFrame,
+      qf: DataFrame): DataFrame =
+    exactScore(s, short.join(e, "vec_id").join(broadcast(qf), "qid"),
+      "cluster", "adc")
 
   /** IVF-PQ with an EXACT re-rank tier — the production FAISS serving
     * pipeline (Jégou et al. 2011 §V.B): the 4-byte ADC codes cut a
@@ -1480,25 +1439,11 @@ object Vectors {
     * k·⌈√pool⌉, the measured ~sf1 operating point with no hand-tuned
     * constant), then ONLY those vectors are fetched and scored with
     * the exact cosine against the query, and the final top-10 cut is
-    * on the exact score. This is what recovers the recall the lossy
-    * codes give up: an answer mis-ranked below k by quantization error
-    * is re-admitted by the exact pass, while the scan still never
-    * touches more than shortlist + probed-codes rows. The width comes
-    * from one metadata-cheap corpus count so the shortlist cut stays a
-    * distributed TakeOrderedAndProject (a global rank window would
-    * single-partition the pool).
+    * on the exact score ([[serveFunnel]]).
     */
-  private def ivfPqRerank(s: SparkSession, dir: String,
-      a2: DataFrame, c2: DataFrame, nprobe: Option[Int] = None): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    exactRerank(s, ivfPqScores(s, dir, a2, c2, nprobe), e,
-      shortlistWidth(e.count()))
-  }
-
   private def annRerank(s: SparkSession, dir: String): DataFrame = {
-    val (a2, c2) = kmeansFit(
-      Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")))
-    ivfPqRerank(s, dir, a2, c2)
+    val (c2, pcb2, codes, asgn) = ivfPqIndex(emb(s, dir))
+    serveFunnel(s, dir, c2, pcb2, codes, asgn)
   }
 
   /** Size of the deterministic evaluation panel: the PanelSize lowest
@@ -1526,6 +1471,19 @@ object Vectors {
       .filter(col("rn") <= k).drop("rn")
   }
 
+  /** A panel branch's answer: its top-10 (qid, vec_id) per query. */
+  private def panelTop10(df: DataFrame, ord: Seq[Column]): DataFrame =
+    topPerQ(df, ord, 10).select("qid", "vec_id")
+
+  /** The top-k of a single-query frame: one TakeOrderedAndProject. */
+  private def topOne(df: DataFrame, ord: Seq[Column], k: Int): DataFrame =
+    df.orderBy(ord: _*).limit(k)
+
+  /** A shortlist cut inside a funnel: [[topPerQ]] on the panel,
+    * [[topOne]] for a single query.
+    */
+  private type Cut = (DataFrame, Seq[Column], Int) => DataFrame
+
   /** [[topPerQ]] with the cut supplied as a broadcast 1-row frame
     * (column `sl`) — the data-derived-budget form.
     */
@@ -1538,191 +1496,14 @@ object Vectors {
       .filter(col("rn") <= col("sl")).drop("rn", "sl")
   }
 
-  /** The panel's exact re-rank tier over a shortlist frame — shared by
-    * the served branch (derived shortlist), the probe-ladder branch,
-    * and the legacy fixed-50 pricing row.
-    */
-  private def panelRerank(s: SparkSession, short: DataFrame,
-      e: DataFrame, qp: DataFrame): DataFrame =
-    topPerQ(
-      short.join(e, "vec_id")
-        .join(broadcast(qp), "qid")
-        .select(col("qid"), col("vec_id"),
-          round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-
-  /** Exact brute-force top-10 per panel query — the panel ground truth.
-    * One corpus × panel cross product (N × |panel| scored rows, each a
-    * codegen'd cosine), cut per qid.
-    */
-  private def brutePanel(s: SparkSession, e: DataFrame,
-      qp: DataFrame): DataFrame =
-    topPerQ(
-      e.crossJoin(broadcast(qp))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-
-  /** LSH branch per panel query: 6-bit signatures, Hamming≤1
-    * multi-probe, exact cosine within the probed buckets.
-    */
-  private def lshPanel(s: SparkSession, e: DataFrame,
-      qp: DataFrame): DataFrame = {
-    val esig = e.withColumn("sig", lshSig(s, col("embedding"), 6))
-    val qps = esig.filter(col("vec_id") < PanelSize)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("sig").as("qsig"))
-    topPerQ(
-      esig.join(broadcast(qps),
-          bit_count(col("sig").bitwiseXOR(col("qsig"))) <= 1 &&
-            col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-  }
-
-  /** Trained-IVF branch per panel query: per-qid probe of the top-np
-    * coarse lists, exact cosine inside them.
-    */
-  private def ivfPanel(s: SparkSession, a2: DataFrame, c2: DataFrame,
-      qp: DataFrame, mult: Int = 1): DataFrame = {
-    val probe = topPerQFrame(c2.crossJoin(broadcast(qp))
-      .select(col("qid"), col("qv"), col("c"),
-        cos(s, col("centroid"), col("qv")).as("ls")), c2, mult)
-    topPerQ(
-      a2.select(col("vec_id"), col("embedding"), col("c"))
-        .join(broadcast(probe), Seq("c"))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-  }
-
-  /** The per-qid probe cut at the derived nprobe: ranks (qid, c, ls)
-    * rows inside each query and keeps rn <= ⌈√nlist⌉, carrying any
-    * extra columns through.
-    */
-  private def topPerQFrame(ranked: DataFrame, c2: DataFrame,
-      mult: Int = 1): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    ranked.withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ls").desc, col("c"))))
-      .crossJoin(broadcast(nprobeDf(ranked.sparkSession, c2, None, mult)))
-      .filter(col("rn") <= col("np"))
-      .drop("ls", "np")
-  }
-
-  /** The panel ADC table: per (qid, probed list, subspace, code) — the
-    * scores of EVERY panel query against the shared IVF-PQ index, in
-    * one pass. Returns (scores, probeRank):
-    *   scores    (qid, vec_id, cluster, adc) at the DERIVED nprobe;
-    *   probeRank (qid, cl, rn) — so the nprobe=1 branch is a FILTER on
-    *             the same scored frame (a vector's ADC depends only on
-    *             its own list's table entries), not a second replay.
-    * The ADC table is O(panel · nprobe · M · k) rows — broadcast here;
-    * at 100 TB it flips to a co-partitioned join on (cl, m, code).
-    */
-  private def ivfPqPanelScores(s: SparkSession, a2: DataFrame,
-      c2: DataFrame, qp: DataFrame, mult: Int = 1): (DataFrame, DataFrame) = {
-    val (pcb2, codes, asgn) = ivfPqIndexTables(a2, c2)
-    ivfPqPanelServe(s, c2, pcb2, codes, asgn, qp, mult)
-  }
-
-  /** The panel ADC pass over ALREADY-BUILT index tables — the serving
-    * split that lets the harness materialize the fit once and probe it
-    * at several budgets without re-deriving the Lloyd passes per
-    * branch (the ivfPqServe contract, panel-keyed).
-    */
-  private def ivfPqPanelServe(s: SparkSession, c2: DataFrame,
-      pcb2: DataFrame, codes: DataFrame, asgn: DataFrame, qp: DataFrame,
-      mult: Int, m: Int = 4): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val ranked = c2.crossJoin(broadcast(qp))
-      .select(col("qid"), col("qv"), col("c").as("cl"), col("centroid"),
-        cos(s, col("centroid"), col("qv")).as("ls"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("qid").orderBy(col("ls").desc, col("cl"))))
-    val probeRank = ranked.select("qid", "cl", "rn")
-    val pb = ranked
-      .crossJoin(broadcast(nprobeDf(s, c2, None, mult)))
-      .filter(col("rn") <= col("np"))
-      .select(col("qid"), col("cl"), col("centroid"), col("qv"))
-    val qr = pb.select(col("qid"), col("cl"),
-      zip_with(expr("transform(qv, v -> CAST(v AS DOUBLE))"),
-        col("centroid"), (a, b) => a - b).as("qres"))
-    val adcT = subspaces(qr, "qres", m)
-      .join(broadcast(pcb2), "m")
-      .select(col("qid"), col("cl"), col("m"), col("c").as("code"),
-        graft.functions.VectorFunctions.l2_sq(
-          s, col("sv"), col("centroid")).as("d2"))
-    val scores = codes
-      .join(asgn, "vec_id")
-      .join(broadcast(adcT), Seq("cl", "m", "code"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy("qid", "vec_id", "cl")
-      .agg(sum(col("d2").cast(DecimalType(30, 12))).cast(DoubleType).as("adc0"))
-      .select(col("qid"), col("vec_id"), col("cl").as("cluster"),
-        round(col("adc0"), 4).as("adc"))
-    (scores, probeRank)
-  }
-
-  /** Binary-quantization branch per panel query: Hamming-shortlist 50,
-    * exact re-rank to 10 (q_ann_bq's funnel on the panel).
-    */
-  private def bqPanel(s: SparkSession, e: DataFrame): DataFrame = {
-    def packWord(off: Int): Column =
-      aggregate(slice(col("embedding"), off, 32), lit(0L),
-        (a, x) => a * 2 + when(x > lit(0.0f), 1L).otherwise(0L))
-    val p = e.withColumn("b1", packWord(1)).withColumn("b2", packWord(33))
-    val qps = p.filter(col("vec_id") < PanelSize)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("b1").as("qb1"), col("b2").as("qb2"))
-    val short = topPerQ(
-      p.crossJoin(broadcast(qps))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("ham",
-          (expr("bit_count(b1 ^ qb1)") + expr("bit_count(b2 ^ qb2)")).cast("int")),
-      Seq(col("ham").asc, col("vec_id")), 50)
-    topPerQ(
-      short.select(col("qid"), col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-  }
-
-  /** Truncated-dimension branch per panel query: 16-dim prefix
-    * shortlist 50, exact re-rank to 10 (q_ann_truncdim's funnel).
-    */
-  private def truncPanel(s: SparkSession, e: DataFrame): DataFrame = {
-    val p = e.withColumn("pre", slice(col("embedding"), 1, 16))
-    val qps = p.filter(col("vec_id") < PanelSize)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("pre").as("qp"))
-    val short = topPerQ(
-      p.crossJoin(broadcast(qps))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("pcos", round(cos(s, col("pre"), col("qp")), 4)),
-      Seq(col("pcos").desc, col("vec_id")), 50)
-    topPerQ(
-      short.select(col("qid"), col("vec_id"),
-        round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-  }
-
-  /** Per-(method, qid) candidate sets of all fourteen index branches —
+  /** Per-(method, qid) candidate sets of all fifteen index branches —
     * the harness core, exposed for the spec that asserts the
-    * structural law recall(rerank) ≥ recall(ivfpq) PER QUERY.
+    * structural law recall(rerank) ≥ recall(ivfpq) PER QUERY. Every
+    * branch is a single-query entry's stages run on the panel frame.
     */
   private[graft] def recallPanelCands(s: SparkSession,
       dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val qp = panelQ(e)
     // ONE coarse fit and ONE PQ fit feed every index branch — and the
     // shared artifacts MATERIALIZE (localCheckpoint) before fanning
@@ -1738,46 +1519,30 @@ object Vectors {
     val codes = codesr.localCheckpoint(true)
     val asgn = asgnr.localCheckpoint(true)
     s.sparkContext.setJobDescription("recall: adc serve m4")
-    val (scoresR, probeRank) =
-      ivfPqPanelServe(s, c2, pcb2, codes, asgn, qp, mult = 1)
-    val scores = scoresR.localCheckpoint(true)
-    val ivfpq = topPerQ(scores, Seq(col("adc").asc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-    val np1 = topPerQ(
-      scores.join(broadcast(probeRank.filter(col("rn") === 1)
-          .select(col("qid"), col("cl").as("cluster"))),
-        Seq("qid", "cluster")),
-      Seq(col("adc").asc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-    // the SERVED rerank branch now cuts the shortlist at the DERIVED
-    // width ([[shortlistWidth]] as a broadcast frame) — the round-10
-    // panel proved the shortlist, not the probe count, binds served
-    // recall (0.240 at the old fixed 50 vs 0.366 at 200, ceiling
-    // 0.436), so the serving default is the measured operating point
-    // with no hand-tuned constant. The fixed-50 row below prices what
-    // the derivation buys. Structural: derived-sl ⊇ 50 on the same ADC
-    // order wherever sl ≥ 50, so per-query hits can only grow.
+    val scores = adcServe(s, c2, pcb2, codes, asgn, qp).localCheckpoint(true)
+    val ivfpq = panelTop10(scores, byAdc)
+    // the SERVED rerank branch cuts the shortlist at the DERIVED width
+    // ([[shortlistWidth]] as a broadcast frame) — the round-10 panel
+    // proved the shortlist, not the probe count, binds served recall
+    // (0.240 at the old fixed 50 vs 0.366 at 200, ceiling 0.436), so
+    // the serving default is the measured operating point with no
+    // hand-tuned constant. The fixed-50 row prices what the derivation
+    // buys. Structural: derived-sl ⊇ 50 on the same ADC order wherever
+    // sl ≥ 50, so per-query hits can only grow.
     s.sparkContext.setJobDescription("recall: shortlist width")
     val slDf = shortlistDf(e).localCheckpoint(true)
-    val short = topPerQCut(scores, Seq(col("adc").asc, col("vec_id")), slDf)
-    val rerank = panelRerank(s, short, e, qp)
-    val short50 = topPerQ(scores, Seq(col("adc").asc, col("vec_id")), 50)
-    val rerankSl50 = panelRerank(s, short50, e, qp)
+    def served(sc: DataFrame): DataFrame =
+      panelTop10(rerank(s, topPerQCut(sc, byAdc, slDf), e, qp), byCos)
     // the probe-budget ladder: the same index at TRIPLE the derived
     // nprobe (still data-derived — 3·⌈√nlist⌉, no magic constant).
     // The ~sf1 panel showed recall on this geometry is PROBE-bound
     // (exact-distance ivf 0.436 at the derived probes is the ceiling
     // every code-based branch lives under); these two rows price the
     // knob that actually moves it: the exact-distance ceiling and the
-    // served rerank stack at 3× probes. The PQ fit subtree is shared
-    // with the derived-probe chain (same canonical plan ⇒ reused).
-    val ivf3 = ivfPanel(s, a2, c2, qp, mult = 3)
+    // served rerank stack at 3× probes.
     s.sparkContext.setJobDescription("recall: adc serve np3x")
-    val (scores3r, _) =
-      ivfPqPanelServe(s, c2, pcb2, codes, asgn, qp, mult = 3)
-    val scores3 = scores3r.localCheckpoint(true)
-    val short3 = topPerQCut(scores3, Seq(col("adc").asc, col("vec_id")), slDf)
-    val rerank3 = panelRerank(s, short3, e, qp)
+    val scores3 = adcServe(s, c2, pcb2, codes, asgn, qp, mult = 3)
+      .localCheckpoint(true)
     // the OPQ-rotated PQ branch (round 14): SAME coarse lists, SAME
     // derived probes — only the residual space rotates (Householder,
     // distance-preserving) before the subspace split, so any recall
@@ -1800,49 +1565,9 @@ object Vectors {
       .select(expr("aggregate(u, 0D, (a, b) -> a + abs(b))").as("s"))
       .head().getDouble(0) == 0.0
     val ivfpqOpq = if (rotationIsIdentity) ivfpq else {
-      // materialize the rotated residuals AND the rotated fit eagerly:
-      // codes and codebooks are consumed by SEPARATE actions, and
-      // exchange reuse does not span actions — without the pins the
-      // two Lloyd passes and the rotate re-derived per consumer
-      val resR = rotate(
-        a2.join(broadcast(c2), "c")
-          .select(col("vec_id"), col("c").as("cl"),
-            zip_with(col("embedding"), col("centroid"),
-              (a, b) => a.cast("double") - b).as("remb")),
-        "remb", uDf).localCheckpoint(true)
-      val (pa2Rr, pcb2R) =
-        pqFit(subspaces(resR, "remb", 4), PqCodewords)
-      val codesR = pa2Rr.select(col("vec_id"), col("m"), col("c").as("code"))
-        .localCheckpoint(true)
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      val pbR = c2.crossJoin(broadcast(qp))
-        .select(col("qid"), col("qv"), col("c").as("cl"), col("centroid"),
-          cos(s, col("centroid"), col("qv")).as("ls"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("ls").desc, col("cl"))))
-        .crossJoin(broadcast(nprobeDf(s, c2, None, 1)))
-        .filter(col("rn") <= col("np"))
-        .select(col("qid"), col("cl"), col("centroid"), col("qv"))
-      val qrR = rotate(
-        pbR.select(col("qid"), col("cl"),
-          zip_with(expr("transform(qv, v -> CAST(v AS DOUBLE))"),
-            col("centroid"), (a, b) => a - b).as("qres")),
-        "qres", uDf)
-      val adcR = subspaces(qrR, "qres", 4)
-        .join(broadcast(pcb2R), "m")
-        .select(col("qid"), col("cl"), col("m"), col("c").as("code"),
-          graft.functions.VectorFunctions.l2_sq(
-            s, col("sv"), col("centroid")).as("d2"))
-      val scoredR = codesR
-        .join(asgn, "vec_id")
-        .join(broadcast(adcR), Seq("cl", "m", "code"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(sum(col("d2").cast(DecimalType(30, 12))).cast(DoubleType).as("adc0"))
-        .select(col("qid"), col("vec_id"), round(col("adc0"), 4).as("adc"))
-      topPerQ(scoredR, Seq(col("adc").asc, col("vec_id")), 10)
-        .select("qid", "vec_id")
+      val (pcbR, codesR, _) = ivfPqIndexTables(a2, c2, rot = Some(uDf))
+      panelTop10(adcServe(s, c2, pcbR, codesR.localCheckpoint(true), asgn, qp,
+        rot = Some(uDf)), byAdc)
     }
     // the two quantizer levers (round 15), priced separately and then
     // composed — the ~sf1 panel showed recall is PROBE-bound under the
@@ -1856,11 +1581,8 @@ object Vectors {
     val (pcb8, codes8r, _) = ivfPqIndexTables(a2, c2, m = 8)
     val codes8 = codes8r.localCheckpoint(true)
     s.sparkContext.setJobDescription("recall: adc serve m8")
-    val (scores8r, _) =
-      ivfPqPanelServe(s, c2, pcb8, codes8, asgn, qp, mult = 1, m = 8)
-    val scores8 = scores8r.localCheckpoint(true)
-    val ivfpqM8 = topPerQ(scores8, Seq(col("adc").asc, col("vec_id")), 10)
-      .select("qid", "vec_id")
+    val scores8 = adcServe(s, c2, pcb8, codes8, asgn, qp, m = 8)
+      .localCheckpoint(true)
     // (b) ivf_l4 — the coarse quantizer at DOUBLE the Lloyd budget
     //     (2 continued rounds over the materialized 2-round state =
     //     the 4-round fit), exact distances at the derived probes:
@@ -1870,16 +1592,14 @@ object Vectors {
     val (a4r, c4r) = kmeansContinue(e, a2, 2)
     val a4 = a4r.localCheckpoint(true)
     val c4 = c4r.localCheckpoint(true)
-    val ivfL4 = ivfPanel(s, a4, c4, qp)
     // (c) ivf_pp — k-means|| seeding at the SAME 2-round Lloyd budget
     //     as the base fit, exact distances at the derived probes: the
     //     init-quality lever, priced against 'ivf' (same budget,
     //     different start) and 'ivf_l4' (double budget, same start)
     s.sparkContext.setJobDescription("recall: kmpp fit")
-    val (appR, cppR) = kmppFit(s, e)
+    val (appR, cppR) = kmppFit(e)
     val app = appR.localCheckpoint(true)
     val cpp = cppR.localCheckpoint(true)
-    val ivfPp = ivfPanel(s, app, cpp, qp)
     // (a)+(b) rerank_l4m8 — the composed serving point: M=8 codes on
     //     the 4-round coarse residuals, derived probes, derived
     //     shortlist, exact re-rank. This is the operating point the
@@ -1889,40 +1609,50 @@ object Vectors {
     val codesL8 = codesL8r.localCheckpoint(true)
     val asgnL8 = asgnL8r.localCheckpoint(true)
     s.sparkContext.setJobDescription("recall: adc serve l4m8")
-    val (scoresL8r, _) =
-      ivfPqPanelServe(s, c4, pcbL8, codesL8, asgnL8, qp, mult = 1, m = 8)
-    val scoresL8 = scoresL8r.localCheckpoint(true)
-    val shortL8 = topPerQCut(scoresL8, Seq(col("adc").asc, col("vec_id")), slDf)
-    val rerankL8 = panelRerank(s, shortL8, e, qp)
-    lshPanel(s, e, qp).select(lit("lsh").as("method"), col("qid"), col("vec_id"))
-      .unionByName(ivfPanel(s, a2, c2, qp)
-        .select(lit("ivf").as("method"), col("qid"), col("vec_id")))
-      .unionByName(ivfL4
-        .select(lit("ivf_l4").as("method"), col("qid"), col("vec_id")))
-      .unionByName(ivfPp
-        .select(lit("ivf_pp").as("method"), col("qid"), col("vec_id")))
-      .unionByName(ivfpqM8
-        .select(lit("ivfpq_m8").as("method"), col("qid"), col("vec_id")))
-      .unionByName(rerankL8
-        .select(lit("rerank_l4m8").as("method"), col("qid"), col("vec_id")))
-      .unionByName(ivfpq
-        .select(lit("ivfpq").as("method"), col("qid"), col("vec_id")))
-      .unionByName(ivfpqOpq
-        .select(lit("ivfpq_opq").as("method"), col("qid"), col("vec_id")))
-      .unionByName(np1
-        .select(lit("ivfpq_np1").as("method"), col("qid"), col("vec_id")))
-      .unionByName(rerank
-        .select(lit("rerank").as("method"), col("qid"), col("vec_id")))
-      .unionByName(ivf3
-        .select(lit("ivf_np3x").as("method"), col("qid"), col("vec_id")))
-      .unionByName(rerank3
-        .select(lit("rerank_np3x").as("method"), col("qid"), col("vec_id")))
-      .unionByName(rerankSl50
-        .select(lit("rerank_sl50").as("method"), col("qid"), col("vec_id")))
-      .unionByName(bqPanel(s, e)
-        .select(lit("bq").as("method"), col("qid"), col("vec_id")))
-      .unionByName(truncPanel(s, e)
-        .select(lit("trunc16").as("method"), col("qid"), col("vec_id")))
+    val scoresL8 = adcServe(s, c4, pcbL8, codesL8, asgnL8, qp, m = 8)
+      .localCheckpoint(true)
+    Seq(
+      "lsh" -> panelTop10(lshCands(s, e, qp), byCos),
+      "ivf" -> panelTop10(ivfCands(s, a2, c2, qp), byCos),
+      "ivf_l4" -> panelTop10(ivfCands(s, a4, c4, qp), byCos),
+      "ivf_pp" -> panelTop10(ivfCands(s, app, cpp, qp), byCos),
+      "ivfpq_m8" -> panelTop10(scores8, byAdc),
+      "rerank_l4m8" -> served(scoresL8),
+      "ivfpq" -> ivfpq,
+      "ivfpq_opq" -> ivfpqOpq,
+      "ivfpq_np1" -> panelTop10(scores.filter(col("lrank") === 1), byAdc),
+      "rerank" -> served(scores),
+      "ivf_np3x" -> panelTop10(ivfCands(s, a2, c2, qp, mult = 3), byCos),
+      "rerank_np3x" -> served(scores3),
+      "rerank_sl50" ->
+        panelTop10(rerank(s, topPerQ(scores, byAdc, 50), e, qp), byCos),
+      "bq" -> panelTop10(bqCands(s, e, qp, topPerQ), byCos),
+      "trunc16" -> panelTop10(truncCands(s, e, qp, topPerQ), byCos)
+    ).map { case (m, df) =>
+      df.select(lit(m).as("method"), col("qid"), col("vec_id"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** Mean recall@10 per method of tagged candidates (method, qid,
+    * vec_id) against the per-query ground truth (qid, vec_id) over the
+    * panel `qp`. The truth is a (panel × 10)-row frame broadcast onto
+    * the candidate union.
+    */
+  private def meanRecall(cands: DataFrame, truth: DataFrame,
+      qp: DataFrame): DataFrame = {
+    val nq = qp.agg(count(lit(1)).as("nq"))
+    cands
+      .join(broadcast(truth.withColumn("hit", lit(1))), Seq("qid", "vec_id"),
+        "left")
+      .groupBy("method")
+      .agg(count(lit(1)).as("n_candidates"),
+        sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
+      .crossJoin(broadcast(nq))
+      .select(col("method"), col("nq").as("n_queries"),
+        col("n_candidates"), col("hits"),
+        round(col("hits").cast("double") /
+          (lit(10.0) * col("nq").cast("double")), 4).as("mean_recall_at_10"))
+      .orderBy("method")
   }
 
   /** FILTERED-ANN panel recall — the q_ann_filtered strategy graded
@@ -1934,44 +1664,14 @@ object Vectors {
     * the number the single-query harness could only resolve to 0.1.
     */
   private def annFilteredRecall(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val qp = panelQ(e)
     val (a2, c2) = kmeansFit(e)
-    val allow = Tables.documents(s, dir)
-      .filter(col("lang") === "fr")
-      .select(col("doc_id").as("vec_id"))
-    val fbrute = topPerQ(
-      e.join(allow, "vec_id")
-        .crossJoin(broadcast(qp))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id").withColumn("hit", lit(1))
-    val probe = topPerQFrame(c2.crossJoin(broadcast(qp))
-      .select(col("qid"), col("qv"), col("c"),
-        cos(s, col("centroid"), col("qv")).as("ls")), c2)
-    val pre = topPerQ(
-      a2.select(col("vec_id"), col("embedding"), col("c"))
-        .join(broadcast(probe), Seq("c"))
-        .join(allow, "vec_id")
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          round(cos(s, col("embedding"), col("qv")), 4).as("cos")),
-      Seq(col("cos").desc, col("vec_id")), 10)
-      .select("qid", "vec_id")
-    val nq = qp.agg(count(lit(1)).as("nq"))
-    pre.select(lit("ivf_prefilter").as("method"), col("qid"), col("vec_id"))
-      .join(broadcast(fbrute), Seq("qid", "vec_id"), "left")
-      .groupBy("method")
-      .agg(count(lit(1)).as("n_candidates"),
-        sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("method"), col("nq").as("n_queries"),
-        col("n_candidates"), col("hits"),
-        round(col("hits").cast("double") /
-          (lit(10.0) * col("nq").cast("double")), 4).as("mean_recall_at_10"))
-      .orderBy("method")
+    val allow = frAllow(s, dir)
+    meanRecall(
+      panelTop10(ivfCands(s, a2.join(allow, "vec_id"), c2, qp), byCos)
+        .select(lit("ivf_prefilter").as("method"), col("qid"), col("vec_id")),
+      panelTop10(bruteCands(s, e.join(allow, "vec_id"), qp), byCos), qp)
   }
 
   /** ANN evaluation harness — MEAN recall@10 of every index family
@@ -1987,21 +1687,10 @@ object Vectors {
     * fully oracled — the DuckDB twin replays the same shared chain.
     */
   private def annRecall(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    val e = emb(s, dir)
     val qp = panelQ(e)
-    val brute = brutePanel(s, e, qp).withColumn("hit", lit(1))
-    val nq = qp.agg(count(lit(1)).as("nq"))
-    recallPanelCands(s, dir)
-      .join(broadcast(brute), Seq("qid", "vec_id"), "left")
-      .groupBy("method")
-      .agg(count(lit(1)).as("n_candidates"),
-        sum(coalesce(col("hit"), lit(0))).cast("long").as("hits"))
-      .crossJoin(broadcast(nq))
-      .select(col("method"), col("nq").as("n_queries"),
-        col("n_candidates"), col("hits"),
-        round(col("hits").cast("double") /
-          (lit(10.0) * col("nq").cast("double")), 4).as("mean_recall_at_10"))
-      .orderBy("method")
+    meanRecall(recallPanelCands(s, dir),
+      panelTop10(bruteCands(s, e, qp), byCos), qp)
   }
 
   /** Composed quantize→cluster pipeline (VERDICT r3 item 8): int8
@@ -2137,7 +1826,7 @@ object Vectors {
       "a2 AS MATERIALIZED (SELECT vec_id, emb, c FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, c) AS rn FROM s2) WHERE rn = 1)"
 
   /** The derived probe count, computed from the trained centroid table
-    * exactly as the Spark side's [[nprobeDf]]: nprobe = ⌈√nlist⌉.
+    * exactly as the Spark side's [[probe]]: nprobe = ⌈√nlist⌉.
     */
   private val derivedProbeCut: String =
     "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM c2)"
@@ -2160,11 +1849,6 @@ object Vectors {
     "(SELECT CAST(10 * ceil(sqrt(ceil(sqrt(ceil(sqrt(count(*))))) * " +
       s"count(*) / ceil(sqrt(count(*))))) AS BIGINT) FROM $src)"
 
-  /** The full serving-funnel oracle — ADC at the derived probes, exact
-    * re-rank over the derived-width shortlist — shared verbatim by
-    * q_ann_rerank (in-memory fit) and q_ann_persist (parquet
-    * round-trip): the persisted index must serve the identical answer.
-    */
   /** The q_ann_upsert twin: frozen fit on the base generation
     * (vec_id % 5 ≠ 4), add-with-assign encode of the incoming
     * generation against the frozen c2/pcb2 tables, UNION ALL append,
@@ -2249,6 +1933,11 @@ object Vectors {
       "CAST(merged_skew > fit_skew * 1.5 OR upserted_frac > 0.2 AS INT) AS refit " +
       "FROM allr ORDER BY scenario"
 
+  /** The full serving-funnel oracle — ADC at the derived probes, exact
+    * re-rank over the derived-width shortlist — shared verbatim by
+    * q_ann_rerank (in-memory fit) and q_ann_persist (parquet
+    * round-trip): the persisted index must serve the identical answer.
+    */
   private def rerankOracle: String =
     s"WITH ${ivfPqOracleCtes(derivedProbeCut)}, " +
       "short AS (SELECT vec_id, cluster, adc FROM (SELECT *, " +
@@ -2259,11 +1948,6 @@ object Vectors {
       "FROM short sh JOIN e ON sh.vec_id = e.vec_id CROSS JOIN q " +
       "ORDER BY cos DESC, vec_id LIMIT 10"
 
-  /** Shared IVF-PQ/ADC oracle chain through `scored` (the un-cut
-    * candidate table), parameterized by the probe-stage rank cut so
-    * q_ann_ivfpq, q_ann_rerank and the recall harness's nprobe-trade
-    * row all replay the identical quantizer/encode/ADC stages.
-    */
   /** L2² over aligned DuckDB lists (the Spark zip_with/aggregate fold). */
   private def dl2(a: String, b: String): String =
     s"list_sum(list_transform(list_zip($a, $b), x -> (x[1] - x[2]) * (x[1] - x[2])))"
@@ -2350,6 +2034,11 @@ object Vectors {
       s"list_sum(list_transform(list_zip($src.$arr, opq_u.u), x -> x[1] * x[2])) AS dp " +
       s"FROM $src CROSS JOIN opq_u) t)"
 
+  /** Shared IVF-PQ/ADC oracle chain through `scored` (the un-cut
+    * candidate table), parameterized by the probe-stage rank cut so
+    * q_ann_ivfpq, q_ann_rerank and the recall harness's nprobe-trade
+    * row all replay the identical quantizer/encode/ADC stages.
+    */
   private def ivfPqOracleCtes(probeCut: String): String = {
     def l2(a: String, b: String): String = dl2(a, b)
     s"$kmeansUnrollCtes, " +

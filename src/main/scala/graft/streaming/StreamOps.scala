@@ -610,7 +610,7 @@ object StreamOps {
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
       .option("compression", "snappy")
-      .partitionBy("source", "year", "month", "day", "hour")
+      .partitionBy(Ingest.partitionColumns: _*)
       .outputMode(OutputMode.Append())
       .start()
   }
@@ -646,8 +646,8 @@ object StreamOps {
     * scale, never by stream length. Without the time bound the state
     * store would grow forever — the condition is load-bearing, not a
     * filter.
-    */
-  /** `joinType` "inner" (default) emits attributed purchases only;
+    *
+    * `joinType` "inner" (default) emits attributed purchases only;
     * "leftOuter" ALSO emits every unattributed purchase null-extended —
     * the revenue-completeness variant (every purchase lands in the
     * output exactly once, attributed or not). Outer emission is

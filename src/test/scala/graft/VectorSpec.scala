@@ -406,6 +406,49 @@ class VectorSpec extends SparkSpec {
     assert(qids.size === graft.ops.Vectors.PanelSize)
   }
 
+  test("single-query ANN entries return the recall panel's qid 0 candidates") {
+    // each served entry is the panel branch run on the one-row query
+    // frame (vec_id 0): the candidate sets must be identical
+    val panel = graft.ops.Vectors.recallPanelCands(spark, sfDir)
+      .filter($"qid" === 0).select("method", "vec_id")
+      .as[(String, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    def ids(name: String, method: Option[String] = None): Set[Long] = {
+      val df = q(name)
+      method.fold(df)(m => df.filter($"method" === m))
+        .select("vec_id").as[Long].collect().toSet
+    }
+    val pairs = Seq(
+      "ivf" -> ids("q_ann_ivf_trained"),
+      "ivfpq" -> ids("q_ann_ivfpq"),
+      "rerank" -> ids("q_ann_rerank"),
+      "lsh" -> ids("q_ann_lsh"),
+      "bq" -> ids("q_ann_bq", Some("bq_rerank")),
+      "trunc16" -> ids("q_ann_truncdim", Some("trunc16_rerank")))
+    pairs.foreach { case (method, single) =>
+      assert(single.nonEmpty, s"$method: empty single-query answer")
+      assert(panel.getOrElse(method, Set.empty) === single,
+        s"$method: panel qid 0 differs from the single-query entry")
+    }
+  }
+
+  test("ADC stage: an all-zero Householder vector (H = I) returns the unrotated panel scores") {
+    // the OPQ branch differs from plain IVF-PQ serving only by rotating
+    // the query residual, and its non-identity arm runs in no gate
+    // (the isotropy trigger holds u = 0): with an explicit u = 0 the
+    // rotated path must reproduce the plain scores exactly
+    val (c2, pcb2, codes, asgn, base) = graft.ops.Vectors.upsertParts(spark, sfDir)
+    val qp = base.filter($"vec_id" < graft.ops.Vectors.PanelSize)
+      .select($"vec_id".as("qid"), $"embedding".as("qv"))
+    val zeroU = spark.range(1).select(array_repeat(lit(0.0), 64).as("u"))
+    def scores(rot: Option[org.apache.spark.sql.DataFrame]) =
+      graft.ops.Vectors.adcServe(spark, c2, pcb2, codes, asgn, qp, rot = rot)
+        .collect().toSet
+    val plain = scores(None)
+    assert(plain.nonEmpty)
+    assert(scores(Some(zeroU)) === plain)
+  }
+
   test("OPQ rotation: identity on isotropy, variance-spreading Householder on planted skew") {
     import org.apache.spark.sql.functions._
     // this corpus is isotropic (measured: subspace variance balanced

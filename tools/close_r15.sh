@@ -38,15 +38,7 @@ echo "== [5/5] clustered vector gate" | tee -a $L/status
 if [ ! -d /tmp/sf1c/embeddings.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleGen /root/testdata/sf0.1 /tmp/sf1c 10 clustered" > $L/scalegen_c.log 2>&1
 fi
-VECQ=$(python3 - <<'PY'
-import re
-src=open('src/main/scala/graft/ops/Vectors.scala').read()
-names=sorted(set(re.findall(r'"(q_\w+)"\s*->', src)))
-print(",".join(names))
-PY
-)
-rm -rf /tmp/sf1c_out
-SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify /tmp/sf1c /tmp/sf1c_out $VECQ" > $L/verify_c.log 2>&1
-python3 tools/selfcheck.py /tmp/sf1c /tmp/sf1c_out --json SCALECHECK_CLUSTERED_r15.json > $L/selfcheck_c.log 2>&1
+SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 bash tools/vectorgate.sh /tmp/sf1c \
+  SCALECHECK_CLUSTERED_r15.json /tmp/sf1c_out > $L/selfcheck_c.log 2>&1
 tail -3 $L/selfcheck_c.log | tee -a $L/status
 echo "== close_r15 done" | tee -a $L/status
