@@ -74,12 +74,17 @@ object Bench {
     // the full line is ~15 KB at 300+ queries and exceeds the driver's
     // 2,000-char tail window (BENCH_r*.json "parsed": null since round 8);
     // ADDITIONS ONLY: persist the full line to a file when asked, and end
-    // with a short machine-parseable summary line that always fits the tail
+    // with a short machine-parseable summary line that always fits the tail.
+    // A bad path is logged, never fatal: the results are already printed
+    // and spark.stop() must still run
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { path =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), fullLine + "\n")
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), fullLine + "\n")
+      catch { case e: Exception =>
+        System.err.println(s"bench: could not write SPARK_GRAFT_BENCH_OUT=$path: $e") }
     }
     val nOk = results.count(_._2 >= 0)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_engine":$totalEngine,"total_fs_bound":$totalFs,"n":${results.size},"n_ok":$nOk,"sf":"$sfDir"}""")
+    val nRepErrors = results.count(_._4.isDefined)
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","total_engine":$totalEngine,"total_fs_bound":$totalFs,"n":${results.size},"n_ok":$nOk,"rep_errors":$nRepErrors,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{ArgmaxCosine, ArgminL2, CosineSimilarity, DotProduct, L2Sq}
+import graft.functions.VectorFunctions
 import graft.plans.{AsOfJoinStrategy, AsOfLE}
 
 /** Session-extension entry point: registers the engine's native functions
@@ -20,26 +20,7 @@ import graft.plans.{AsOfJoinStrategy, AsOfLE}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("argmax_cosine"),
-      new ExpressionInfo(classOf[ArgmaxCosine].getName, "argmax_cosine"),
-      (exprs: Seq[Expression]) => ArgmaxCosine(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("argmin_l2"),
-      new ExpressionInfo(classOf[ArgminL2].getName, "argmin_l2"),
-      (exprs: Seq[Expression]) => ArgminL2(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("l2_sq"),
-      new ExpressionInfo(classOf[L2Sq].getName, "l2_sq"),
-      (exprs: Seq[Expression]) => L2Sq(exprs(0), exprs(1))))
+    VectorFunctions.descriptions.foreach(ext.injectFunction)
     // native as-of join: marker predicate + planner strategy
     // (graft.plans.AsOfJoin). Deliberately NO injectOptimizerRule for
     // RewriteAsOfJoin: that batch is iterative and mid-optimization the

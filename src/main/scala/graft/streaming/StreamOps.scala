@@ -262,6 +262,16 @@ object StreamOps {
         TimeMode.None(), OutputMode.Append())
   }
 
+  /** Spark's `round(double, s)`: BigDecimal.valueOf(d) (the
+    * shortest-decimal representation via Double.toString) scaled HALF_UP.
+    * The PSI and KL monitors replay it exactly so a term landing on a
+    * 9th-decimal half-tie rounds identically to the batch query
+    * (floor(x*1e8+0.5)/1e8 diverges on those ties).
+    */
+  private def sparkRound(x: Double, s: Int): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
+
   case class PsiOut(window_day: Long, n: Long, psi: Double,
       stable: Boolean, drifted: Boolean)
 
@@ -298,14 +308,6 @@ object StreamOps {
       val n = cur.values.sum
       val domain = (ref.keySet ++ cur.keySet).toSeq.sorted
       val nbins = domain.size.toLong
-      // Spark's round(double, s) is BigDecimal.valueOf(d) (i.e. the
-      // shortest-decimal representation via Double.toString) scaled
-      // HALF_UP — replay it exactly so a term landing on a 9th-decimal
-      // half-tie rounds identically to the batch query (ADVICE r13:
-      // floor(x*1e8+0.5)/1e8 diverges on those ties)
-      def sparkRound(x: Double, s: Int): Double =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
       val total = domain.map { b =>
         val p = (ref.getOrElse(b, 0L) + 1).toDouble / (refN + nbins)
         val q = (cur.getOrElse(b, 0L) + 1).toDouble / (n + nbins)
@@ -367,9 +369,6 @@ object StreamOps {
       }
       val cur = langs.iterator().map(p => p._1 -> p._2).toMap
       val ns = cur.values.sum
-      def sparkRound(x: Double, s: Int): Double =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
       val total = ref.keysIterator.toSeq.sorted.map { l =>
         val p = (cur.getOrElse(l, 0L) + 1).toDouble / (ns + nlangs)
         val q = (ref(l) + 1).toDouble / (nn + nlangs)

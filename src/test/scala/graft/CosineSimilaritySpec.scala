@@ -47,35 +47,61 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("multiple codegen'd instances coexist in one generated function") {
-    // regression: the generated bodies used FIXED local names; with both
-    // children non-nullable nullSafeCodeGen leaves the block unbraced, so
-    // two instances in one function declared duplicate locals → Janino
-    // failure → silent interpreted fallback. fallback=false turns that
-    // silent degradation into a test failure.
-    val key = "spark.sql.codegen.fallback"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
-      // non-nullable AND non-foldable inputs (constant folding would
-      // otherwise evaluate the expression interpreted at optimize time)
-      val v = array(($"id".cast("float") + lit(1f)), lit(2f))
-      val w = array(lit(3f), lit(4f))
-      val rows = spark.range(3).select($"id",
-          VectorFunctions.dot_product(spark, v, w).as("d1"),
-          VectorFunctions.dot_product(spark, w, v).as("d2"),
-          VectorFunctions.cosine_sim(spark, v, w).as("c1"),
-          VectorFunctions.cosine_sim(spark, w, v).as("c2"))
-        .collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2),
-          r.getDouble(3), r.getDouble(4)))
-        .sortBy(_._1)
-      assert(rows.nonEmpty)
-      rows.foreach { case (id, d1, d2, c1, c2) =>
-        val expect = (id + 1).toDouble * 3.0 + 2.0 * 4.0
-        assert(d1 === expect && d2 === expect, s"id=$id dot")
-        assert(c1 === c2 && c1 > 0.0 && c1 <= 1.0, s"id=$id cos")
+    // several instances of every kernel in one generated function;
+    // fallback=false turns a compile failure of the generated code into
+    // a test failure instead of a silent interpreted fallback. The same
+    // select then runs interpreted (NO_CODEGEN, whole-stage codegen off)
+    // and every column must be bit-equal to the compiled run.
+    // non-nullable AND non-foldable inputs (constant folding would
+    // otherwise evaluate the expression interpreted at optimize time)
+    val v = array(($"id".cast("float") + lit(1f)), lit(2f))
+    val w = array(lit(3f), lit(4f))
+    val vd = array(($"id".cast("double") + lit(0.5)), lit(-1.0))
+    val cands = expr("array(" +
+      "named_struct('c', 0, 'centroid', array(CAST(id AS DOUBLE), 1.0D)), " +
+      "named_struct('c', 1, 'centroid', array(2.0D, CAST(id AS DOUBLE))), " +
+      "named_struct('c', 2, 'centroid', array(1.0D, 2.0D)))")
+    def select() = spark.range(3).select($"id",
+        VectorFunctions.dot_product(spark, v, w).as("d1"),
+        VectorFunctions.dot_product(spark, w, v).as("d2"),
+        VectorFunctions.cosine_sim(spark, v, w).as("c1"),
+        VectorFunctions.cosine_sim(spark, w, v).as("c2"),
+        VectorFunctions.l2_sq(spark, v, vd).as("l1"),
+        VectorFunctions.l2_sq(spark, vd, w).as("l2"),
+        VectorFunctions.argmax_cosine(spark, v, cands).as("a1"),
+        VectorFunctions.argmax_cosine(spark, vd, cands).as("a2"),
+        VectorFunctions.argmin_l2(spark, v, cands).as("m1"),
+        VectorFunctions.argmin_l2(spark, vd, cands).as("m2"))
+      .collect().sortBy(_.getLong(0))
+    def withConfs[T](kv: (String, String)*)(body: => T): T = {
+      val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, x) => spark.conf.set(k, x) }
+      try body
+      finally prior.foreach {
+        case (k, Some(x)) => spark.conf.set(k, x)
+        case (k, None) => spark.conf.unset(k)
       }
-    } finally spark.conf.set(key, prior)
+    }
+    val compiled = withConfs("spark.sql.codegen.fallback" -> "false")(select())
+    assert(compiled.nonEmpty)
+    compiled.foreach { r =>
+      val id = r.getLong(0)
+      val expect = (id + 1).toDouble * 3.0 + 2.0 * 4.0
+      assert(r.getDouble(1) === expect && r.getDouble(2) === expect, s"id=$id dot")
+      val (c1, c2) = (r.getDouble(3), r.getDouble(4))
+      assert(c1 === c2 && c1 > 0.0 && c1 <= 1.0, s"id=$id cos")
+      (5 to 10).foreach(i => assert(!r.isNullAt(i), s"id=$id col $i"))
+    }
+    // every double as its bit pattern, structs field by field
+    def bits(x: Any): Any = x match {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case r: org.apache.spark.sql.Row => r.toSeq.map(bits)
+      case o => o
+    }
+    val interpreted = withConfs(
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(select())
+    assert(interpreted.map(bits).toSeq === compiled.map(bits).toSeq)
   }
 
   test("null and shape edge cases") {
@@ -138,6 +164,57 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(edge.filter($"b".isNull).count() === 1)
   }
 
+  test("argmin_l2 equals the array_min(transform(...)) twin exactly") {
+    // the PQ-encode path: real sf0.001 16-dim subvectors against a
+    // packed c-sorted double codebook per subspace; winner AND d2 must
+    // agree bitwise with the HOF twin (min d2, lowest c on ties)
+    val subDim = 16
+    val sub = Tables.embeddings(spark, sfDir)
+      .select($"vec_id", posexplode(expr(s"transform(sequence(0, 3), " +
+        s"m -> slice(embedding, m * $subDim + 1, $subDim))")).as(Seq("m", "sv")))
+    val codebook = sub.filter($"vec_id" < 16)
+      .select($"m", struct($"vec_id".cast("int").as("c"),
+        expr("transform(sv, x -> CAST(x AS DOUBLE))").as("centroid")).as("cw"))
+      .groupBy("m").agg(sort_array(collect_list($"cw")).as("codebook"))
+    val hofTwin = expr("array_min(transform(codebook, x -> struct(" +
+      "aggregate(zip_with(sv, x.centroid, (a, b) -> (a - b) * (a - b)), " +
+      "0D, (acc, y) -> acc + y) AS d2, x.c AS c)))")
+    val rows = sub.join(broadcast(codebook), "m")
+      .select($"vec_id", $"m",
+        VectorFunctions.argmin_l2(spark, $"sv", $"codebook").as("nat"),
+        hofTwin.as("hof"))
+      .select($"vec_id", $"m", $"nat.c".as("nc"), $"nat.d2".as("nd"),
+        $"hof.c".as("hc"), $"hof.d2".as("hd"))
+      .as[(Long, Int, Int, Double, Int, Double)].collect()
+    assert(rows.nonEmpty && rows.map(_._1).distinct.length > 16)
+    rows.foreach { case (id, m, nc, nd, hc, hd) =>
+      assert(nc === hc, s"vec $id m $m: code $nc vs $hc")
+      assert(java.lang.Double.doubleToLongBits(nd) ===
+        java.lang.Double.doubleToLongBits(hd), s"vec $id m $m d2")
+    }
+    def argmin(cb: String) = Seq(Tuple1(Array(1f, 0f))).toDF("v")
+      .select(VectorFunctions.argmin_l2(spark, $"v", expr(cb)).as("b"))
+      .head().getStruct(0)
+    // an exact tie (d2 = 1 both) keeps the LOWER c
+    val tie = argmin("array(named_struct('c', 3, 'centroid', array(0.0D, 0.0D)), " +
+      "named_struct('c', 5, 'centroid', array(2.0D, 0.0D)))")
+    assert(tie.getInt(0) === 3 && tie.getDouble(1) === 1.0)
+    // a length-mismatched candidate is skipped — the one divergence from
+    // the twin, whose NULL d2 sorts first and would win
+    val ragged = "array(named_struct('c', 1, 'centroid', array(1.0D)), " +
+      "named_struct('c', 2, 'centroid', array(5.0D, 5.0D)))"
+    val skip = argmin(ragged)
+    assert(skip.getInt(0) === 2 && skip.getDouble(1) === 41.0)
+    val twinPick = Seq(Tuple1(Array(1f, 0f))).toDF("v")
+      .select(expr(s"array_min(transform($ragged, x -> struct(" +
+        "aggregate(zip_with(v, x.centroid, (a, b) -> (a - b) * (a - b)), " +
+        "0D, (acc, y) -> acc + y) AS d2, x.c AS c)))").as("b"))
+      .head().getStruct(0)
+    assert(twinPick.isNullAt(0) && twinPick.getInt(1) === 1)
+    // no valid candidate → NULL
+    assert(argmin("array(named_struct('c', 1, 'centroid', array(1.0D)))") === null)
+  }
+
   test("works through SQL registration") {
     VectorFunctions.register(spark)
     Tables.embeddings(spark, sfDir).createOrReplaceTempView("emb_cos_spec")
@@ -145,6 +222,15 @@ class CosineSimilaritySpec extends SparkSpec {
       "SELECT cosine_sim(embedding, embedding) AS c FROM emb_cos_spec LIMIT 5")
       .collect()
     r.foreach(row => assert(math.abs(row.getDouble(0) - 1.0) < 1e-12))
+    // the shared type checks name the function and the expected types
+    val notNumeric = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT l2_sq(array('a'), array(1.0D))").collect())
+    assert(notNumeric.getMessage.contains(
+      "l2_sq expects (array<float|double>, array<float|double>)"))
+    val notPacked = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT argmin_l2(array(1.0D), array(1.0D))").collect())
+    assert(notPacked.getMessage.contains(
+      "argmin_l2 expects (array<float|double>, array<struct<int, array<double>>>)"))
   }
 
   test("l2_sq is bit-identical to the zip_with/aggregate fold (r15 ADC hot loop)") {
