@@ -335,16 +335,140 @@ object Kql {
     out
   }
 
+  // ------------------------------------------------- series arithmetic
+
+  /** Empty-series guard for the array-valued series functions: an empty
+    * input array yields an empty (double) output array. Without it,
+    * `sequence(0, size(a) - 1)` on an empty array is Spark's DESCENDING
+    * [0, -1] — a 2-element garbage grid — and the percentile lookups
+    * would hit element_at(_, 0), an ANSI error. make-series never emits
+    * empty arrays, but the series functions accept any array column.
+    * CASE WHEN is lazy, so the guarded body never runs on `[]`.
+    */
+  private def emptySeriesGuard(a: Column, body: Column): Column =
+    when(size(a) === 0, array().cast("array<double>")).otherwise(body)
+
+  /** The exact-arithmetic core every series_* function computes through
+    * (the cross-engine parity rule): element sums route DECIMAL(18,6)
+    * terms into a (37,12) decimal accumulator — exact and
+    * order-independent, so the DuckDB twins reproduce them bit for bit —
+    * and every post-sum step is one fixed IEEE expression on identical
+    * doubles. Plain sums leave decimal straight to double; product sums
+    * leave through [[toD]].
+    */
+  private object Exact {
+    import org.apache.spark.sql.types.DecimalType
+    private val d6 = DecimalType(18, 6)
+    // accumulator precision 37, not 38: adding a term yields exactly
+    // (38,12) (no precision-loss re-scale, which would round the 12th
+    // digit and break cross-engine parity), and the cast back to
+    // (37,12) is exact for every |sum| < 1e25
+    val d12 = DecimalType(37, 12)
+    // product sums leave decimal through an exact scale-6 rescale
+    // (decimal→decimal rounding is identical on both engines), so the
+    // final decimal→double cast sees an unscaled value < 2^53 — the
+    // ~sf1 gate caught DuckDB's wide-decimal→DOUBLE cast
+    // double-rounding (hugeint→double, then ·10⁻¹²) one ulp off a
+    // scale-12 sum in the 1e9 range, which series-stats cancellation
+    // then amplified ~30 ulps into the variance
+    private val d6w = DecimalType(38, 6)
+    val zero: Column = lit(java.math.BigDecimal.ZERO).cast(d12)
+
+    def dec(x: Column): Column = x.cast(d6)
+    def toD(acc: Column): Column = acc.cast(d6w).cast("double")
+    /** The 0-based index grid of `v` (descending [0, -1] on `[]`). */
+    def idx(v: Column): Column = sequence(lit(0), size(v) - 1)
+    /** Σv, exact. */
+    def sum(v: Column): Column =
+      aggregate(v, zero, (a, x) => (a + dec(x)).cast(d12)).cast("double")
+    /** Σ uᵢ·vᵢ, exact (every product of two scale-6 terms is exact). */
+    def prodSum(u: Column, v: Column): Column =
+      toD(aggregate(zip_with(u, v, (x, y) => dec(x) * dec(y)),
+        zero, (a, x) => (a + x).cast(d12)))
+
+    /** The least-squares line over the implicit x-axis 0..n-1: Σy and
+      * Σxy exact, Σx and Σx² closed-form. A line needs two points, so
+      * slope and intercept are null below that (which also keeps an
+      * empty series' `sy / n` from raising when they materialize).
+      */
+    final case class Line(n: Column, sy: Column, sxy: Column, sx: Column,
+        sx2: Column, slope: Column, inter: Column)
+    def lineFit(v: Column): Line = {
+      val n = size(v).cast("double")
+      val sy = sum(v)
+      val sxy = prodSum(v, idx(v))
+      val sx = (n - lit(1.0)) * n / lit(2.0)
+      val sx2 = (n - lit(1.0)) * n * (lit(2.0) * n - lit(1.0)) / lit(6.0)
+      val slope = when(size(v) > 1, (n * sxy - sx * sy) / (n * sx2 - sx * sx))
+      val inter = when(size(v) > 1, sy / n - slope * (sx / n))
+      Line(n, sy, sxy, sx, sx2, slope, inter)
+    }
+
+    /** The seasonal value at index `i`: the mean of the detrended series
+      * over `v`'s positions in i's phase (≡ i mod `period`), derived
+      * ALGEBRAICALLY — Σ_q d = Σ_q y − slope·Σ_q i − inter·c_q, with Σ_q y
+      * an exact decimal sum, Σ_q i an exact integer sum, c_q the grid
+      * count, and the combination one fixed IEEE expression — never by
+      * casting a full-precision detrended double to decimal (Spark's
+      * shortest-repr BigDecimal and DuckDB's binary expansion round a
+      * near-tie double differently; the ~sf1 gate exposed it). `i` may
+      * run past `v` (the forecast's horizon). O(|v|) per element.
+      */
+    def phaseMean(v: Column, period: Column, slope: Column,
+        inter: Column)(i: Column): Column = {
+      val q = pmod(i, period)
+      val syq = sum(zip_with(v, idx(v), (y, j) =>
+        when(pmod(j, period) === q, y).otherwise(lit(0))))
+      val siq = aggregate(idx(v), lit(0L), (a, j) =>
+        a + when(pmod(j, period) === q, j).otherwise(lit(0)).cast("long"))
+        .cast("double")
+      val c = when(size(v) > q, floor((size(v) - lit(1) - q) / period) + lit(1))
+        .otherwise(lit(0)).cast("double")
+      (syq - slope * siq - inter * c) / c
+    }
+
+    val decompTemps =
+      Seq("__graft_sd_p", "__graft_sd_slope", "__graft_sd_inter",
+        "__graft_sd_trend", "__graft_sd_sea")
+
+    /** The additive decomposition of the array column `v` at a per-row
+      * `period`: returns `df` with the [[decompTemps]] columns (the
+      * caller drops them) and the four arrays (baseline, seasonal,
+      * trend, residual) over them. trend = the least-squares line;
+      * seasonal = [[phaseMean]]; residual = y − trend − seasonal;
+      * baseline = trend + seasonal. period, slope, intercept, trend and
+      * seasonal MATERIALIZE as columns — CollapseProject keeps non-cheap
+      * aliases, so each computes once per row instead of once per
+      * reference (the plan-size rule: inlined, the fit replicates into
+      * every element of every output).
+      */
+    def decompose(df: DataFrame, v: Column,
+        period: Column): (DataFrame, Seq[Column]) = {
+      val fit = lineFit(v)
+      val Seq(p, slope, inter, trend, sea) = decompTemps.map(col)
+      val d = df.withColumn(decompTemps(0), period)
+        .withColumn(decompTemps(1), fit.slope)
+        .withColumn(decompTemps(2), fit.inter)
+        .withColumn(decompTemps(3), emptySeriesGuard(v,
+          transform(idx(v), i => slope * i.cast("double") + inter)))
+        .withColumn(decompTemps(4), emptySeriesGuard(v,
+          transform(idx(v), i => phaseMean(v, p, slope, inter)(i))))
+      val resid = zip_with(zip_with(v, trend, (y, t) => y.cast("double") - t),
+        sea, (x, m) => x - m)
+      (d, Seq(zip_with(trend, sea, (t, m) => t + m), sea, trend, resid))
+    }
+  }
+
   // ------------------------------------------------------- translator
 
-  /** Stage/expression translation, bound to a session (for `join`'s
-    * right-side table resolution) and a `now` column (for `ago`/`now`).
-    */
   /** Hard cap on bag_unpack's discovered key set — the bound that makes
     * the driver-side schema discovery a contract (see applyBagUnpack).
     */
   private[graft] val BagUnpackKeyCap = 1000
 
+  /** Stage/expression translation, bound to a session (for `join`'s
+    * right-side table resolution) and a `now` column (for `ago`/`now`).
+    */
   private final class Translator(s: SparkSession,
       nowOverride: Option[java.time.Instant]) {
 
@@ -2987,13 +3111,10 @@ object Kql {
     //   rvariance, interception) [5 names, x-axis 0..n-1, rvariance =
     //   sample residual variance; the line_fit output array is out of
     //   subset]. Per-row array folds only — nothing leaves the row, so
-    //   the stage costs what make-series cost. Element sums route
-    //   through DECIMAL(18,6) terms into a DECIMAL(38,12) accumulator
-    //   (exact, order-independent — the cross-engine parity rule);
-    //   every post-sum step is one fixed IEEE expression on identical
-    //   doubles.
+    //   the stage costs what make-series cost. All sums and the line
+    //   fit come from the [[Exact]] core.
     private def applyExtendSeries(df: DataFrame, toks: Vector[Tok]): DataFrame = {
-      import org.apache.spark.sql.types.{ArrayType, DecimalType}
+      import org.apache.spark.sql.types.ArrayType
       val close = toks.indexOf(TSym(")"))
       if (close < 0) fail("extend (...) = fn(col): missing ')'")
       val names = splitOn(toks.take(close), TSym(",")).map {
@@ -3024,29 +3145,10 @@ object Kql {
         case other => fail(s"$fn needs an array column, got $other")
       }
       val v = col(vcol)
-      val d6 = DecimalType(18, 6)
-      // accumulator precision 37, not 38: adding a term yields exactly
-      // (38,12) (no precision-loss re-scale, which would round the 12th
-      // digit and break cross-engine parity), and the cast back to
-      // (37,12) is exact for every |sum| < 1e25
-      val d12 = DecimalType(37, 12)
-      def dec(x: Column): Column = x.cast(d6)
-      val zero = lit(java.math.BigDecimal.ZERO).cast(d12)
-      // product sums leave decimal through an exact scale-6 rescale
-      // (decimal→decimal rounding is identical on both engines), so the
-      // final decimal→double cast sees an unscaled value < 2^53 — the
-      // ~sf1 gate caught DuckDB's wide-decimal→DOUBLE cast
-      // double-rounding (hugeint→double, then ·10⁻¹²) one ulp off a
-      // scale-12 sum in the 1e9 range, which series-stats cancellation
-      // then amplified ~30 ulps into the variance
-      val d6w = DecimalType(38, 6)
-      def toD(sum: Column): Column = sum.cast(d6w).cast("double")
-      val n = size(v).cast("double")
-      val sy = aggregate(v, zero, (a, x) => (a + dec(x)).cast(d12)).cast("double")
-      val sy2 = toD(aggregate(v, zero, (a, x) => (a + dec(x) * dec(x)).cast(d12)))
+      val fit = Exact.lineFit(v)
+      import fit.{n, sy}
+      val sy2 = Exact.prodSum(v, v)
       val variance = when(size(v) > 1, (sy2 - sy * sy / n) / (n - lit(1.0)))
-      def decomposeParts(p: Int): (Column, Column, Column, Column) =
-        applyExtendSeriesDecompose(v, p, dec, toD, zero, d12, n, sy)
       val outs: Seq[(String, Column)] = fn match {
         case "series_stats" =>
           if (ints.nonEmpty) fail("series_stats takes no extra arguments")
@@ -3065,13 +3167,7 @@ object Kql {
           if (names.length != 5)
             fail("series_fit_line multi-assign takes exactly 5 names " +
               "(rsquare, slope, variance, rvariance, interception)")
-          val sxy = toD(aggregate(
-            zip_with(v, sequence(lit(0), size(v) - 1), (y, i) => dec(y) * i.cast(d6)),
-            zero, (a, x) => (a + x).cast(d12)))
-          val sx = (n - lit(1.0)) * n / lit(2.0)
-          val sx2 = (n - lit(1.0)) * n * (lit(2.0) * n - lit(1.0)) / lit(6.0)
-          val slope = when(size(v) > 1, (n * sxy - sx * sy) / (n * sx2 - sx * sx))
-          val inter = sy / n - slope * (sx / n)
+          import fit.{sxy, sx, sx2, slope, inter}
           val ssres = sy2 - lit(2.0) * inter * sy - lit(2.0) * slope * sxy +
             n * inter * inter + lit(2.0) * inter * slope * sx + slope * slope * sx2
           val sstot = sy2 - sy * sy / n
@@ -3083,29 +3179,19 @@ object Kql {
           // trend, residual), additive. This dialect's deterministic
           // recipe (documented; ADX's default also detects the period
           // and can use STL-style robust fitting): trend = the
-          // series_fit_line least-squares line over the RAW series
-          // (exact decimal sums); seasonal[i] = phase mean of the
-          // detrended values at positions ≡ i (mod period), derived
-          // ALGEBRAICALLY — Σ_q d = Σ_q y − slope·Σ_q i − inter·c_q,
-          // with Σ_q y an exact decimal sum, Σ_q i an exact integer
-          // sum, and the combination one fixed IEEE expression — never
-          // by casting a full-precision detrended double to decimal
-          // (the shortest-repr vs binary-expansion rounding trap the
-          // ~sf1 gate exposed: Spark's BigDecimal.valueOf and DuckDB's
-          // binary expansion round a near-tie double differently);
-          // residual = detrended − seasonal; baseline = trend +
-          // seasonal. Everything is per-row array arithmetic — the
-          // stage costs what make-series cost at any scale.
+          // series_fit_line least-squares line over the RAW series;
+          // seasonal[i] = phase mean of the detrended values at
+          // positions ≡ i (mod period) ([[Exact.phaseMean]]); residual
+          // = detrended − seasonal; baseline = trend + seasonal
+          // ([[Exact.decompose]]). Everything is per-row array
+          // arithmetic — the stage costs what make-series cost at any
+          // scale.
           if (names.length != 4)
             fail("series_decompose multi-assign takes exactly 4 names " +
               "(baseline, seasonal, trend, residual)")
           if (ints.length > 1) fail("series_decompose takes at most one period")
-          period match {
-            case Some(p) =>
-              if (p < 2 || p > 1000)
-                fail(s"series_decompose period $p out of [2, 1000]")
-              val (base, sea, trend, resid) = decomposeParts(p)
-              names.zip(Seq(base, sea, trend, resid))
+          val pCol = period match {
+            case Some(p) => seriesPeriod(fn, p)
             case None =>
               // AUTO period (round 11): the omitted-period ADX form.
               // The period is series_periods_detect's top lag over the
@@ -3116,14 +3202,15 @@ object Kql {
               // lag) — with one phase the phase mean of the detrended
               // series is algebraically 0 by the normal equations, so
               // p = 1 IS "no seasonality". The detected period is a
-              // data-dependent COLUMN, so the recipe runs in its
-              // dynamic-period form (see below); arithmetic is
-              // operation-for-operation the unrolled recipe's, which
-              // KqlSpec pins by equating the auto and explicit forms
-              // on a planted 7-cycle.
-              return applySeriesDecomposeAuto(df, names, vcol, v,
-                dec, toD, zero, d12, n, sy, sy2)
+              // data-dependent column; the fixed period is its literal
+              // case.
+              coalesce(try_element_at(periodsDetect(v, 2, 14, 1)._1, lit(1)),
+                lit(1L))
           }
+          val (d, parts) = Exact.decompose(df, v, pCol)
+          return names.zip(parts).foldLeft(d) {
+            case (acc, (nm, e)) => acc.withColumn(nm, e)
+          }.drop(Exact.decompTemps: _*)
         case "series_decompose_anomalies" =>
           // ADX series_decompose_anomalies(series, period) — the
           // one-call anomaly idiom: decompose (the exact recipe above),
@@ -3148,18 +3235,17 @@ object Kql {
               "3 names (ad_flag, ad_score, baseline)")
           val p = period.getOrElse(fail("series_decompose_anomalies needs " +
             "an explicit integer period in this subset (detection is out)"))
-          if (p < 2 || p > 1000)
-            fail(s"series_decompose_anomalies period $p out of [2, 1000]")
-          val (base, _, _, resid) = decomposeParts(p)
+          val (d, Seq(base, _, _, resid)) =
+            Exact.decompose(df, v, seriesPeriod(fn, p))
           val resCol = "__graft_da_res"
           val scoreCol = "__graft_da_score"
-          return df.withColumn(resCol, resid)
+          return d.withColumn(resCol, resid)
             .withColumn(scoreCol, tukeyScores(col(resCol), 0.10, 0.90))
             .withColumn(names(0), transform(col(scoreCol), sc =>
               when(sc > 1.5, lit(1)).when(sc < -1.5, lit(-1)).otherwise(lit(0))))
             .withColumn(names(1), col(scoreCol))
             .withColumn(names(2), base)
-            .drop(resCol, scoreCol)
+            .drop(resCol +: scoreCol +: Exact.decompTemps: _*)
         case "series_periods_detect" =>
           // ADX series_periods_detect(x, min_period, max_period,
           // num_periods) → (periods, scores): the dominant seasonality
@@ -3190,43 +3276,42 @@ object Kql {
           if (maxP - minP >= 100)
             fail("series_periods_detect scans at most 100 lags")
           if (k < 1) fail("series_periods_detect num_periods must be >= 1")
-          val (periodsE, scoresE) =
-            periodsDetect(v, minP, maxP, k, dec, toD, zero, d12, n, sy, sy2)
+          val (periodsE, scoresE) = periodsDetect(v, minP, maxP, k)
           names.zip(Seq(periodsE, scoresE))
         case other =>
           fail(s"unsupported multi-assign function '$other' " +
             "(series_stats/series_fit_line/series_decompose[_anomalies]/" +
             "series_periods_detect)")
       }
-      if (ints.nonEmpty && !Set("series_decompose",
-          "series_decompose_anomalies", "series_periods_detect")(fn))
-        fail(s"$fn takes no period argument")
       outs.foldLeft(df) { case (d, (nm, e)) => d.withColumn(nm, e) }
     }
+
+    /** A decompose-family period literal, checked against [2, 1000]. */
+    private def seriesPeriod(fn: String, p: Int): Column =
+      if (p < 2 || p > 1000) fail(s"$fn period $p out of [2, 1000]") else lit(p)
 
     /** The demeaned-autocorrelation lag scan shared by
       * series_periods_detect and the auto-period series_decompose:
       * returns (periods, scores) arrays — top-k lags by
-      * (score desc, lag asc), scores 4-dp-rounded.
+      * (score desc, lag asc), scores 4-dp-rounded. The length test runs
+      * before r0 so a series too short for any lag (`[]` included)
+      * never evaluates `sy / n`.
       */
-    private def periodsDetect(v: Column, minP: Int, maxP: Int, k: Int,
-        dec: Column => Column, toD: Column => Column, zero: Column,
-        d12: org.apache.spark.sql.types.DecimalType, n: Column,
-        sy: Column, sy2: Column): (Column, Column) = {
+    private def periodsDetect(v: Column, minP: Int, maxP: Int,
+        k: Int): (Column, Column) = {
+      val n = size(v).cast("double")
+      val sy = Exact.sum(v)
       val mu = sy / n
-      val r0 = sy2 - lit(2.0) * mu * sy + n * mu * mu
+      val r0 = Exact.prodSum(v, v) - lit(2.0) * mu * sy + n * mu * mu
       val cands: Seq[Column] = (minP to maxP).map { l =>
         val head = slice(v, lit(1), size(v) - lit(l))
         val tail = slice(v, lit(l + 1), size(v) - lit(l))
-        val sp = toD(aggregate(zip_with(head, tail, (a, b) => dec(a) * dec(b)),
-          zero, (acc, x) => (acc + x).cast(d12)))
-        val syh = aggregate(head, zero, (a, x) => (a + dec(x)).cast(d12))
-          .cast("double")
-        val syt = aggregate(tail, zero, (a, x) => (a + dec(x)).cast(d12))
-          .cast("double")
+        val sp = Exact.prodSum(head, tail)
+        val syh = Exact.sum(head)
+        val syt = Exact.sum(tail)
         val cL = n - lit(l.toDouble)
         val sc = (sp - mu * syh - mu * syt + cL * mu * mu) / r0
-        when(r0 > 0 && size(v) >= 2 * l,
+        when(size(v) >= 2 * l && r0 > 0,
           struct((-sc).as("ns"), lit(l.toLong).as("lag")))
           .otherwise(lit(null))
       }
@@ -3234,112 +3319,6 @@ object Kql {
         x => x.isNotNull)), 1, k)
       (transform(ranked, x => x.getField("lag")),
         transform(ranked, x => round(-x.getField("ns"), 4)))
-    }
-
-    /** The DYNAMIC-period decompose (auto mode): identical arithmetic
-      * to [[applyExtendSeriesDecompose]], but the period is a per-row
-      * COLUMN (the detected lag), so the phase means cannot unroll at
-      * translate time — each element's phase mean is computed by
-      * nested array folds instead (O(len²) per row; series are
-      * make-series grids, bounded by the time window, never the
-      * corpus). The nested lambdas are SQL text because the Scala HOF
-      * API's fixed x/y variable names shadow each other when nested.
-      * Intermediates (period, slope, intercept) MATERIALIZE as columns
-      * (the series_decompose_anomalies plan-size rule).
-      */
-    private def applySeriesDecomposeAuto(df: DataFrame,
-        names: Vector[String], vcol: String, v: Column,
-        dec: Column => Column, toD: Column => Column, zero: Column,
-        d12: org.apache.spark.sql.types.DecimalType, n: Column,
-        sy: Column, sy2: Column): DataFrame = {
-      val d6 = org.apache.spark.sql.types.DecimalType(18, 6)
-      val (periodsE, _) =
-        periodsDetect(v, 2, 14, 1, dec, toD, zero, d12, n, sy, sy2)
-      val sxy = toD(aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1), (y, i) => dec(y) * i.cast(d6)),
-        zero, (a, x) => (a + x).cast(d12)))
-      val sx = (n - lit(1.0)) * n / lit(2.0)
-      val sx2 = (n - lit(1.0)) * n * (lit(2.0) * n - lit(1.0)) / lit(6.0)
-      val slope = when(size(v) > 1, (n * sxy - sx * sy) / (n * sx2 - sx * sx))
-      val inter = sy / n - slope * (sx / n)
-      val pC = "__graft_sd_p"
-      val slC = "__graft_sd_slope"
-      val inC = "__graft_sd_inter"
-      // the phase-mean SQL mirrors the unrolled recipe's folds: exact
-      // decimal Σ_q y, exact integer Σ_q i, count from the grid formula
-      val cq = s"CAST(IF(size(`$vcol`) > pmod(i, `$pC`), " +
-        s"floor((size(`$vcol`) - 1 - pmod(i, `$pC`)) / `$pC`) + 1, 0) AS DOUBLE)"
-      val syq = s"CAST(aggregate(zip_with(`$vcol`, " +
-        s"sequence(0, size(`$vcol`) - 1), (yy, ii) -> " +
-        s"IF(pmod(ii, `$pC`) = pmod(i, `$pC`), CAST(yy AS DECIMAL(18,6)), " +
-        "CAST(0 AS DECIMAL(18,6)))), CAST(0 AS DECIMAL(37,12)), " +
-        "(acc, x) -> CAST(acc + x AS DECIMAL(37,12))) AS DOUBLE)"
-      val siq = s"CAST(aggregate(zip_with(`$vcol`, " +
-        s"sequence(0, size(`$vcol`) - 1), (yy, ii) -> " +
-        s"IF(pmod(ii, `$pC`) = pmod(i, `$pC`), ii, 0)), " +
-        "CAST(0 AS BIGINT), (acc, x) -> acc + CAST(x AS BIGINT)) AS DOUBLE)"
-      val seaSql = s"transform(sequence(0, size(`$vcol`) - 1), i -> " +
-        s"($syq - `$slC` * $siq - `$inC` * $cq) / $cq)"
-      val idx = sequence(lit(0), size(v) - 1)
-      df.withColumn(pC, coalesce(try_element_at(periodsE, lit(1)), lit(1L)))
-        .withColumn(slC, slope)
-        .withColumn(inC, inter)
-        .withColumn(names(2),
-          transform(idx, i => col(slC) * i.cast("double") + col(inC)))
-        .withColumn(names(1), expr(seaSql))
-        .withColumn(names(0),
-          zip_with(col(names(2)), col(names(1)), (t, m) => t + m))
-        .withColumn(names(3),
-          zip_with(zip_with(v, col(names(2)), (y, t) => y.cast("double") - t),
-            col(names(1)), (x, m) => x - m))
-        .drop(pC, slC, inC)
-    }
-
-    /** The series_decompose recipe shared by `series_decompose` and
-      * `series_decompose_anomalies` — returns (baseline, seasonal,
-      * trend, residual) for the array column `v` at period `p`. Must be
-      * called with applyExtendSeries' decimal helpers in scope.
-      */
-    private def applyExtendSeriesDecompose(v: Column, p: Int,
-        dec: Column => Column, toD: Column => Column, zero: Column,
-        d12: org.apache.spark.sql.types.DecimalType, n: Column,
-        sy: Column): (Column, Column, Column, Column) = {
-          val d6 = org.apache.spark.sql.types.DecimalType(18, 6)
-          val sxy = toD(aggregate(
-            zip_with(v, sequence(lit(0), size(v) - 1), (y, i) => dec(y) * i.cast(d6)),
-            zero, (a, x) => (a + x).cast(d12)))
-          val sx = (n - lit(1.0)) * n / lit(2.0)
-          val sx2 = (n - lit(1.0)) * n * (lit(2.0) * n - lit(1.0)) / lit(6.0)
-          val slope = when(size(v) > 1, (n * sxy - sx * sy) / (n * sx2 - sx * sx))
-          val inter = sy / n - slope * (sx / n)
-          val idx = sequence(lit(0), size(v) - 1)
-          val trend = transform(idx, i => slope * i.cast("double") + inter)
-          val detr = zip_with(v, trend, (y, t) => y.cast("double") - t)
-          val zero6 = lit(java.math.BigDecimal.ZERO).cast(d6)
-          // per-phase means from exact sums of the RAW series + exact
-          // integer index sums; the detrended doubles are never cast
-          val phMeans: Seq[Column] = (0 until p).map { q =>
-            val syq = aggregate(
-              zip_with(v, idx, (y, i) =>
-                when(pmod(i, lit(p)) === q, dec(y)).otherwise(zero6)),
-              zero, (a, x) => (a + x).cast(d12)).cast("double")
-            val siq = aggregate(
-              zip_with(v, idx, (y, i) =>
-                when(pmod(i, lit(p)) === q, i).otherwise(lit(0))),
-              lit(0L), (a, x) => a + x.cast("long")).cast("double")
-            val c = when(size(v) > q,
-              floor((size(v) - lit(1) - lit(q)) / lit(p)) + lit(1))
-              .otherwise(lit(0)).cast("double")
-            (syq - slope * siq - inter * c) / c
-          }
-          def seaAt(i: Column): Column =
-            (1 until p).foldLeft(when(pmod(i, lit(p)) === 0, phMeans(0))) {
-              (acc, q) => acc.when(pmod(i, lit(p)) === q, phMeans(q))
-            }
-          val sea = transform(idx, seaAt _)
-          val resid = zip_with(detr, sea, (x, m) => x - m)
-          val base = zip_with(trend, sea, (t, m) => t + m)
-          (base, sea, trend, resid)
     }
 
     private def applyMakeSeries(df: DataFrame, toks: Vector[Tok]): DataFrame = {
@@ -3890,17 +3869,6 @@ object Kql {
       pat
     }
 
-    /** Empty-series guard for the scalar series functions: an empty
-      * input array yields an empty (double) output array. Without it,
-      * `sequence(1, size(a))` on an empty array is Spark's DESCENDING
-      * [1, 0] — a 2-element garbage grid — and the percentile lookups
-      * would hit element_at(_, 0), an ANSI error. make-series never
-      * emits empty arrays, but the scalar functions accept any array
-      * column.
-      */
-    private def emptySeriesGuard(a: Column, body: Column): Column =
-      when(size(a) === 0, array().cast("array<double>")).otherwise(body)
-
     /** Tukey-fence scores over a double array: exact interpolated
       * percentiles at (pLo, pHi), score = signed fence distance scaled
       * by the fence width, 0 inside (and everywhere when the fence
@@ -4395,19 +4363,14 @@ object Kql {
           }
           if (firW.isEmpty || firW.sum == 0L)
             fail("series_fir needs a non-empty weight vector with a non-zero sum")
-          import org.apache.spark.sql.types.DecimalType
-          val wd6 = DecimalType(18, 6)
-          val wd12 = DecimalType(37, 12)
-          val wd6w = DecimalType(38, 6)
-          val wzero = lit(java.math.BigDecimal.ZERO).cast(wd12)
+          import Exact.{d12, dec, zero}
           val wsum = lit(firW.sum.toDouble)
           emptySeriesGuard(firA, transform(sequence(lit(1), size(firA)), i => {
-            val conv = firW.zipWithIndex.foldLeft(wzero) { case (acc, (w, j)) =>
-              (acc + when(i - j >= 1,
-                (get(firA, i - j - 1).cast(wd6) * lit(w).cast(wd6)).cast(wd12))
-                .otherwise(wzero)).cast(wd12)
+            val conv = firW.zipWithIndex.foldLeft(zero) { case (acc, (w, j)) =>
+              (acc + when(i - j >= 1, dec(get(firA, i - j - 1)) * dec(lit(w)))
+                .otherwise(zero)).cast(d12)
             }
-            conv.cast(wd6w).cast("double") / wsum
+            Exact.toD(conv) / wsum
           }))
         case "series_pearson_correlation" =>
           // ADX series_pearson_correlation(a, b): Pearson r between two
@@ -4420,24 +4383,12 @@ object Kql {
           nArgs(2)
           val pcA = arg(0)
           val pcB = arg(1)
-          import org.apache.spark.sql.types.DecimalType
-          val pd6 = DecimalType(18, 6)
-          val pd12 = DecimalType(37, 12)
-          val pd6w = DecimalType(38, 6)
-          def pdec(x: Column): Column = x.cast(pd6)
-          val pzero = lit(java.math.BigDecimal.ZERO).cast(pd12)
-          def psum(v: Column): Column =
-            aggregate(v, pzero, (a, x) => (a + pdec(x)).cast(pd12))
-              .cast("double")
-          def pprod(u: Column, v: Column): Column =
-            aggregate(zip_with(u, v, (x, y) => pdec(x) * pdec(y)),
-              pzero, (a, x) => (a + x).cast(pd12)).cast(pd6w).cast("double")
           val pn = size(pcA).cast("double")
-          val psx = psum(pcA)
-          val psy = psum(pcB)
-          val psxy = pprod(pcA, pcB)
-          val psx2 = pprod(pcA, pcA)
-          val psy2 = pprod(pcB, pcB)
+          val psx = Exact.sum(pcA)
+          val psy = Exact.sum(pcB)
+          val psxy = Exact.prodSum(pcA, pcB)
+          val psx2 = Exact.prodSum(pcA, pcA)
+          val psy2 = Exact.prodSum(pcB, pcB)
           val pnum = pn * psxy - psx * psy
           val pden = sqrt((pn * psx2 - psx * psx) * (pn * psy2 - psy * psy))
           when(size(pcA) === size(pcB) && pden > 0, pnum / pden)
@@ -4455,54 +4406,14 @@ object Kql {
           nArgs(3)
           val fcA = arg(0)
           val fcPoints = litInt(1)
-          val fcP = litInt(2)
           if (fcPoints < 1)
             fail("series_decompose_forecast needs points >= 1")
-          if (fcP < 2 || fcP > 1000)
-            fail(s"series_decompose_forecast period $fcP out of [2, 1000]")
-          import org.apache.spark.sql.types.DecimalType
-          val fd6 = DecimalType(18, 6)
-          val fd12 = DecimalType(37, 12)
-          val fd6w = DecimalType(38, 6)
-          def fdec(x: Column): Column = x.cast(fd6)
-          val fzero = lit(java.math.BigDecimal.ZERO).cast(fd12)
-          val fzero6 = lit(java.math.BigDecimal.ZERO).cast(fd6)
+          val fcP = seriesPeriod(fn, litInt(2))
           val tr = slice(fcA, lit(1), size(fcA) - fcPoints)
-          val fn0 = size(tr).cast("double")
-          val fsy = aggregate(tr, fzero,
-            (acc, x) => (acc + fdec(x)).cast(fd12)).cast("double")
-          val fsxy = aggregate(
-            zip_with(tr, sequence(lit(0), size(tr) - 1),
-              (y, i) => fdec(y) * i.cast(fd6)),
-            fzero, (acc, x) => (acc + x).cast(fd12))
-            .cast(fd6w).cast("double")
-          val fsx = (fn0 - lit(1.0)) * fn0 / lit(2.0)
-          val fsx2 = (fn0 - lit(1.0)) * fn0 * (lit(2.0) * fn0 - lit(1.0)) / lit(6.0)
-          val fslope = when(size(tr) > 1,
-            (fn0 * fsxy - fsx * fsy) / (fn0 * fsx2 - fsx * fsx))
-          val finter = fsy / fn0 - fslope * (fsx / fn0)
-          val fIdxTr = sequence(lit(0), size(tr) - 1)
-          val fPhMeans: Seq[Column] = (0 until fcP).map { q =>
-            val syq = aggregate(
-              zip_with(tr, fIdxTr, (y, i) =>
-                when(pmod(i, lit(fcP)) === q, fdec(y)).otherwise(fzero6)),
-              fzero, (acc, x) => (acc + x).cast(fd12)).cast("double")
-            val siq = aggregate(
-              zip_with(tr, fIdxTr, (y, i) =>
-                when(pmod(i, lit(fcP)) === q, i).otherwise(lit(0))),
-              lit(0L), (acc, x) => acc + x.cast("long")).cast("double")
-            val c = when(size(tr) > q,
-              floor((size(tr) - lit(1) - lit(q)) / lit(fcP)) + lit(1))
-              .otherwise(lit(0)).cast("double")
-            (syq - fslope * siq - finter * c) / c
-          }
-          def fSeaAt(i: Column): Column =
-            (1 until fcP).foldLeft(
-              when(pmod(i, lit(fcP)) === 0, fPhMeans(0))) {
-              (acc, q) => acc.when(pmod(i, lit(fcP)) === q, fPhMeans(q))
-            }
-          transform(sequence(lit(0), size(fcA) - 1), i =>
-            fslope * i.cast("double") + finter + fSeaAt(i))
+          val fit = Exact.lineFit(tr)
+          emptySeriesGuard(fcA, transform(Exact.idx(fcA), i =>
+            fit.slope * i.cast("double") + fit.inter +
+              Exact.phaseMean(tr, fcP, fit.slope, fit.inter)(i)))
         case "series_fill_const" =>
           // ADX series_fill_const(series[, c]): null bins → the
           // constant (0 when omitted). Pure per-element projection.

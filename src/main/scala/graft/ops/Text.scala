@@ -2023,6 +2023,14 @@ object Text {
     * DuckDB replays the full winnow with list math; spec additionally
     * asserts shared-prefix docs share fingerprints. All array ops in one
     * projection — no shuffle.
+    *
+    * No lambda body may reference the hash array `hs`. A predicate on
+    * the output (`n_fp`, or the `isnotnull` constraint inference adds
+    * under a join) is pushed below the projections with `hs` inlined
+    * into it; a window lambda over `hs` then re-hashes the whole
+    * document once per window — quadratic in the text length. The
+    * window minima are therefore the element-wise `least` of the `w`
+    * shifted slices of `hs`, whose lambdas see only their elements.
     */
   private def docFingerprint(s: SparkSession, dir: String): DataFrame = {
     val k = 5
@@ -2031,12 +2039,14 @@ object Text {
       sequence(lit(1), length(col("text")) - (k - 1)),
       i => conv(substring(md5(col("text").substr(i, lit(k)).cast("binary")), 1, 12), 16, 10)
         .cast("long"))
+    val windows = size(col("hs")) - (w - 1)
+    val minima = (1 until w).foldLeft(slice(col("hs"), lit(1), windows)) {
+      (acc, o) => zip_with(acc, slice(col("hs"), lit(o + 1), windows), least(_, _))
+    }
     Tables.documents(s, dir)
       .filter(length(col("text")) >= k + w)
       .withColumn("hs", hashes)
-      .withColumn("fps", array_distinct(transform(
-        sequence(lit(0), size(col("hs")) - w),
-        j => array_min(slice(col("hs"), j + 1, lit(w))))))
+      .withColumn("fps", array_distinct(minima))
       .select(col("doc_id"), size(col("fps")).as("n_fp"),
         array_min(col("fps")).as("fp_min"), array_max(col("fps")).as("fp_max"))
       .orderBy("doc_id")

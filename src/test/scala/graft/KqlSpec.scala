@@ -1753,6 +1753,72 @@ class KqlSpec extends SparkSpec {
       Kql.translate(spark,
         "kql_dec | extend (a, b, c, d, e, f, g) = series_stats(v, 2)")
     }
+    // independent pin: series_decompose and series_decompose_forecast
+    // equal, bit for bit, a plain-Scala recompute of the documented
+    // recipe — exact sums (integer-valued series, so Long sums ARE the
+    // exact decimal sums), then the same IEEE expression order. Returns
+    // (baseline, seasonal, trend, residual) at positions 0 until len of
+    // the model fitted on `train` (the forecast's horizon runs past it).
+    def recipe(train: Seq[Long], p: Int, len: Int): Seq[Seq[Option[Double]]] = {
+      val m = train.length
+      val n = m.toDouble
+      val sy = train.sum.toDouble
+      val sxy = train.indices.map(i => train(i) * i).sum.toDouble
+      val sx = (n - 1.0) * n / 2.0
+      val sx2 = (n - 1.0) * n * (2.0 * n - 1.0) / 6.0
+      val line = if (m > 1) {
+        val slope = (n * sxy - sx * sy) / (n * sx2 - sx * sx)
+        Some((slope, sy / n - slope * (sx / n)))
+      } else None
+      (0 until len).map { i =>
+        line.map { case (slope, inter) =>
+          val ph = (0 until m).filter(_ % p == i % p)
+          val c = ph.length.toDouble
+          val sea = (ph.map(train(_)).sum.toDouble - slope * ph.sum.toDouble -
+            inter * c) / c
+          val trend = slope * i.toDouble + inter
+          val resid = if (i < m) (train(i).toDouble - trend) - sea else Double.NaN
+          Seq(trend + sea, sea, trend, resid)
+        } match {
+          case Some(parts) => parts.map(Some(_))
+          case None => Seq.fill(4)(None)
+        }
+      }.transpose
+    }
+    def bits(xs: Seq[Option[Double]]): Seq[Option[Long]] =
+      xs.map(_.map(java.lang.Double.doubleToLongBits))
+    def doubles(r: org.apache.spark.sql.Row, i: Int): Seq[Option[Double]] =
+      r.getSeq[Any](i).map(x => Option(x).map(_.asInstanceOf[Double]))
+    val rng = new scala.util.Random(7)
+    for (p <- Seq(2, 7, 12)) {
+      val series = Seq(1, p - 1, p, 3 * p + 1).zipWithIndex.map { case (len, k) =>
+        (k.toLong, Seq.tabulate(len)(i => (rng.nextInt(41) + i / 3).toLong))
+      }
+      series.toDF("id", "v").createOrReplaceTempView("kql_dec_pin")
+      val got = Kql.translate(spark,
+        s"kql_dec_pin | extend (base, sea, tr, res) = series_decompose(v, $p) " +
+          "| project id, base, sea, tr, res | sort by id asc").collect()
+      series.zip(got).foreach { case ((_, y), r) =>
+        val want = recipe(y, p, y.length)
+        (0 until 4).foreach(c =>
+          assert(bits(doubles(r, c + 1)) === bits(want(c)), s"p $p len ${y.length} col $c"))
+      }
+      // the forecast trains on all but the last 2 points; it raises on a
+      // series shorter than that (a negative slice length) and when the
+      // train prefix misses a phase the horizon reaches (c = 0), so only
+      // lengths whose model is defined are pinned
+      val fcSeries = Seq(2, p + 2, 3 * p + 1).map(len =>
+        Seq.tabulate(len)(i => (rng.nextInt(41) + i / 3).toLong))
+      fcSeries.zipWithIndex.map { case (y, k) => (k.toLong, y) }
+        .toDF("id", "v").createOrReplaceTempView("kql_fc_pin")
+      val fc = Kql.translate(spark,
+        s"kql_fc_pin | extend fc = series_decompose_forecast(v, 2, $p) " +
+          "| project id, fc | sort by id asc").collect()
+      fcSeries.zip(fc).foreach { case (y, r) =>
+        assert(bits(doubles(r, 1)) === bits(recipe(y.dropRight(2), p, y.length).head),
+          s"forecast p $p len ${y.length}")
+      }
+    }
   }
 
   test("invoke: let-bound tabular function inlines with typed parameters") {
@@ -1979,6 +2045,17 @@ class KqlSpec extends SparkSpec {
     // 2-element garbage array) and element_at(_, 0) an ANSI error
     (1 to 4).foreach(i => assert(r(0).getSeq[Double](i) === Seq.empty, s"col $i"))
     assert(r(1).getSeq[Double](1) === Seq(1.0, 2.0))
+    // the decompose family likewise: fixed and auto period, anomalies
+    // and forecast (the auto period raised DIVIDE_BY_ZERO on `[]`)
+    val d = Kql.translate(spark,
+      "kql_empty | extend (b1, s1, t1, e1) = series_decompose(v, 2) " +
+        "| extend (b2, s2, t2, e2) = series_decompose(v) " +
+        "| extend (fl, sc, bl) = series_decompose_anomalies(v, 2) " +
+        "| extend fc = series_decompose_forecast(v, 2, 2) " +
+        "| project id, b1, s1, t1, e1, b2, s2, t2, e2, fl, sc, bl, fc " +
+        "| sort by id asc").collect()
+    (1 to 12).foreach(i => assert(d(0).getSeq[Any](i) === Seq.empty, s"col $i"))
+    (1 to 12).foreach(i => assert(d(1).getSeq[Any](i).length === 2, s"col $i"))
   }
 
   test("search is row-wise: a frozen sort survives it into serialize") {

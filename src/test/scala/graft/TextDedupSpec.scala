@@ -559,6 +559,18 @@ class TextDedupSpec extends SparkSpec {
     // weaker, deterministic check: fingerprint sets are nonempty and
     // bounded by the gram count
     val fp = q("q_doc_fingerprint")
+    // the filter is pushed below the projections with the hash array
+    // inlined into it; no lambda may then nest the md5 hashing lambda,
+    // or every window re-hashes the whole document
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Md5}
+    val rehash = fp.filter($"n_fp" <= 0).queryExecution.optimizedPlan
+      .flatMap(_.expressions)
+      .flatMap(_.collect { case lf: LambdaFunction => lf })
+      .filter(_.function.find {
+        case inner: LambdaFunction => inner.find(_.isInstanceOf[Md5]).isDefined
+        case _ => false
+      }.isDefined)
+    assert(rehash.isEmpty, s"a lambda re-hashes per element: ${rehash.take(1)}")
     assert(fp.filter($"n_fp" <= 0).count() === 0)
     val docs = Tables.documents(spark, sfDir).select("doc_id", "n_chars")
     val joined = fp.join(docs, "doc_id")

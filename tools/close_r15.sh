@@ -38,7 +38,7 @@ echo "== [5/5] clustered vector gate" | tee -a $L/status
 if [ ! -d /tmp/sf1c/embeddings.parquet ]; then
   sbt -batch "runMain graft.tools.ScaleGen /root/testdata/sf0.1 /tmp/sf1c 10 clustered" > $L/scalegen_c.log 2>&1
 fi
-SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 bash tools/vectorgate.sh /tmp/sf1c \
-  SCALECHECK_CLUSTERED_r15.json /tmp/sf1c_out > $L/selfcheck_c.log 2>&1
+SPARK_DRIVER_MEM=48g SPARK_GRAFT_CPUS=32 bash tools/gate.sh /tmp/sf1c \
+  SCALECHECK_CLUSTERED_r15.json Vectors /tmp/sf1c_out > $L/selfcheck_c.log 2>&1
 tail -3 $L/selfcheck_c.log | tee -a $L/status
 echo "== close_r15 done" | tee -a $L/status
