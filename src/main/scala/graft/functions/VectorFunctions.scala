@@ -91,7 +91,8 @@ case class ArgminL2(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Registration + Column-API surface for the native vector functions.
+/** Registration + Column-API surface for the native vector and
+  * tokenizer functions.
   * Sessions built with `graft.GraftExtensions` get them at session
   * construction; `register` is the fallback for plain sessions.
   */
@@ -105,7 +106,8 @@ object VectorFunctions {
       ("dot_product", classOf[DotProduct], DotProduct),
       ("argmax_cosine", classOf[ArgmaxCosine], ArgmaxCosine),
       ("argmin_l2", classOf[ArgminL2], ArgminL2),
-      ("l2_sq", classOf[L2Sq], L2Sq)
+      ("l2_sq", classOf[L2Sq], L2Sq),
+      ("unigram_pieces", classOf[UnigramPieces], UnigramPieces)
     ).map { case (name, cls, build) =>
       (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
         (exprs: Seq[Expression]) => build(exprs(0), exprs(1)))
@@ -146,4 +148,20 @@ object VectorFunctions {
 
   /** Column API: `l2_sq($"a", $"b")` → double Σ(aᵢ−bᵢ)² (see [[VectorKernels.l2Sq]]). */
   def l2_sq(s: SparkSession, a: Column, b: Column): Column = call(s, "l2_sq", a, b)
+
+  /** Column API: `unigram_pieces($"w", $"costs")` → `array<string>`,
+    * the Viterbi pieces last first (see [[TokenizerKernels.unigramPieces]]).
+    */
+  def unigram_pieces(s: SparkSession, w: Column, costs: Column): Column =
+    call(s, "unigram_pieces", w, costs)
+
+  /** The aggregate that packs a (piece, cost) table into the one-row
+    * cost map `unigram_pieces` reads, keys in ascending order (the
+    * table is alphabet + the trainer's piece budget, small enough to
+    * broadcast).
+    */
+  def unigram_cost_map(piece: Column, cost: Column): Column = {
+    import org.apache.spark.sql.functions.{collect_list, map_from_entries, sort_array, struct}
+    map_from_entries(sort_array(collect_list(struct(piece, cost))))
+  }
 }

@@ -412,7 +412,9 @@ object Kql {
       * casting a full-precision detrended double to decimal (Spark's
       * shortest-repr BigDecimal and DuckDB's binary expansion round a
       * near-tie double differently; the ~sf1 gate exposed it). `i` may
-      * run past `v` (the forecast's horizon). O(|v|) per element.
+      * run past `v` (the forecast's horizon); a phase with no position
+      * in `v` (only reachable there) has no mean, so the value is null.
+      * O(|v|) per element.
       */
     def phaseMean(v: Column, period: Column, slope: Column,
         inter: Column)(i: Column): Column = {
@@ -424,7 +426,7 @@ object Kql {
         .cast("double")
       val c = when(size(v) > q, floor((size(v) - lit(1) - q) / period) + lit(1))
         .otherwise(lit(0)).cast("double")
-      (syq - slope * siq - inter * c) / c
+      when(c > 0, (syq - slope * siq - inter * c) / c)
     }
 
     val decompTemps =
@@ -3112,7 +3114,8 @@ object Kql {
     //   sample residual variance; the line_fit output array is out of
     //   subset]. Per-row array folds only — nothing leaves the row, so
     //   the stage costs what make-series cost. All sums and the line
-    //   fit come from the [[Exact]] core.
+    //   fit come from the [[Exact]] core. On an empty series every
+    //   scalar output is null (never a division by n = 0).
     private def applyExtendSeries(df: DataFrame, toks: Vector[Tok]): DataFrame = {
       import org.apache.spark.sql.types.ArrayType
       val close = toks.indexOf(TSym(")"))
@@ -3161,7 +3164,7 @@ object Kql {
           names.zip(Seq(
             mn, (array_position(vd, mn) - 1).cast("long"),
             mx, (array_position(vd, mx) - 1).cast("long"),
-            sy / n, variance, sqrt(variance)))
+            when(size(v) > 0, sy / n), variance, sqrt(variance)))
         case "series_fit_line" =>
           if (ints.nonEmpty) fail("series_fit_line takes no extra arguments")
           if (names.length != 5)
@@ -3170,7 +3173,7 @@ object Kql {
           import fit.{sxy, sx, sx2, slope, inter}
           val ssres = sy2 - lit(2.0) * inter * sy - lit(2.0) * slope * sxy +
             n * inter * inter + lit(2.0) * inter * slope * sx + slope * slope * sx2
-          val sstot = sy2 - sy * sy / n
+          val sstot = when(size(v) > 0, sy2 - sy * sy / n)
           names.zip(Seq(
             when(sstot > 0, lit(1.0) - ssres / sstot), slope, variance,
             ssres / (n - lit(1.0)), inter))
@@ -3877,21 +3880,25 @@ object Kql {
       * residual with the default ctukey fences).
       */
     private def tukeyScores(ad: Column, pLo: Double, pHi: Double): Column = {
-      val srt = array_sort(ad)
-      def pct(p: Double): Column = {
+      def pct(srt: Column, p: Double): Column = {
         val pos = (size(srt) - 1).cast("double") * lit(p)
         val frac = pos - floor(pos)
         element_at(srt, floor(pos).cast("int") + 1) * (lit(1.0) - frac) +
           element_at(srt, ceil(pos).cast("int") + 1) * frac
       }
-      val lo = pct(pLo)
-      val hi = pct(pHi)
-      val d = hi - lo
-      emptySeriesGuard(ad, transform(ad, x => round(
-        when(d <= 0, lit(0.0))
-          .when(x > hi, (x - hi) / d)
-          .when(x < lo, (x - lo) / d)
-          .otherwise(lit(0.0)), 4)))
+      // the sorted series and then the fences bind once per row, each as
+      // the one element of an outer transform: an expression referenced
+      // from a lambda body runs again at every reference, so inlined the
+      // sort would run per percentile term and, in the per-element
+      // lambda, per element
+      val fences = transform(array(array_sort(ad)), srt =>
+        struct(pct(srt, pLo).as("lo"), pct(srt, pHi).as("hi"),
+          (pct(srt, pHi) - pct(srt, pLo)).as("d")))
+      emptySeriesGuard(ad, flatten(transform(fences, f => transform(ad, x => round(
+        when(f("d") <= 0, lit(0.0))
+          .when(x > f("hi"), (x - f("hi")) / f("d"))
+          .when(x < f("lo"), (x - f("lo")) / f("d"))
+          .otherwise(lit(0.0)), 4)))))
     }
 
     /** The ADX whole-TERM match as a boundary regex (the shape the term
@@ -4402,14 +4409,18 @@ object Kql {
           // explicitly (detection is out, same as series_decompose);
           // the arithmetic is the series_decompose recipe verbatim
           // (exact decimal sums, algebraic phase means, one fixed IEEE
-          // expression), restricted to the train prefix.
+          // expression), restricted to the train prefix. A row never
+          // fails the query: an element whose forecast is undefined is
+          // null — all of them when the train prefix has fewer than two
+          // points (a series no longer than `points` has none), and a
+          // horizon element whose phase has no train point.
           nArgs(3)
           val fcA = arg(0)
           val fcPoints = litInt(1)
           if (fcPoints < 1)
             fail("series_decompose_forecast needs points >= 1")
           val fcP = seriesPeriod(fn, litInt(2))
-          val tr = slice(fcA, lit(1), size(fcA) - fcPoints)
+          val tr = slice(fcA, lit(1), greatest(size(fcA) - fcPoints, lit(0)))
           val fit = Exact.lineFit(tr)
           emptySeriesGuard(fcA, transform(Exact.idx(fcA), i =>
             fit.slope * i.cast("double") + fit.inter +

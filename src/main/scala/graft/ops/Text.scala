@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.VectorFunctions
 import Ox._
 
 /** Text-analysis + deduplication operators over `documents` — the
@@ -377,7 +378,7 @@ object Text {
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val dense = e.crossJoin(broadcast(q))
       .select(col("vec_id").as("doc_id"),
-        round(graft.functions.VectorFunctions.cosine_sim(s, col("embedding"), col("qv")), 4).as("cosv"))
+        round(VectorFunctions.cosine_sim(s, col("embedding"), col("qv")), 4).as("cosv"))
       .filter(col("doc_id") =!= 0)
       .orderBy(col("cosv").desc, col("doc_id")).limit(k)
       .withColumn("rank_d",
@@ -909,10 +910,11 @@ object Text {
   // ([[Sqrt2Thr]], BigInt isqrt — no libm call in either engine) —
   // and the Viterbi DP runs over PACKED longs (cost·2²⁰ + pieceCount,
   // so min() breaks cost ties toward fewer pieces), with path
-  // reconstruction preferring the LONGEST piece at each cut. Every
-  // stage is an integer list fold spelled identically in Spark HOFs
-  // and the DuckDB twin (single-expression list accumulators — the
-  // r14 list_reduce struct-field law).
+  // reconstruction preferring the LONGEST piece at each cut. Spark runs
+  // the Viterbi in one native kernel (TokenizerKernels.unigramPieces);
+  // the DuckDB twin spells the same integer arithmetic as list folds
+  // (single-expression list accumulators — the r14 list_reduce
+  // struct-field law).
 
   /** Multi-char piece budget of the unigram trainer (single chars are
     * always kept for coverage — every word stays segmentable).
@@ -968,61 +970,28 @@ object Text {
       .select(col("p"), col("c"),
         (expr(fHalfBits("tc")) - expr(fHalfBits("c"))).cast("long").as("cost"))
 
-  /** Piece cost of DP slot (p−l, l) — pl is the per-word flat list
-    * PL[(i−1)·4+l] of PACKED costs (cost·2²⁰ + 1; missing pieces 10⁹
-    * half-bits, provably never on a min path — the single-char chain
-    * costs ≤ len·130 half-bits).
-    */
-  private def uniOpt(p: String, l: Int): String =
-    s"IF($p >= $l, element_at(acc, $p - $l + 1) + " +
-      s"element_at(pl, ($p - $l) * 4 + $l), NULL)"
-
-  /** Longest piece length closing the min-cost path at position `cp`
-    * (dp is the packed best-cost list, dp[k] = best for position k−1).
-    */
-  private def uniLstar(cp: String): String =
-    "CASE " + (4 to 2 by -1).map { l =>
-      s"WHEN $cp >= $l AND element_at(dp, $cp - $l + 1) + " +
-        s"element_at(pl, ($cp - $l) * 4 + $l) = element_at(dp, $cp + 1) THEN $l "
-    }.mkString + "ELSE 1 END"
-
-  /** Viterbi-segment every distinct word under a cost table: build
-    * the per-word flat slot list (vocab join — broadcast, the model
-    * is ≤ alphabet + [[UnigramPieces]] rows), run the packed-long DP
-    * fold over positions, reconstruct cuts longest-piece-last, and
-    * emit (w, f, pieces). Everything is vocabulary-bounded; the
-    * corpus is never rescanned.
+  /** Viterbi-segment every distinct word under a cost table: the
+    * table (≤ alphabet + [[UnigramPieces]] rows) is packed into one
+    * broadcast cost-map row, and the native `unigram_pieces` kernel
+    * ([[graft.functions.TokenizerKernels.unigramPieces]]) emits each
+    * word's (w, f, pieces), last piece first. Everything is
+    * vocabulary-bounded; the corpus is never rescanned.
     */
   private def uniSegment(words: DataFrame, costs: DataFrame): DataFrame = {
-    val slots = words.select(col("w"), col("f"),
-      explode(expr("sequence(1, 4 * length(w))")).as("idx"))
-      .select(col("w"), col("f"), col("idx"), expr(
-        "CASE WHEN ((idx + 3) div 4) + ((idx - 1) % 4 + 1) - 1 <= length(w) " +
-          "THEN substring(w, (idx + 3) div 4, (idx - 1) % 4 + 1) END").as("sub"))
-    val pl = slots
-      .join(broadcast(costs.select(col("p").as("sub"), col("cost"))),
-        Seq("sub"), "left")
-      .groupBy("w", "f")
-      .agg(expr("transform(array_sort(collect_list(struct(idx, " +
-        "coalesce(cost, 1000000000L) * 1048576 + 1 AS pk))), g -> g.pk)")
-        .as("pl"))
-    val dpE = "aggregate(sequence(1, length(w)), array(0L), " +
-      "(acc, p) -> array_append(acc, least(" +
-      (1 to 4).map(l => uniOpt("p", l)).mkString(", ") + ")))"
-    val reconE = "aggregate(sequence(1, length(w)), array(length(w)), " +
-      "(acc, x) -> IF(element_at(acc, -1) <= 0, acc, " +
-      s"array_append(acc, element_at(acc, -1) - (${uniLstar("element_at(acc, -1)")}))))"
-    pl.withColumn("dp", expr(dpE))
-      .withColumn("cuts", expr(reconE))
-      .select(col("w"), col("f"), expr(
-        "transform(sequence(1, size(cuts) - 1), k -> substring(w, " +
-          "element_at(cuts, k + 1) + 1, " +
-          "element_at(cuts, k) - element_at(cuts, k + 1)))").as("pieces"))
+    val table = costs.agg(VectorFunctions.unigram_cost_map(col("p"), col("cost")).as("costs"))
+    words.crossJoin(broadcast(table)).select(col("w"), col("f"),
+      VectorFunctions.unigram_pieces(words.sparkSession, col("w"), col("costs")).as("pieces"))
   }
 
   /** One hard-EM round: Viterbi counts weighted by word frequency;
     * multi-char pieces with zero support are PRUNED (the unigram
     * algorithm's prune step), single chars keep a coverage floor of 1.
+    *
+    * The floor is load-bearing beyond coverage: with every single char
+    * in the table, each word has a finite single-char path (≤ len·130
+    * half-bits), which is what keeps the DuckDB twin's 2^62 `least()`
+    * sentinel in [[uniSegCtesDk]] from ever winning. Dropping or
+    * weakening it must revisit that sentinel.
     */
   private def uniEmRound(words: DataFrame, costs: DataFrame,
       chars: DataFrame): DataFrame = {
@@ -2227,20 +2196,23 @@ object Text {
     }.mkString + "ELSE 1 END"
 
   /** One Viterbi segmentation pass over the distinct-word table `wf`
-    * under cost table `costSrc` — the EXACT integer twin of
-    * [[uniSegment]]: flat slot list (packed cost·2²⁰+1, missing 10⁹
-    * half-bits), the DP fold (least over ≤4 predecessors; Spark's
-    * least() skips the p<l NULLs, the DuckDB twin carries a dominated
-    * sentinel instead so NULL semantics never enter), the longest-piece-last
-    * reconstruction fold, and the piece slices. Both folds carry a
-    * single-expression LIST accumulator (the r14 list_reduce law).
+    * under cost table `costSrc` — the EXACT integer twin of the
+    * `unigram_pieces` kernel behind [[uniSegment]]: flat slot list
+    * (packed cost·2²⁰+1, missing 10⁹ half-bits), the DP fold (min over
+    * ≤4 predecessors; the kernel skips the p<l slots, the twin carries a
+    * dominated sentinel instead so NULL semantics never enter), the
+    * longest-piece-last reconstruction fold, and the piece slices. Both
+    * folds carry a single-expression LIST accumulator (the r14
+    * list_reduce law).
     */
   private def uniSegCtesDk(sfx: String, costSrc: String): String = {
     // every least() option is TOTAL (p < l slots carry a 2^62 sentinel
     // instead of NULL): the l = 1 option is valid at every position, and
     // real packed options stay < 2^51 (len·130 half-bits of single-char
     // chain + one 10^9-half-bit missing-piece slot), so the sentinel never
-    // wins — least()'s cross-version NULL semantics drop out entirely
+    // wins — least()'s cross-version NULL semantics drop out entirely.
+    // The < 2^51 bound holds only while every single char stays in the
+    // cost table: [[uniEmRound]]'s coverage floor of 1 guarantees it
     val opts = (1 to 4).map(l =>
       s"CASE WHEN el[1] >= $l THEN acc[el[1] - $l + 1] + pl[(el[1] - $l) * 4 + $l] " +
         "ELSE 4611686018427387904 END")

@@ -73,15 +73,6 @@ class CosineSimilaritySpec extends SparkSpec {
         VectorFunctions.argmin_l2(spark, v, cands).as("m1"),
         VectorFunctions.argmin_l2(spark, vd, cands).as("m2"))
       .collect().sortBy(_.getLong(0))
-    def withConfs[T](kv: (String, String)*)(body: => T): T = {
-      val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-      kv.foreach { case (k, x) => spark.conf.set(k, x) }
-      try body
-      finally prior.foreach {
-        case (k, Some(x)) => spark.conf.set(k, x)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
     val compiled = withConfs("spark.sql.codegen.fallback" -> "false")(select())
     assert(compiled.nonEmpty)
     compiled.foreach { r =>

@@ -1479,6 +1479,48 @@ class KqlSpec extends SparkSpec {
     }
   }
 
+  test("series_outliers computes its fences once per row, not per element") {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySort, LambdaFunction}
+    // repartitioned, so the optimizer cannot fold the projection into a
+    // LocalRelation (which would leave no expressions to inspect)
+    Seq((1L, Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 10L, 100L)))
+      .toDF("k", "n").repartition(1).createOrReplaceTempView("kql_series_fence")
+    val df = Kql.translate(spark, "kql_series_fence | extend ol = series_outliers(n)")
+    // an array_sort inside a lambda body re-sorts the series per element
+    val inBodies = df.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(
+      _.collect { case lf: LambdaFunction => lf.function.collect { case a: ArraySort => a } })
+      .flatten
+    assert(df.queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[ArraySort]))), "the plan must still sort")
+    assert(inBodies.size === 0, s"array_sorts in lambda bodies, e.g. ${inBodies.headOption}")
+    assert(df.select(explode(col("ol"))).as[Double].collect().toSeq ===
+      Seq(-0.125) ++ Seq.fill(9)(0.0) ++ Seq(11.25))
+  }
+
+  test("series_decompose_forecast: short rows yield nulls, never a failed query") {
+    // lengths 1 and 2 are no longer than points = 2 (no train point);
+    // 3 leaves one train point (no line); 6 and 7 at period 7 train on
+    // phases 0-3 and 0-4, so the horizon's later phases have no mean
+    Seq((1L, Seq(5.0)), (2L, Seq(5.0, 6.0)), (3L, Seq(1.0, 2.0, 3.0)),
+      (6L, Seq(3.0, 1.0, 4.0, 1.0, 5.0, 9.0)),
+      (7L, Seq(3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0)))
+      .toDF("k", "v").createOrReplaceTempView("kql_series_short")
+    val got = Kql.translate(spark,
+      "kql_series_short | extend fc = series_decompose_forecast(v, 2, 7) " +
+        "| project k, fc | sort by k asc")
+      .collect().map(r => r.getLong(0) -> r.getSeq[java.lang.Double](1)).toMap
+    Seq(1L, 2L, 3L).foreach(k => assert(got(k) === Seq.fill(k.toInt)(null), s"k=$k"))
+    // the defined elements are the train prefix's decompose baseline
+    Seq((1L, Seq(3.0, 1.0, 4.0, 1.0)), (2L, Seq(3.0, 1.0, 4.0, 1.0, 5.0)))
+      .toDF("k", "v").createOrReplaceTempView("kql_series_train")
+    val base = Kql.translate(spark,
+      "kql_series_train | extend (b, s, t, e) = series_decompose(v, 7) " +
+        "| project k, b | sort by k asc")
+      .collect().map(_.getSeq[java.lang.Double](1))
+    assert(got(6L) === base(0) ++ Seq(null, null))
+    assert(got(7L) === base(1) ++ Seq(null, null))
+  }
+
   test("series fills: forward carry, linear interpolation, edges, const") {
     // nulls at positions 0, 2-3, 6 (leading, interior run, trailing)
     Seq((1L, Seq[java.lang.Long](null, 4L, null, null, 10L, 8L, null)))
@@ -2056,6 +2098,15 @@ class KqlSpec extends SparkSpec {
         "| sort by id asc").collect()
     (1 to 12).foreach(i => assert(d(0).getSeq[Any](i) === Seq.empty, s"col $i"))
     (1 to 12).foreach(i => assert(d(1).getSeq[Any](i).length === 2, s"col $i"))
+    // the scalar outputs of series_stats and series_fit_line are null on
+    // `[]` (sy / n raised DIVIDE_BY_ZERO)
+    val st = Kql.translate(spark,
+      "kql_empty | extend (mn, mni, mx, mxi, avg, var, sd) = series_stats(v) " +
+        "| extend (rsq, slope, fvar, rvar, icpt) = series_fit_line(v) " +
+        "| project id, mn, mni, mx, mxi, avg, var, sd, rsq, slope, fvar, rvar, icpt " +
+        "| sort by id asc").collect()
+    (1 to 12).foreach(i => assert(st(0).isNullAt(i), s"col $i"))
+    assert(st(1).getDouble(5) === 1.5 && st(1).getDouble(9) === 1.0)
   }
 
   test("search is row-wise: a frozen sort survives it into serialize") {

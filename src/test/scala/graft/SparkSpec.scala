@@ -18,4 +18,15 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
+
+  /** Runs `body` with the given session confs set, then restores them. */
+  def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, x) => spark.conf.set(k, x) }
+    try body
+    finally prior.foreach {
+      case (k, Some(x)) => spark.conf.set(k, x)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
