@@ -723,6 +723,23 @@ class RelationalSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Mulaw.decodeWav(Adpcm.encodeWav(samples, 8000))
     }
+    intercept[IllegalArgumentException] {
+      Wav.decode(Mulaw.encodeWav(samples, 8000))
+    }
+    intercept[IllegalArgumentException] {
+      Mulaw.decodeWav(Wav.encode(samples, 8000))
+    }
+    intercept[IllegalArgumentException] {
+      Adpcm.decodeWav(Mulaw.encodeWav(samples, 8000))
+    }
+    // the samples-per-block field is u16: 65 536 samples would wrap it
+    // to 0 and decode as an empty block, so the encoder refuses them,
+    // and the largest even count round-trips at full length
+    intercept[IllegalArgumentException] {
+      Adpcm.encodeWav(new Array[Short](65536), 8000)
+    }
+    val longest = Array.tabulate(65534)(k => ((k % 400) * 20 - 4000).toShort)
+    assert(Adpcm.decodeWav(Adpcm.encodeWav(longest, 8000))._2.length === 65534)
     // corrupt step index in the ADPCM block header
     val ima = Adpcm.encodeWav(samples, 8000)
     val bad = ima.clone()
@@ -881,6 +898,18 @@ class RelationalSpec extends SparkSpec {
     val mvPos = 9 + 4 + Jpeg.encodeGray(f1, w, h).length + 4
     mvPatched(mvPos) = 5 // dy = 5 > SearchR
     assert(msgOf(mvPatched).contains("search range"))
+    // a crafted P frame over a 64×64 intra frame: zero motion vectors,
+    // every block DC category 11 with value +2047 (code 111111110, then
+    // eleven 1-bits), then EOB (1010) — 24 bits, bytes FF 7F FA with
+    // the FF stuffed. The DC predictor climbs by 2047 per block, so the
+    // dequantized DC passes the 2^19 bound the staged IDCT relies on
+    val big = Jpeg.encodeGray(Array.tabulate(64 * 64)(i => (i % 256).toByte), 64, 64)
+    def be32(v: Int) = Array(v >>> 24, v >>> 16, v >>> 8, v).map(_.toByte)
+    val pBody = new Array[Byte](2 * 64) ++
+      Array.fill(64)(Array(0xff, 0x00, 0x7f, 0xfa).map(_.toByte)).flatten
+    val crafted = "GPV1".getBytes("US-ASCII") ++ Array[Byte](0, 64, 0, 64, 2) ++
+      be32(big.length) ++ big ++ be32(pBody.length) ++ pBody
+    assert(msgOf(crafted).contains("coefficient magnitude"))
 
     // the registered query: contract booleans + the planted row finds
     // the 17-position cyclic shift as (1,1) motion in all 4 blocks
@@ -899,6 +928,48 @@ class RelationalSpec extends SparkSpec {
     assert(pmv >= 8L && pmv <= 16L,
       "the planted raster shift reads mostly as (1,1) motion")
     got.unpersist()
+  }
+
+  test("media encoders: golden bytes on fixed inputs") {
+    import graft.ops.Multimodal.{Adpcm, Jpeg, Mdct, Mulaw, Ppm, Wav}
+    // the round-trip tests pass for any self-consistent container; these
+    // digests pin the exact bytes each encoder emits (PNG is left out:
+    // its IDAT is whatever the JDK's Deflater produces)
+    def md5(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("MD5").digest(b)
+        .map(x => f"${x & 0xff}%02x").mkString
+    def img(n: Int, a: Int): Array[Byte] =
+      Array.tabulate(n)(i => ((i * a + (i * i) % 29) % 256).toByte)
+    val pcm = Array.tabulate(256)(k => (((k * 1237L + 11) % 65536) - 32768).toShort)
+    val f1 = img(256, 7)
+    val f2 = Array.tabulate(256)(i => math.min(255, (f1((i + 17) % 256) & 0xff) + 5).toByte)
+    val f3 = Array.tabulate(256)(i => math.min(255, (f2(i) & 0xff) + 3).toByte)
+    val got = Seq(
+      "ppm_p5" -> md5(Ppm.encode(img(21 * 13, 5), 21, 13)),
+      "ppm_p6" -> md5(Ppm.encodeP6(img(3 * 21 * 13, 5), 21, 13)),
+      "wav_pcm16" -> md5(Wav.encode(pcm, 8000)),
+      "wav_mulaw" -> md5(Mulaw.encodeWav(pcm, 8000)),
+      "wav_adpcm" -> md5(Adpcm.encodeWav(pcm, 8000)),
+      "jpeg_gray" -> md5(Jpeg.encodeGray(img(21 * 13, 11), 21, 13)),
+      "jpeg_gray_rst" -> md5(Jpeg.encodeGray(img(21 * 13, 11), 21, 13, restartInterval = 2)),
+      "jpeg_color" -> md5(Jpeg.encodeColor(img(3 * 16 * 16, 3), 16, 16)),
+      "jpeg_color_odd" -> md5(Jpeg.encodeColor(img(3 * 21 * 13, 3), 21, 13)),
+      "mjpeg" -> md5(Jpeg.Mjpeg.encode(Seq((f1, 16, 16), (img(24 * 16, 13), 24, 16)))),
+      "pvid" -> md5(Jpeg.Pvid.encode(f1, Seq(f2, f3), 16, 16)),
+      "mdct" -> md5(Mdct.encode(pcm)))
+    assert(got.toMap === Map(
+      "ppm_p5" -> "53d57935cb4770ebc2b638114b9f147a",
+      "ppm_p6" -> "9b959d0a4f0a3f75e126cfd040774e3a",
+      "wav_pcm16" -> "6a962b7690996d75db14a83742bd4f90",
+      "wav_mulaw" -> "5b0aa0a2478df957a2118c023a13cf80",
+      "wav_adpcm" -> "e934bde18c5e4015acd91503d097cb21",
+      "jpeg_gray" -> "39bf4774a5a47ef816430241195c793e",
+      "jpeg_gray_rst" -> "3e78c653398744fcd4f7baa056bde79c",
+      "jpeg_color" -> "3c5545b9150d1f250e63405a0e631998",
+      "jpeg_color_odd" -> "f725ab06c81c63b95f9f0aaae2551160",
+      "mjpeg" -> "dce6d83d0afb9fcb0f5aac4781740dc0",
+      "pvid" -> "39af05a026f75bb8e22fcc668b397b43",
+      "mdct" -> "9df89dd1fdcb1e1e1c1ad3fbf40d9bde"))
   }
 
   test("full outer join keeps customers with no orders as zero rows") {
