@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver-run per round): times every SparkEntry query at
   * the SF pointed to by SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   * A warmup pass (flagship query) runs untimed first so JVM/codegen

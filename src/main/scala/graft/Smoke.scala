@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Replica of the driver's t1 smoke: SparkEntry.entry must return >0 rows
   * on sf0.001. Run: `sbt "runMain graft.Smoke"`.
   */

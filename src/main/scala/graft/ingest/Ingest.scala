@@ -209,7 +209,6 @@ object Ingest {
     * generated on executors from a range, not collected on the driver.
     */
   def syntheticBatch(s: SparkSession, rows: Int, seed: Long = 42L): DataFrame = {
-    import s.implicits._
     s.range(rows).select(
       (lit(1697049600000L) + col("id") * 1000L).as("timestamp"),
       pmod(col("id"), lit(24L)).as("timeOffsetHours"),

@@ -1269,7 +1269,7 @@ object Kql {
       */
     private def explicitKeyJoin(df: DataFrame, right: DataFrame,
         keyPairs: Vector[(String, String)], kind: String,
-        broadcastRight: Boolean = false,
+        broadcastRight: Boolean,
         dropRightKeys: Boolean = false): DataFrame = {
       // disambiguation by RENAME, not by alias: both sides routinely
       // share lineage (self-joins over the same source view), where

@@ -751,9 +751,8 @@ object Curation {
     * heap), row numbers assigned after the cut over 20 rows.
     */
   /** The part↔supplier PageRank graph, materialized ONCE: (edges with
-    * out-degrees, degree table, node count) — shared by the fixed-5
-    * snapshot ([[pagerank]]) and the iterate-to-threshold fixpoint
-    * ([[pagerankConverged]]).
+    * out-degrees, degree table, node count) — read by every round of
+    * [[prRanks]].
     */
   private def prGraph(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Double) = {
@@ -794,8 +793,7 @@ object Curation {
   private def q8(c: Column): Column = floor(c * lit(1e8) + lit(0.5)) / lit(1e8)
 
   /** One PageRank round: co-keyed join of the rank table onto the
-    * degree-annotated edges + one hash aggregate, grid-quantized,
-    * plan depth pinned by localCheckpoint.
+    * degree-annotated edges + one hash aggregate, grid-quantized.
     *
     * r15 optimization — the round is the engine's hottest iterated
     * plan (up to [[PrCap]] executions per query), so its shape is
@@ -830,7 +828,6 @@ object Curation {
       .select(col("node"), q8(lit(0.15) / lit(nNodes) +
         lit(0.85) * coalesce(col("sc").cast(DoubleType), lit(0.0))).as("pr"),
         col("ppr"))
-      .localCheckpoint(true)
   }
 
   /** The L1 residual Σ|pr_k − pr_{k−1}| between two grid-quantized
@@ -842,33 +839,37 @@ object Curation {
     sum(abs(col("pr").cast(DecimalType(18, 8)) -
       col("ppr").cast(DecimalType(18, 8)))).cast(DoubleType)
 
-  private def pagerank(s: SparkSession, dir: String): DataFrame = {
+  /** The PageRank driver loop ([[Rounds]]): at most `cap` rounds from
+    * the uniform start, stopping once `done` holds over the per-round L1
+    * residuals Σ|pr_k − pr_{k−1}| (the convergence evidence, round 11).
+    * Every pr is 1e-8-grid quantized, so the residual runs EXACTLY in
+    * decimal — both engines recover the grid point from the double and
+    * subtract exactly — as one bounded 1-row aggregate over the fresh
+    * checkpoint, read eagerly (the toscalar class). Returns the final
+    * rank table and the residuals.
+    */
+  private def prRanks(s: SparkSession, dir: String, cap: Int)(
+      done: Seq[Double] => Boolean): (DataFrame, Seq[Double]) = {
     val (edges, deg, nNodes) = prGraph(s, dir)
-    var ranks = deg.select(col("src").as("node"),
+    val uniform = deg.select(col("src").as("node"),
       q8(lit(1.0) / lit(nNodes)).as("pr")).localCheckpoint(true)
-    // per-iteration L1 residual Σ|pr_k − pr_{k−1}| — the convergence
-    // evidence that justifies the iteration count (round 11): every pr
-    // is 1e-8-grid quantized, so the diff/abs/sum runs EXACTLY in
-    // decimal (both engines recover the grid point from the double and
-    // subtract exactly) — one bounded 1-row aggregate per round over
-    // the already-checkpointed rank tables. The residual is read
-    // EAGERLY (the toscalar class, 1 row/round) so the superseded
-    // round's checkpoint blocks release immediately — the repo's
-    // measured rule (Text.scala releaseCheckpoint doc): un-released
-    // round checkpoints accumulate in storage memory and repeated
-    // invocation degrades run-over-run.
-    val residuals = Vector.newBuilder[Double]
-    for (_ <- 1 to 5) {
-      val prev = ranks
-      ranks = prStep(edges, nNodes, prev)
-      residuals += ranks.agg(prResidual.as("res")).head().getDouble(0)
-      Text.releaseCheckpoint(prev)
-    }
-    residuals.result().zipWithIndex.foldLeft(
-      ranks.orderBy(col("pr").desc, col("node")).limit(20)
-        .withColumn("rk",
-          row_number().over(Window.orderBy(col("pr").desc, col("node"))))
-        .select(col("rk"), col("node"), col("pr"))) { case (d, (r, i)) =>
+    val out = Rounds.run(uniform, cap)((ranks, _) => prStep(edges, nNodes, ranks))(
+      (ranks, _) => ranks.agg(prResidual.as("res")).head().getDouble(0))(done)
+    Rounds.release(edges)
+    Rounds.release(deg)
+    out
+  }
+
+  /** The top 20 (rk, node, pr) of a rank table. */
+  private def prTop20(ranks: DataFrame): DataFrame =
+    ranks.orderBy(col("pr").desc, col("node")).limit(20)
+      .withColumn("rk",
+        row_number().over(Window.orderBy(col("pr").desc, col("node"))))
+      .select(col("rk"), col("node"), col("pr"))
+
+  private def pagerank(s: SparkSession, dir: String): DataFrame = {
+    val (ranks, residuals) = prRanks(s, dir, 5)(_ => false)
+    residuals.zipWithIndex.foldLeft(prTop20(ranks)) { case (d, (r, i)) =>
         d.withColumn(s"res${i + 1}", lit(r)) }
       .orderBy("rk")
   }
@@ -894,42 +895,20 @@ object Curation {
     * from the fixpoint; this variant iterates until the L1 step falls
     * under [[PrRelEps]]·res_1 (cap [[PrCap]], guarantee-backed), so
     * the emitted rank table IS a fixpoint up to the documented
-    * tolerance. Same per-round plan as [[pagerank]] (one co-keyed
-    * join + one hash aggregate, lineage cut per round); the stopping
-    * decision reads the 1-row residual per round — a bounded driver
-    * action (the toscalar class), and the SAME decimal-exact residual
-    * the oracle replays, so both engines select the identical
-    * iteration count. Output carries (iters, resid) beside the top-20
-    * ranks. Scale: per-round cost is edge-linear; the round COUNT is
-    * data-independent (the contraction rate is d, whatever the data),
-    * so the 100 TB cost is cap·(one co-partitioned join pass).
+    * tolerance. Same loop as [[pagerank]] ([[prRanks]]); the stopping
+    * decision reads the SAME decimal-exact residual the oracle replays,
+    * so both engines select the identical iteration count. Output
+    * carries (iters, resid) beside the top-20 ranks. Scale: per-round
+    * cost is edge-linear; the round COUNT is data-independent (the
+    * contraction rate is d, whatever the data), so the 100 TB cost is
+    * cap·(one co-partitioned join pass).
     */
   private def pagerankConverged(s: SparkSession, dir: String): DataFrame = {
-    val (edges, deg, nNodes) = prGraph(s, dir)
-    var ranks = deg.select(col("src").as("node"),
-      q8(lit(1.0) / lit(nNodes)).as("pr")).localCheckpoint(true)
-    var k = 0
-    var res = Double.MaxValue
-    var res1 = Double.MaxValue
-    var converged = false
-    while (k < PrCap && !converged) {
-      k += 1
-      val prev = ranks
-      ranks = prStep(edges, nNodes, prev)
-      res = ranks.agg(prResidual.as("res")).head().getDouble(0)
-      // the residual action just materialized `ranks` and consumed
-      // `prev` — release the superseded round's checkpoint blocks NOW
-      // (the Text.releaseCheckpoint measured rule; without it up to
-      // PrCap node-sized rank tables pin storage memory)
-      Text.releaseCheckpoint(prev)
-      if (k == 1) res1 = res
-      converged = res < PrRelEps * res1
-    }
-    ranks.orderBy(col("pr").desc, col("node")).limit(20)
-      .withColumn("rk",
-        row_number().over(Window.orderBy(col("pr").desc, col("node"))))
-      .select(col("rk"), col("node"), col("pr"),
-        lit(k).as("iters"), lit(res).as("resid"))
+    val (ranks, residuals) =
+      prRanks(s, dir, PrCap)(rs => rs.last < PrRelEps * rs.head)
+    prTop20(ranks)
+      .withColumn("iters", lit(residuals.length))
+      .withColumn("resid", lit(residuals.last))
       .orderBy("rk")
   }
 
@@ -1373,10 +1352,8 @@ object Curation {
   }
 
   /** The trained weight table after `rounds` full-batch GD rounds — the
-    * checkpointed driver-loop pattern (q_dup_clusters / bpeLoop): the
-    * 65-row weight state materializes per round with `localCheckpoint`
-    * and the superseded round's blocks release immediately, so plan
-    * depth stays constant at any training depth. The feature table is
+    * [[Rounds]] driver loop over the 65-row weight state, so plan depth
+    * stays constant at any training depth. The feature table is
     * checkpointed ONCE and every round re-reads the materialized blocks
     * — the corpus is scanned exactly once no matter how many rounds run
     * (at 100 TB the featurize pass dominates; each round after it costs
@@ -1387,8 +1364,8 @@ object Curation {
       docsOverride: Option[DataFrame] = None): DataFrame = {
     val (w, feats, labels) =
       classifierFit(s, dir, rounds, trainOnly, docsOverride)
-    Text.releaseCheckpoint(feats)
-    Text.releaseCheckpoint(labels)
+    Rounds.release(feats)
+    Rounds.release(labels)
     w
   }
 
@@ -1409,15 +1386,11 @@ object Curation {
       when(col("source").isin(CuratedSources: _*), 1L).otherwise(0L).as("y"))
       .localCheckpoint(true)
     val n = labels.agg(cnt.as("n"))
-    var w: DataFrame = s.range(-1, 64)
+    val w0 = s.range(-1, 64)
       .select(col("id").as("bucket"), lit(0.0).as("w"))
       .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val next = classifierRound(feats, labels, n, w).localCheckpoint(true)
-      Text.releaseCheckpoint(w)
-      w = next
-    }
-    (w, feats, labels)
+    (Rounds.fixed(w0, rounds)((w, _) => classifierRound(feats, labels, n, w)),
+      feats, labels)
   }
 
   /** The held-out split predicate shared by training and evaluation —
@@ -1537,7 +1510,7 @@ object Curation {
     // is featurized exactly once across training AND application
     val (w, feats, labels) = classifierFit(s, dir, ClassifierRounds,
       trainOnly = false)
-    Text.releaseCheckpoint(labels)
+    Rounds.release(labels)
     val scores = feats.join(broadcast(w), "bucket")
       .groupBy("doc_id")
       .agg(sum((col("w") * col("sv")).cast(DecimalType(18, 8))).as("m"))
@@ -1582,7 +1555,7 @@ object Curation {
     * every round replays bit-identically in DuckDB where exp() could
     * drift an ulp. Scale shape: ONE corpus pass builds the per-source
     * loss table; every round after that is arithmetic on the
-    * |sources|-row table (localCheckpoint'd so round r+1 does not
+    * |sources|-row table ([[Rounds]], so round r+1 does not
     * re-derive the corpus scan through round r's lineage) with two
     * broadcast 1-row reductions. Weights sum to 1 by construction.
     */
@@ -1609,13 +1582,13 @@ object Curation {
     // identical doubles cannot
     def r8(c: org.apache.spark.sql.Column) =
       floor(c * lit(1.0e8) + lit(0.5)) / lit(1.0e8)
-    var t = srcLoss
+    val t0 = srcLoss
       .crossJoin(broadcast(srcLoss.agg(cnt.as("k"))))
       .select(col("source"), col("n_tokens"), col("loss"),
         r8(lit(1.0) / col("k").cast(DoubleType)).as("w"))
       .localCheckpoint(true)
-    Text.releaseCheckpoint(srcLoss)
-    for (_ <- 1 to DomainRounds) {
+    Rounds.release(srcLoss)
+    val t = Rounds.fixed(t0, DomainRounds) { (t, _) =>
       // ⟨w, loss⟩ multiplies in DECIMAL: w (8-dp grid) × loss (4-dp
       // grid) is exactly a 12-dp value, so decimal×decimal is EXACT —
       // a double product cast to scale 8 would round, and grid×grid
@@ -1629,12 +1602,9 @@ object Curation {
           (col("w") * (lit(1.0) + lit(0.5) * (col("loss") - col("wl")))).as("wf"))
       val z = f.agg(sum(col("wf").cast(DecimalType(18, 8)))
         .cast(DoubleType).as("z"))
-      val next = f.crossJoin(broadcast(z))
+      f.crossJoin(broadcast(z))
         .select(col("source"), col("n_tokens"), col("loss"),
           r8(col("wf") / col("z")).as("w"))
-        .localCheckpoint(true)
-      Text.releaseCheckpoint(t)
-      t = next
     }
     t.select(col("source"), col("n_tokens"), col("loss"), col("w").as("weight"))
       .orderBy("source")
@@ -1737,7 +1707,7 @@ object Curation {
     * restricted to documents matching `pred`.
     */
   private def classifierFeatureCtes(sfx: String, pred: String,
-      tbl: String = "documents"): String =
+      tbl: String): String =
     s"tk$sfx AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM $tbl WHERE $pred), " +
       s"hh$sfx AS (SELECT doc_id, CAST(${Text.hexSql("md5('fh:' || word)", 1, 12)} AS BIGINT) AS h FROM tk$sfx), " +
       s"fx$sfx AS (SELECT doc_id, h % 64 AS bucket, CAST(sum(CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS sv FROM hh$sfx GROUP BY doc_id, bucket), " +

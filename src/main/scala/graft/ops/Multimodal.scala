@@ -1594,6 +1594,7 @@ object Multimodal {
         val p = bb.position()
         chunk match {
           case "fmt " =>
+            require(len >= 16, "truncated 'fmt ' chunk")
             val (fmt, ch, sr) = (bb.getShort(), bb.getShort(), bb.getInt())
             bb.getInt(); bb.getShort() // byte rate, block align
             val b = bb.getShort()

@@ -243,7 +243,6 @@ object Physical {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      import s.implicits._
       val base = Tables.events(s, dir).select(col("user_id"), col("value"))
       val hot = s.range(100000).select(
         lit(0L).as("user_id"),

@@ -1,0 +1,75 @@
+package graft.ops
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The driver loop of every iterative operator — BPE training and
+  * replay, the unigram EM, label propagation, PageRank, classifier GD,
+  * domain reweighting, k-means and k-means|| seeding: the Pregel-style
+  * superstep, written once. The driver only coordinates rounds; no data
+  * reaches it beyond the stop rule's bounded read.
+  *
+  * Contract of [[run]], for rounds k = 1, 2, … up to `cap`:
+  *  1. `step(state, round)` builds the next state; any frame it hands to
+  *     `round.pin` is materialized at once and lives for this round only;
+  *  2. the next state then materializes with `localCheckpoint(true)`, so
+  *     plan depth stays constant at any round count;
+  *  3. only then is the stop rule read: `read(next, state)` gives the
+  *     round's stop value, and the loop ends once `stop` holds over the
+  *     values read so far;
+  *  4. last, the superseded state and the round's pins are released.
+  *
+  * `init` must already be materialized (a checkpoint). The loop owns it
+  * and releases it at the end of round 1, as it does every superseded
+  * state. The final state is the caller's, to release once no returned
+  * frame reads it: a released local checkpoint fails its next read.
+  */
+private[graft] object Rounds {
+
+  /** One round in flight: its 1-based number and its round-scoped pins. */
+  final class Round private[Rounds] (val k: Int) {
+    private[Rounds] val pins = Seq.newBuilder[DataFrame]
+
+    /** `df` materialized now, and released at the end of this round. */
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.localCheckpoint(true)
+      pins += p
+      p
+    }
+  }
+
+  /** Runs at most `cap` rounds from `init`; returns the final state and
+    * the stop values read, one per round run.
+    */
+  def run[A](init: DataFrame, cap: Int)(step: (DataFrame, Round) => DataFrame)(
+      read: (DataFrame, DataFrame) => A)(stop: Seq[A] => Boolean): (DataFrame, Seq[A]) = {
+    var state = init
+    var reads = Vector.empty[A]
+    var done = false
+    while (!done && reads.length < cap) {
+      val round = new Round(reads.length + 1)
+      val next = step(state, round).localCheckpoint(true)
+      reads :+= read(next, state)
+      done = stop(reads)
+      (state +: round.pins.result()).foreach(release)
+      state = next
+    }
+    (state, reads)
+  }
+
+  /** Exactly `n` rounds, no stop rule; returns the final state. */
+  def fixed(init: DataFrame, n: Int)(step: (DataFrame, Round) => DataFrame): DataFrame =
+    run(init, n)(step)((_, _) => ())(_ => false)._1
+
+  /** Release a localCheckpoint's pinned blocks as soon as nothing reads
+    * them. ContextCleaner would eventually do this on GC, but
+    * "eventually" is not good enough under repeated invocation:
+    * un-released round checkpoints accumulate in storage memory and each
+    * run gets slower than the last (measured 5.7 s → 33.8 s across three
+    * back-to-back reps at sf0.1).
+    */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRDD => lr.rdd
+    }.foreach(_.unpersist(blocking = false))
+}

@@ -741,48 +741,53 @@ object Text {
         "CASE WHEN length(w) < 1 THEN CAST(array() AS ARRAY<STRING>) " +
           "ELSE transform(sequence(1, length(w)), i -> substring(w, i, 1)) END"))
 
-  /** N-round BPE merge driver loop — the q_dup_clusters fixpoint
-    * pattern applied to tokenizer training: each round materializes the
-    * vocabulary-bounded state with `localCheckpoint` (plan depth stays
-    * constant — an unrolled 64-merge plan would be thousands of nodes)
-    * and releases the superseded round's blocks immediately. Per round:
-    * one map-side-combined pair count, a 5-row TakeOrdered candidate
-    * table (checkpointed — it is both the q_bpe_train output and the
-    * broadcast merge row), one greedy fold over the vocab. The driver
-    * coordinates rounds only; no data ever reaches it. Returns the
-    * state after `n` merges (after n−1 when `needFinal` is false — the
-    * trainer output needs candidates, not the final fold) plus each
-    * round's checkpointed top-5 table.
+  /** Round `k`'s 5-row TakeOrdered candidate table over a vocab state,
+    * checkpointed: it is both the q_bpe_train output and the source of
+    * the round's merge row, so pair counting runs once per round.
+    */
+  private def bpeTop(cur: DataFrame, k: Int): DataFrame =
+    bpePairCounts(cur)
+      .orderBy(col("c").desc, col("a"), col("b")).limit(5)
+      .withColumn("step", lit(k))
+      .localCheckpoint(true)
+
+  /** The rank-1 (a, b) row of a top-5 table — the round's merge. */
+  private def bpeRank1(top: DataFrame): DataFrame =
+    top.orderBy(col("c").desc, col("a"), col("b")).limit(1)
+
+  /** One merge round over a (w, f, syms) vocab state: the 1-row (a, b)
+    * merge table broadcast onto the vocab and one greedy fold.
+    */
+  private def bpeMerge(cur: DataFrame, ab: DataFrame): DataFrame =
+    cur.join(broadcast(ab.select(col("a").as("ta"), col("b").as("tb"))),
+        lit(true), "left")
+      .withColumn("syms", expr(bpeMergeApply)).drop("ta", "tb")
+
+  /** N-round BPE merge driver loop ([[Rounds]]) over the
+    * vocabulary-bounded state (an unrolled 64-merge plan would be
+    * thousands of nodes). Per round: one map-side-combined pair count,
+    * the top-5 table, one greedy fold over the vocab. Returns the state
+    * after `n` merges (after n−1 when `needFinal` is false — the trainer
+    * output needs candidates, not the final fold) plus each round's
+    * checkpointed top-5 table.
     */
   private def bpeLoop(s: SparkSession, dir: String, n: Int,
       needFinal: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    var cur = bpeInitVocab(s, dir).localCheckpoint(true)
     val tops = Seq.newBuilder[DataFrame]
-    for (k <- 1 to n) {
-      val top = bpePairCounts(cur)
-        .orderBy(col("c").desc, col("a"), col("b")).limit(5)
-        .withColumn("step", lit(k))
-        .localCheckpoint(true)
+    val fin = Rounds.fixed(bpeInitVocab(s, dir).localCheckpoint(true),
+        if (needFinal) n else n - 1) { (cur, r) =>
+      val top = bpeTop(cur, r.k)
       tops += top
-      if (needFinal || k < n) {
-        // the merge row is rank 1 of the already-materialized top-5 —
-        // pair counting runs exactly once per round
-        val t1 = top.orderBy(col("c").desc, col("a"), col("b")).limit(1)
-          .select(col("a").as("ta"), col("b").as("tb"))
-        val merged = cur.join(broadcast(t1), lit(true), "left")
-          .withColumn("syms", expr(bpeMergeApply)).drop("ta", "tb")
-          .localCheckpoint(true)
-        releaseCheckpoint(cur)
-        cur = merged
-      }
+      bpeMerge(cur, bpeRank1(top))
     }
-    (cur, tops.result())
+    if (!needFinal) tops += bpeTop(fin, n)
+    (fin, tops.result())
   }
 
   private def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (fin, tops) = bpeLoop(s, dir, BpeMerges, needFinal = false)
-    releaseCheckpoint(fin)
+    Rounds.release(fin)
     // rank window runs on each round's 5 surviving rows, never on the
     // vocab²-sized pair table
     tops.map(_.withColumn("rnk", row_number().over(
@@ -828,7 +833,7 @@ object Text {
   private[graft] def bpeWordLengthsAt(s: SparkSession, dir: String,
       n: Int): DataFrame = {
     val (fin, tops) = bpeLoop(s, dir, n)
-    tops.foreach(releaseCheckpoint)
+    tops.foreach(Rounds.release)
     fin.select(col("w"), size(col("syms")).as("n_bpe"))
   }
 
@@ -855,28 +860,18 @@ object Text {
     */
   private def bpePersist(s: SparkSession, dir: String): DataFrame = {
     val (fin, tops) = bpeLoop(s, dir, BpeMerges, needFinal = false)
-    releaseCheckpoint(fin)
-    val merges = tops.map(_.orderBy(col("c").desc, col("a"), col("b")).limit(1)
-        .select(col("step"), col("a"), col("b")))
+    Rounds.release(fin)
+    val merges = tops.map(bpeRank1(_).select(col("step"), col("a"), col("b")))
       .reduce(_.unionByName(_))
     val tokPath = java.nio.file.Files.createTempDirectory("graft_bpe_tok")
     val tok = tokPath.toString
     try {
       merges.coalesce(1).write.mode("overwrite").parquet(s"$tok/merges")
-      tops.foreach(releaseCheckpoint)
+      tops.foreach(Rounds.release)
       val loaded = s.read.parquet(s"$tok/merges")
-      var cur = bpeInitVocab(s, dir).localCheckpoint(true)
-      for (k <- 1 to BpeMerges) {
-        // one broadcast 1-row merge per round, exactly the trainer's
-        // apply path — but driven by the LOADED table, not a fresh fit
-        val t1 = loaded.filter(col("step") === k)
-          .select(col("a").as("ta"), col("b").as("tb"))
-        val merged = cur.join(broadcast(t1), lit(true), "left")
-          .withColumn("syms", expr(bpeMergeApply)).drop("ta", "tb")
-          .localCheckpoint(true)
-        releaseCheckpoint(cur)
-        cur = merged
-      }
+      // the trainer's merge round, driven by the LOADED table, not a fresh fit
+      val cur = Rounds.fixed(bpeInitVocab(s, dir).localCheckpoint(true),
+        BpeMerges)((v, r) => bpeMerge(v, loaded.filter(col("step") === r.k)))
       val wordLen = cur.select(col("w"), size(col("syms")).as("n_bpe"))
       val out = Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens).as("w"))
@@ -887,7 +882,7 @@ object Text {
           sum(col("n_bpe")).as("n_bpe"))
         .orderBy("doc_id")
         .localCheckpoint(true)
-      releaseCheckpoint(cur)
+      Rounds.release(cur)
       out
     } finally {
       import scala.jdk.CollectionConverters._
@@ -1005,9 +1000,9 @@ object Text {
   }
 
   /** Train the unigram model: candidate harvest → top-K multi-char +
-    * all single chars → [[UnigramRounds]] hard-EM rounds. Returns the
-    * final (p, c, cost) model and the checkpointed word table — the
-    * bpeLoop checkpoint/release discipline.
+    * all single chars → [[UnigramRounds]] hard-EM rounds ([[Rounds]]).
+    * Returns the final (p, c, cost) model and the checkpointed word
+    * table.
     */
   private def uniModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val words = uniWords(s, dir).localCheckpoint(true)
@@ -1016,14 +1011,11 @@ object Text {
       .localCheckpoint(true)
     val multi0 = cand.filter(length(col("p")) >= 2)
       .orderBy(col("c").desc, col("p")).limit(UnigramPieces)
-    var vocab = cand.filter(length(col("p")) === 1)
+    val vocab0 = cand.filter(length(col("p")) === 1)
       .unionByName(multi0).localCheckpoint(true)
-    releaseCheckpoint(cand)
-    for (_ <- 1 to UnigramRounds) {
-      val nv = uniEmRound(words, uniCosts(vocab), chars).localCheckpoint(true)
-      releaseCheckpoint(vocab)
-      vocab = nv
-    }
+    Rounds.release(cand)
+    val vocab = Rounds.fixed(vocab0, UnigramRounds)(
+      (v, _) => uniEmRound(words, uniCosts(v), chars))
     (uniCosts(vocab).localCheckpoint(true), words)
   }
 
@@ -1326,18 +1318,6 @@ object Text {
     * Oracled against DuckDB's recursive-CTE transitive closure, which is
     * exactly the min-reachable-label fixpoint.
     */
-  /** Release a localCheckpoint's pinned blocks as soon as the round that
-    * superseded it is materialized. ContextCleaner would eventually do
-    * this on GC, but "eventually" is not good enough under repeated
-    * invocation: un-released round checkpoints accumulate in storage
-    * memory and each run gets slower than the last (measured 5.7 s →
-    * 33.8 s across three back-to-back reps at sf0.1).
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   private def dupClusters(s: SparkSession, dir: String): DataFrame = {
     // materialize the pair list ONCE before the union: Spark has no
     // common-subplan elimination across Union branches, so an
@@ -1347,32 +1327,24 @@ object Text {
       .localCheckpoint(true)
     val edges = pairs
       .union(pairs.select(col("bi").as("ai"), col("ai").as("bi")))
-    var labels = edges.select(col("ai").as("node")).distinct()
+    val labels0 = edges.select(col("ai").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint(true)
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      // a near-dup graph with diameter beyond this is pathological input,
-      // and a truncated fixpoint would be silently WRONG labels — fail loud
-      rounds += 1
-      require(rounds <= 64, s"label propagation did not converge in $rounds rounds")
-      val prop = edges
+    val (labels, converged) = Rounds.run(labels0, 64) { (labels, _) =>
+      edges
         .join(labels, edges("ai") === labels("node"))
         .select(col("bi").as("node"), col("label"))
         .union(labels)
         .groupBy("node").agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
-      converged = prop
+    }((prop, labels) => prop
         .join(labels.withColumnRenamed("label", "old"), "node")
         .filter(col("label") =!= col("old"))
-        .isEmpty
-      // prop is materialized and the convergence check has consumed the
-      // old labels — its blocks are dead from here on
-      releaseCheckpoint(labels)
-      labels = prop
-    }
-    releaseCheckpoint(pairs)
+        .isEmpty)(_.last)
+    // a near-dup graph with diameter beyond the cap is pathological
+    // input, and a truncated fixpoint would be silently WRONG labels
+    require(converged.last,
+      s"label propagation did not converge in ${converged.length} rounds")
+    Rounds.release(pairs)
     labels
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
       .orderBy("doc_id")

@@ -308,7 +308,7 @@ object Vectors {
     * lineage rather than caching between iterations — correct for the
     * oracle path and cheap at 2 unrolled iterations; a long-running
     * production training loop would persist the assignment per round
-    * (the dupClusters localCheckpoint pattern).
+    * (a [[Rounds]] loop).
     */
   private def kmeansFit(e: DataFrame): (DataFrame, DataFrame) = {
     // nlist ≈ √N, derived from the corpus itself as a broadcast 1-row
@@ -341,22 +341,18 @@ object Vectors {
     * same init, and the recall panel's improved-coarse branches reuse
     * the already-materialized 2-round state instead of refitting from
     * scratch. Returns (final assignment, final centroid table).
+    *
+    * The loop state ([[Rounds]]) is the centroid table (≤ nlist rows):
+    * the next round's assignment and BOTH returned frames consume it
+    * through different prunings, and without the pin the caller's two
+    * checkpoint jobs re-derived the whole continue chain twice.
     */
-  private def kmeansContinue(e: DataFrame, a: DataFrame,
+  private[graft] def kmeansContinue(e: DataFrame, a: DataFrame,
       rounds: Int): (DataFrame, DataFrame) = {
-    require(rounds > 0, "kmeansContinue needs at least one round " +
-      "(zero rounds would return a null centroid table)")
-    var cur = a
-    var cents: DataFrame = null
-    for (_ <- 0 until rounds) {
-      // pin each round's centroid table (≤ nlist rows): the next
-      // round's assignment and BOTH returned frames consume it through
-      // different prunings, and without the pin the caller's two
-      // checkpoint jobs re-derived the whole continue chain twice
-      cents = kmCentroids(cur).localCheckpoint(true)
-      cur = kmAssign(e, cents)
-    }
-    (cur, cents)
+    require(rounds > 0, "kmeansContinue needs at least one round")
+    val cents = Rounds.fixed(kmCentroids(a).localCheckpoint(true), rounds - 1)(
+      (c, _) => kmCentroids(kmAssign(e, c)))
+    (kmAssign(e, cents), cents)
   }
 
   // candidate table (cid, cand) as a centroid table for kmAssign:
@@ -397,31 +393,30 @@ object Vectors {
     * replays the draws (md5 hex fold), the decimal potential sums,
     * and the argmax tie-breaks CTE for CTE.
     */
-  private def kmppFit(e: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def kmppFit(e: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val kDf = e.agg(ceil(sqrt(count(lit(1)))).cast("double").as("k"))
-    var cands = e.orderBy("vec_id").limit(1)
+    val seed = e.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("cid"), col("embedding").as("cand"))
       .localCheckpoint(true)
-    for (r <- 1 to 2) {
+    val cands = Rounds.fixed(seed, 2) { (cands, r) =>
       // pin the round's potential pass: `scored` feeds both the Σd
       // reduction and the draw filter, and without the pin the one
       // corpus argmax pass ran twice per sampling round
-      val scored = kmAssign(e, kmppCents(cands))
-        .select(col("vec_id"), col("embedding"), (lit(1.0) - col("cos")).as("d"))
-        .localCheckpoint(true)
+      val scored = r.pin(kmAssign(e, kmppCents(cands))
+        .select(col("vec_id"), col("embedding"), (lit(1.0) - col("cos")).as("d")))
       val tot = scored.agg(
         sum(col("d").cast(DecimalType(30, 12))).cast(DoubleType).as("td"))
       // anti-join keeps a candidate from entering twice (a re-draw has
       // d ≈ 0 and essentially never fires, but a duplicate cid would
       // make the ordinal assignment order-ambiguous in both engines)
       val drawn = scored.crossJoin(broadcast(tot)).crossJoin(broadcast(kDf))
-        .filter(Ox.mdUniform(s"kmpp:$r:", col("vec_id")).cast("double") /
+        .filter(Ox.mdUniform(s"kmpp:${r.k}:", col("vec_id")).cast("double") /
           lit(16777216.0) < col("k") * col("d") / col("td"))
         .select(col("vec_id").as("cid"), col("embedding").as("cand"))
         .join(broadcast(cands.select("cid")), Seq("cid"), "left_anti")
-      cands = cands.unionByName(drawn).localCheckpoint(true)
+      cands.unionByName(drawn)
     }
     val w = kmAssign(e, kmppCents(cands))
       .groupBy(col("c").as("ordc"))
@@ -435,7 +430,10 @@ object Vectors {
       .filter(col("rn") <= col("k"))
       .select((col("rn") - 1).cast("int").as("c"),
         transform(col("cand"), v => v.cast("double")).as("centroid"))
-    kmeansContinue(e, kmAssign(e, init), 2)
+    // the continue's first centroid table is the last read of `cands`
+    val fit = kmeansContinue(e, kmAssign(e, init), 2)
+    Rounds.release(cands)
+    fit
   }
 
   private def embedKmeans(s: SparkSession, dir: String): DataFrame = {
@@ -515,7 +513,7 @@ object Vectors {
     * Returns (c, centroid, qid, qv, rn) per probed list.
     */
   private def probe(s: SparkSession, c2: DataFrame, qf: DataFrame,
-      mult: Int = 1): DataFrame = {
+      mult: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val np = c2.agg((ceil(sqrt(count(lit(1)))) * mult).cast("int").as("np"))
     c2.crossJoin(broadcast(qf))
@@ -1253,8 +1251,8 @@ object Vectors {
     * (vec_id, m, code)) — the rows a production writer APPENDS to the
     * persisted q_ann_persist tables.
     */
-  private[graft] def encodeOnto(s: SparkSession, c2: DataFrame,
-      pcb2: DataFrame, vecs: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def encodeOnto(c2: DataFrame, pcb2: DataFrame,
+      vecs: DataFrame): (DataFrame, DataFrame) = {
     val resN = residuals(kmAssign(vecs, c2), c2)
     (resN.select(col("vec_id"), col("cl")),
       pqAssign(subspaces(resN, "remb", 4), pcb2)
@@ -1321,7 +1319,7 @@ object Vectors {
     */
   private def annUpsert(s: SparkSession, dir: String): DataFrame = {
     val (c2, pcb2, codesB, asgnB, _) = upsertParts(s, dir)
-    val (asgnN, codesN) = encodeOnto(s, c2, pcb2,
+    val (asgnN, codesN) = encodeOnto(c2, pcb2,
       emb(s, dir).filter(col("vec_id") % 5 === 4))
     serveFunnel(s, dir, c2, pcb2, codesB.unionByName(codesN),
       asgnB.unionByName(asgnN))

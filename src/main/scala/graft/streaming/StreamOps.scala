@@ -975,7 +975,7 @@ object StreamOps {
         val s = batch.sparkSession
         val c2 = s.read.parquet(s"$idxDir/coarse")
         val pcb2 = s.read.parquet(s"$idxDir/codebooks")
-        val (asgnN, codesN) = graft.ops.Vectors.encodeOnto(s, c2, pcb2, batch)
+        val (asgnN, codesN) = graft.ops.Vectors.encodeOnto(c2, pcb2, batch)
         codesN.write.mode("overwrite").parquet(s"$idxDir/codes_inc/bid=$batchId")
         asgnN.write.mode("overwrite").parquet(s"$idxDir/assign_inc/bid=$batchId")
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {

@@ -7,7 +7,11 @@ import graft.{GraftSession, SparkEntry}
   * the QueryPlanningTracker phase times (analysis / optimization /
   * planning), total wall, and executed-plan shape counts (exchanges,
   * parquet scans, sorts, codegen spans) — the evidence §1 of the
-  * optimization guide asks for before touching an operator.
+  * optimization guide asks for before touching an operator. After each
+  * run it also prints the RDDs still pinned in the session (persisted
+  * or `localCheckpoint`ed) and their storage bytes, so an iterative
+  * operator that leaks its round state shows as a count that grows
+  * from cold to warm.
   *
   * Run: `sbt "runMain graft.tools.Diag q_a q_b ..."`.
   */
@@ -67,12 +71,15 @@ object Diag {
         val ep = df.queryExecution.executedPlan.toString
         def c(p: String) = p.r.findAllIn(ep).length
         Thread.sleep(200) // let listener drain
+        val stored = spark.sparkContext.getRDDStorageInfo
         println(f"DIAG $n%-24s $tag build=${(tBuild - t0) / 1e9}%.2fs " +
           f"exec=${(tEnd - tBuild) / 1e9}%.2fs total=${(tEnd - t0) / 1e9}%.2fs " +
           s"| jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
           s"stageMs=${stageMs.get} " +
           s"| exch=${c("Exchange")} scans=${c("Scan parquet")} " +
-          s"sorts=${c("\\bSort\\b")} wsc=${c("WholeStageCodegen")}")
+          s"sorts=${c("\\bSort\\b")} wsc=${c("WholeStageCodegen")} " +
+          s"| pinned=${spark.sparkContext.getPersistentRDDs.size} " +
+          s"pinnedBytes=${stored.map(i => i.memSize + i.diskSize).sum}")
         if (tag == "warm") {
           import scala.jdk.CollectionConverters._
           slow.asScala.toSeq.sortBy(-_._1).take(12).foreach { case (_, l) =>

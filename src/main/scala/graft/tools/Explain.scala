@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.GraftExtensions
 
 /** Plan-inspection tool: dumps the formatted physical plan of every
   * SparkEntry query to a file for scale review (pushdown, broadcast

@@ -882,7 +882,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("pagerank converged: the rank table is a fixpoint up to the documented tolerance") {
-    val rows = q("q_pagerank_converged")
+    val rows = assertNoLeakedPins(q("q_pagerank_converged"))(Seq(_))
       .select("rk", "node", "pr", "iters", "resid")
       .as[(Int, String, Double, Int, Double)].collect().toSeq
     assert(rows.length === 20 && rows.map(_._1) === (1 to 20))

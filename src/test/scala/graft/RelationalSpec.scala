@@ -288,6 +288,29 @@ class RelationalSpec extends SparkSpec {
     val stereo = Wav.encode(samples, Wav.SampleRate)
     stereo(22) = 2 // channels field inside fmt
     intercept[IllegalArgumentException] { Wav.decode(stereo) }
+    // a `fmt ` chunk shorter than its 16 standard bytes: as the last
+    // chunk it must not over-read the buffer, and before `data` it must
+    // not take its byte rate, block align and bits from the next header
+    def riff(chunks: Array[Byte]*): Array[Byte] = {
+      val body = "WAVE".getBytes("US-ASCII") ++ chunks.flatten
+      val bb = java.nio.ByteBuffer.allocate(8 + body.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("US-ASCII")).putInt(body.length).put(body).array()
+    }
+    def chunk(id: String, payload: Array[Byte]): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.put(id.getBytes("US-ASCII")).putInt(payload.length).put(payload).array()
+    }
+    val fmt8 = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putShort(1).putShort(1).putInt(Wav.SampleRate).array()
+    intercept[IllegalArgumentException] {
+      Wav.decode(riff(chunk("junk", new Array[Byte](16)), chunk("fmt ", fmt8)))
+    }
+    // the data length 0x00100000 reads as block align 0, bits 16
+    intercept[IllegalArgumentException] {
+      Wav.decode(riff(chunk("fmt ", fmt8), chunk("data", new Array[Byte](1 << 20))))
+    }
     // features recompute locally: energy/zcr/bands are exact integers
     val (energy, zcr, bands) = Wav.features(samples)
     assert(energy === samples.map(s => s.toLong * s).sum)

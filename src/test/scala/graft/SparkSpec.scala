@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs: one local session per suite,
@@ -18,6 +19,22 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
+
+  /** Runs `call` and asserts that every RDD it pinned (`localCheckpoint`
+    * or persist) and did not release is still read by one of the frames
+    * `returned` picks from its result: a round state an iterative loop
+    * forgot to release fails here. Returns the result.
+    */
+  def assertNoLeakedPins[T](call: => T)(returned: T => Seq[DataFrame]): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = call
+    val read = returned(out).flatMap(_.queryExecution.analyzed.collect {
+      case lr: LogicalRDD => lr.rdd.id
+    }).toSet
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before -- read
+    assert(leaked.isEmpty, s"pinned RDDs no returned frame reads: $leaked")
+    out
+  }
 
   /** Runs `body` with the given session confs set, then restores them. */
   def withConfs[T](kv: (String, String)*)(body: => T): T = {

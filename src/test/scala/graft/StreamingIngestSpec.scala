@@ -267,7 +267,7 @@ class StreamingIngestSpec extends SparkSpec {
     // replay idempotence: re-encoding the LAST batch overwrites its own
     // generation — counts and the served answer are unchanged
     val s3 = spark.createDataset(b3).toDF("vec_id", "embedding")
-    val (ra, rc) = graft.ops.Vectors.encodeOnto(spark, lc2, lpcb2, s3)
+    val (ra, rc) = graft.ops.Vectors.encodeOnto(lc2, lpcb2, s3)
     rc.write.mode("overwrite").parquet(s"$idxDir/codes_inc/bid=2")
     ra.write.mode("overwrite").parquet(s"$idxDir/assign_inc/bid=2")
     val (_, _, lcodes2, lasgn2) = StreamOps.loadVectorIndex(spark, idxDir)
@@ -280,7 +280,7 @@ class StreamingIngestSpec extends SparkSpec {
     // has not deleted yet (simulated bid=0 leftover) must be INVISIBLE
     // to the reader — ADC sums would double-count duplicated code rows
     val s1 = spark.createDataset(b1).toDF("vec_id", "embedding")
-    val (la, lc) = graft.ops.Vectors.encodeOnto(spark, lc2, lpcb2, s1)
+    val (la, lc) = graft.ops.Vectors.encodeOnto(lc2, lpcb2, s1)
     lc.write.mode("overwrite").parquet(s"$idxDir/codes_inc/bid=0")
     la.write.mode("overwrite").parquet(s"$idxDir/assign_inc/bid=0")
     val (_, _, lcodes3, lasgn3) = StreamOps.loadVectorIndex(spark, idxDir)

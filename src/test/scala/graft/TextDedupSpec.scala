@@ -385,7 +385,7 @@ class TextDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cc").toString
     docs.toDF("doc_id", "text", "lang", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = SparkEntry.queries("q_dup_clusters")(spark, dir)
+    val got = assertNoLeakedPins(SparkEntry.queries("q_dup_clusters")(spark, dir))(Seq(_))
       .as[(Long, Long)].collect().toMap
     assert(got === Map(10L -> 10L, 11L -> 10L, 12L -> 10L),
       s"clusters: $got") // 99 has no near pair and stays out

@@ -287,6 +287,21 @@ class VectorSpec extends SparkSpec {
     assert(trained > 0.0, "cosine-to-own-centroid should be positive on real clusters")
   }
 
+  test("k-means loops release every round's pinned state, and only that") {
+    import graft.ops.Vectors.{kmeansContinue, kmppFit}
+    val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
+    val a = e.withColumn("c", (col("vec_id") % 4).cast("int"))
+    val n = e.count()
+    val fits = Seq(
+      assertNoLeakedPins(kmeansContinue(e, a, 2)) { case (x, y) => Seq(x, y) },
+      assertNoLeakedPins(kmppFit(e)) { case (x, y) => Seq(x, y) })
+    // the returned frames still read: nothing they depend on was released
+    fits.foreach { case (asgn, cents) =>
+      assert(asgn.count() === n)
+      assert(cents.count() > 0)
+    }
+  }
+
   test("IVF-PQ: probed-list candidates, code-table scoring, ADC ranks near-neighbours first") {
     val rows = q("q_ann_ivfpq").collect()
     assert(rows.length === 10)
@@ -525,7 +540,7 @@ class VectorSpec extends SparkSpec {
     // so an upsert of an already-indexed vector changes nothing)
     val (c2, pcb2, codesB, asgnB, base) =
       graft.ops.Vectors.upsertParts(spark, sfDir)
-    val (asgnRe, codesRe) = graft.ops.Vectors.encodeOnto(spark, c2, pcb2, base)
+    val (asgnRe, codesRe) = graft.ops.Vectors.encodeOnto(c2, pcb2, base)
     assert(codesRe.collect().toSet === codesB.collect().toSet)
     assert(asgnRe.collect().toSet === asgnB.collect().toSet)
     // every incoming vector lands in the merged index exactly once —
@@ -533,7 +548,7 @@ class VectorSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding")
     val incoming = e.filter($"vec_id" % 5 === 4)
-    val (asgnN, codesN) = graft.ops.Vectors.encodeOnto(spark, c2, pcb2, incoming)
+    val (asgnN, codesN) = graft.ops.Vectors.encodeOnto(c2, pcb2, incoming)
     val nNew = incoming.count()
     assert(asgnN.count() === nNew)
     assert(codesN.count() === 4 * nNew)
