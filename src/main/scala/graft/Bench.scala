@@ -21,16 +21,13 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the bench contract is local[32]; SPARK_GRAFT_CPUS only overrides for
     // local iteration on smaller machines
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus)
+    val spark = tools.Runs.session("32")
     // warmup: session, codecs, codegen, file-source paths
-    try SparkEntry.queries("q_agg_group")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    tools.Runs.rep(spark, "q_agg_group", sfDir)
     // q_bucketed_join amortizes its shuffle into a one-time bucketed table
     // write; warm it so the timed pass measures the steady-state
     // (exchange-free) join, not the CTAS it exists to amortize
-    try SparkEntry.queries("q_bucketed_join")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    tools.Runs.rep(spark, "q_bucketed_join", sfDir)
     // two timed reps per query, BOTH always attempted: the headline
     // number is the MIN of the successful reps (warm steady-state cost —
     // this host shows ±45% single-run noise, so one cold reading is not
@@ -38,16 +35,9 @@ object Bench {
     // `queries_cold` (-1 if it failed). A rep failure never silently
     // discards the other rep's valid measurement, and never hides: every
     // failed rep is listed in `rep_errors`.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        // a failed query must never read as a fast success: report -1
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      val cold = rep()
-      val second = rep()
+    val results = tools.Runs.select(Nil).map { name =>
+      val cold = tools.Runs.rep(spark, name, sfDir).secs
+      val second = tools.Runs.rep(spark, name, sfDir).secs
       val successes = Seq(cold, second).filter(_ >= 0)
       val warm = if (successes.isEmpty) -1.0 else successes.min
       val err =

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single session factory for every driver-facing main (Bench, Verify,
-  * Smoke, tools.Explain, tools.Profile): extensions + the configs the
+  * Smoke, tools.Explain, tools.Diag, all through `tools.Runs.session`),
+  * and for the perfbench harness: extensions + the configs the
   * engine contract requires, in ONE place so a config change (e.g. the
   * nanos-as-long flag events.parquet needs) cannot silently diverge
   * between the tools.

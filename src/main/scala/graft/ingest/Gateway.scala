@@ -4,6 +4,8 @@ import org.apache.spark.sql.{LocalFrames, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
+import graft.tools.Runs
+
 /** The reference's full HTTP surface (src/main.go:224-332) with the
   * transport stripped: every route, status code, validation message,
   * auth rule, and register side-effect is executable and testable
@@ -102,7 +104,7 @@ class Gateway(spark: SparkSession, warehouse: String,
     }
     // the envelope schema puts no character restriction on id, so it must
     // be escaped on the way back out or a quote in it breaks the body
-    Response(200, s"""{"id":"${jsonEscape(env.getUTF8String(field("id")).toString)}",""" +
+    Response(200, s"""{"id":"${Runs.jsonEscape(env.getUTF8String(field("id")).toString)}",""" +
       s""""timeGenerated":$timeGenerated,"maxTimestamp":$batchMax}""")
   }
 
@@ -149,7 +151,7 @@ class Gateway(spark: SparkSession, warehouse: String,
       }
     } catch {
       case e: Exception =>
-        val msg = jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getName)
+        val msg = Runs.jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getName)
           .takeWhile(_ != '\n'))
         Response(400, s"""{"error":"$msg"}""")
     }
@@ -214,17 +216,4 @@ object Gateway {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[ingest] def writeLockFor(warehouse: String): Object =
     writeLocks.computeIfAbsent(warehouse, _ => new Object)
-
-  /** Minimal JSON string-content escape (quote, backslash, control
-    * chars) — every interpolated free-text value in a response body goes
-    * through this, matching what the reference gets for free from gin's
-    * JSON marshaller.
-    */
-  private[ingest] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
 }

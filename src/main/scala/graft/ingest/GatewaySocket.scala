@@ -48,7 +48,7 @@ object GatewaySocket {
               // socket: surface engine faults as a JSON 500 (the
               // reference's gin recovery middleware does the same)
               case e: Exception =>
-                Gateway.Response(500, s"""{"error":"${Gateway.jsonEscape(
+                Gateway.Response(500, s"""{"error":"${graft.tools.Runs.jsonEscape(
                     Option(e.getMessage).getOrElse(e.getClass.getName))}"}""")
             }
           val bytes = resp.body.getBytes(UTF_8)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, LocalFrames, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The driver loop of every iterative operator — BPE training and
@@ -72,4 +72,17 @@ private[graft] object Rounds {
     df.queryExecution.analyzed.collectFirst {
       case lr: LogicalRDD => lr.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** `build`'s bounded result collected into a local frame, after which
+    * every RDD pinned while building or running it is released: the
+    * release for an operator whose helpers pin artifacts the caller
+    * never sees. The session must pin nothing else meanwhile, or those
+    * pins are released too.
+    */
+  def collected(s: SparkSession)(build: => DataFrame): DataFrame = {
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val (_, local) = LocalFrames.collectLocal(build)
+    (s.sparkContext.getPersistentRDDs -- before).values.foreach(_.unpersist(blocking = false))
+    local
+  }
 }

@@ -1002,7 +1002,7 @@ object Text {
   /** Train the unigram model: candidate harvest → top-K multi-char +
     * all single chars → [[UnigramRounds]] hard-EM rounds ([[Rounds]]).
     * Returns the final (p, c, cost) model and the checkpointed word
-    * table.
+    * table; every other checkpoint is released.
     */
   private def uniModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val words = uniWords(s, dir).localCheckpoint(true)
@@ -1016,7 +1016,9 @@ object Text {
     Rounds.release(cand)
     val vocab = Rounds.fixed(vocab0, UnigramRounds)(
       (v, _) => uniEmRound(words, uniCosts(v), chars))
-    (uniCosts(vocab).localCheckpoint(true), words)
+    val model = uniCosts(vocab).localCheckpoint(true)
+    Seq(chars, vocab).foreach(Rounds.release)
+    (model, words)
   }
 
   /** (w, n) piece counts of every distinct word under the trained
@@ -1031,7 +1033,8 @@ object Text {
     * piece with its final EM count and half-bit cost.
     */
   private def unigramTrain(s: SparkSession, dir: String): DataFrame = {
-    val (model, _) = uniModel(s, dir)
+    val (model, words) = uniModel(s, dir)
+    Rounds.release(words) // the output reads only the model
     model.select(col("p").as("piece"), col("c").as("n"), col("cost"))
       .orderBy("piece")
   }

@@ -1498,9 +1498,14 @@ object Vectors {
     * the harness core, exposed for the spec that asserts the
     * structural law recall(rerank) ≥ recall(ivfpq) PER QUERY. Every
     * branch is a single-query entry's stages run on the panel frame.
+    * The tagged union is bounded (methods × panel × 10 rows), so it is
+    * collected into a local frame and every fit, code table and score
+    * frame the panel pinned is released ([[Rounds.collected]]).
     */
-  private[graft] def recallPanelCands(s: SparkSession,
-      dir: String): DataFrame = {
+  private[graft] def recallPanelCands(s: SparkSession, dir: String): DataFrame =
+    Rounds.collected(s)(panelCands(s, dir))
+
+  private def panelCands(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val qp = panelQ(e)
     // ONE coarse fit and ONE PQ fit feed every index branch — and the

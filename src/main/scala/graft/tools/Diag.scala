@@ -1,94 +1,83 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
-
-/** Per-query diagnostic: where does the wall time go? For each named
-  * query, runs it twice (cold + warm) and reports, for the warm run,
-  * the QueryPlanningTracker phase times (analysis / optimization /
-  * planning), total wall, and executed-plan shape counts (exchanges,
-  * parquet scans, sorts, codegen spans) — the evidence §1 of the
-  * optimization guide asks for before touching an operator. After each
-  * run it also prints the RDDs still pinned in the session (persisted
-  * or `localCheckpoint`ed) and their storage bytes, so an iterative
-  * operator that leaks its round state shows as a count that grows
-  * from cold to warm.
+/** Per-query diagnostic and warm repeated-measurement profiler: where
+  * does the wall time go, and what does a query cost once warm? After a
+  * q_agg_group warm-up, each named query (the whole registry when none
+  * is named) runs once cold and `reps` times warm. Every run prints a
+  * `DIAG` line: build and execute wall time, the Spark jobs, stages,
+  * tasks and stage time it caused, the executed plan's shape (exchanges,
+  * parquet scans, sorts, codegen spans), and the RDDs still pinned in
+  * the session (persisted or `localCheckpoint`ed) with their storage
+  * bytes, so an iterative operator that leaks its round state shows as a
+  * count that grows from cold to warm. The last warm run's slowest
+  * stages follow as `SLOW` lines, then a `PROF` line with the min and
+  * median of the warm runs: the bench machine shows ±45% single-run
+  * noise, so tune against the minimum of repeated warm runs, never one
+  * cold reading.
   *
-  * Run: `sbt "runMain graft.tools.Diag q_a q_b ..."`.
+  * Run: `sbt "runMain graft.tools.Diag [reps] [query ...]"` — both
+  * optional (reps defaults to 3); a non-numeric first arg is a query name.
+  *
+  * When `SPARK_GRAFT_PROFILE_OUT` is set, also writes the warm table as
+  * one JSON file (per-query warm min + median, total of mins, host-load
+  * averages before and after the run): the complete bench artifact each
+  * round's BASELINE.md comparison cites. A run over named queries merges
+  * into an existing file ([[Runs.writeProfile]]).
   */
 object Diag {
   def main(args: Array[String]): Unit = {
+    // the f-interpolator formats through the JVM default locale; under a
+    // comma-decimal locale (de_DE, fr_FR) the emitted artifact would not
+    // be valid JSON — pin ROOT before any formatting happens
+    java.util.Locale.setDefault(java.util.Locale.ROOT)
+    val (reps, nameArgs) = args.headOption.flatMap(_.toIntOption) match {
+      case Some(r) => (math.max(1, r), args.drop(1).toSeq)
+      case None => (3, args.toSeq)
+    }
+    val names = Runs.select(nameArgs)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Runs.session("32")
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else Seq("q_agg_group")
-    // stage accounting: jobs/stages/tasks submitted and their wall spans
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val stages = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    val stageMs = new java.util.concurrent.atomic.AtomicLong
-    val slow = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
-    val stageDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          val d = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
-          j.stageIds.foreach(sid => stageDesc.put(sid, d))
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(sc.stageInfo.numTasks)
-          for (a <- sc.stageInfo.submissionTime; b <- sc.stageInfo.completionTime) {
-            stageMs.addAndGet(b - a)
-            val run = sc.stageInfo.taskMetrics.executorRunTime
-            val cpu = sc.stageInfo.taskMetrics.executorCpuTime / 1000000
-            val deser = sc.stageInfo.taskMetrics.executorDeserializeTime
-            val site = stageDesc.getOrDefault(sc.stageInfo.stageId, "")
-            slow.add((b - a,
-              s"${sc.stageInfo.stageId}:${sc.stageInfo.name.takeWhile(_ != '(').trim} " +
-                s"span=${b - a} run=$run cpu=$cpu deser=$deser " +
-                s"tasks=${sc.stageInfo.numTasks} @ $site"))
-          }
-        }
-      })
+    val loadBefore = Runs.loadAvg
     // warm shared paths once
-    try SparkEntry.queries("q_agg_group")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    names.foreach { n =>
-      val fn = SparkEntry.queries(n)
+    Runs.rep(spark, "q_agg_group", sfDir)
+    val results = names.flatMap { n =>
       spark.sparkContext.setJobDescription(s"diag: $n")
-      def one(tag: String): Unit = {
-        jobs.set(0); stages.set(0); tasks.set(0); stageMs.set(0); slow.clear()
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val tBuild = System.nanoTime()
-        df.count()
-        val tEnd = System.nanoTime()
-        val ep = df.queryExecution.executedPlan.toString
-        def c(p: String) = p.r.findAllIn(ep).length
-        Thread.sleep(200) // let listener drain
-        val stored = spark.sparkContext.getRDDStorageInfo
-        println(f"DIAG $n%-24s $tag build=${(tBuild - t0) / 1e9}%.2fs " +
-          f"exec=${(tEnd - tBuild) / 1e9}%.2fs total=${(tEnd - t0) / 1e9}%.2fs " +
-          s"| jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} " +
-          s"stageMs=${stageMs.get} " +
-          s"| exch=${c("Exchange")} scans=${c("Scan parquet")} " +
-          s"sorts=${c("\\bSort\\b")} wsc=${c("WholeStageCodegen")} " +
-          s"| pinned=${spark.sparkContext.getPersistentRDDs.size} " +
-          s"pinnedBytes=${stored.map(i => i.memSize + i.diskSize).sum}")
-        if (tag == "warm") {
-          import scala.jdk.CollectionConverters._
-          slow.asScala.toSeq.sortBy(-_._1).take(12).foreach { case (_, l) =>
-            println(s"  SLOW $l")
-          }
+      // a run's secs and slow list; its frame is dropped at once, so
+      // the pins it reads can be cleaned before the next run
+      def one(tag: String): Option[(Double, Seq[String])] = {
+        val r = Runs.rep(spark, n, sfDir)
+        r.error.foreach(e => println(s"DIAG $n FAILED: ${e.getMessage}"))
+        r.frame.map { df =>
+          val ep = df.queryExecution.executedPlan.toString
+          def c(p: String) = p.r.findAllIn(ep).length
+          val stored = spark.sparkContext.getRDDStorageInfo
+          println(f"DIAG $n%-24s $tag build=${r.buildNs / 1e9}%.2fs " +
+            f"exec=${r.execNs / 1e9}%.2fs total=${r.totalNs / 1e9}%.2fs " +
+            s"| jobs=${r.jobs} stages=${r.stages} tasks=${r.tasks} " +
+            s"stageMs=${r.stageMs} " +
+            s"| exch=${c("Exchange")} scans=${c("Scan parquet")} " +
+            s"sorts=${c("\\bSort\\b")} wsc=${c("WholeStageCodegen")} " +
+            s"| pinned=${spark.sparkContext.getPersistentRDDs.size} " +
+            s"pinnedBytes=${stored.map(i => i.memSize + i.diskSize).sum}")
+          (r.secs, r.slow)
         }
       }
-      try { one("cold"); one("warm") }
-      catch { case e: Throwable => println(s"DIAG $n FAILED: ${e.getMessage}") }
+      // warm runs only after a good cold run, and only up to a failure
+      val warm = one("cold").fold(Seq.empty[(Double, Seq[String])])(_ =>
+        Iterator.fill(reps)(one("warm")).takeWhile(_.isDefined).flatten.toSeq)
+      warm.lastOption.foreach(_._2.foreach(l => println(s"  SLOW $l")))
+      Option.when(warm.size == reps) {
+        val times = warm.map(_._1).sorted
+        // even rep count: average the two central readings
+        val median = (times((reps - 1) / 2) + times(reps / 2)) / 2
+        println(f"PROF $n%-24s min=${times.head}%.2fs median=$median%.2fs reps=$reps")
+        n -> (times.head, median)
+      }
+    }
+    sys.env.get("SPARK_GRAFT_PROFILE_OUT").foreach { out =>
+      val (n, total) = Runs.writeProfile(out, sfDir, reps, nameArgs.nonEmpty, loadBefore, results)
+      println(s"PROF wrote $out ($n queries, total ${f"$total%.1f"}s)")
     }
     spark.stop()
   }

@@ -12,18 +12,15 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/tmp/graft_plans.txt")
-    val only = args.drop(2).toSet
-    val spark = graft.GraftSession.local("4")
+    val names = Runs.select(args.drop(2).toSeq).distinct.sorted
+    val spark = Runs.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
       sb.append(s"\n=============== $name ===============\n")
-      try {
-        val df = fn(spark, sfDir)
-        // collect(), not count(): count() spawns its own QueryExecution and
-        // would leave THIS plan un-finalized (isFinalPlan=false)
+      // collect(), not count(): count() spawns its own QueryExecution and
+      // would leave THIS plan un-finalized (isFinalPlan=false)
+      Runs.rep(spark, name, sfDir, df => {
         df.collect()
         sb.append(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
@@ -31,7 +28,7 @@ object Explain {
         // carries the final AQE shape and *(n) whole-stage-codegen spans
         sb.append("\n---------- executed (final adaptive) plan ----------\n")
         sb.append(df.queryExecution.executedPlan.toString)
-      } catch { case e: Throwable => sb.append(s"ERROR: ${e.getMessage}\n") }
+      }).error.foreach(e => sb.append(s"ERROR: ${e.getMessage}\n"))
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"plans written to $out")

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.GraftSession
 
 /** Deterministic corpus tiler for scale validation (VERDICT r3 item 1):
   * writes `tiles` id-shifted, structure-preserving copies of every
@@ -63,7 +62,7 @@ object ScaleGen {
     val mode = if (args.length >= 4) args(3) else "adversarial"
     require(mode == "adversarial" || mode == "clustered",
       s"unknown embedding mode '$mode'")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Runs.session("32")
     import spark.implicits._
 
     def read(name: String) = spark.read.parquet(s"$inDir/$name.parquet")

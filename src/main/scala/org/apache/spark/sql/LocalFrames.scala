@@ -1,11 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
 
-/** Reuse of a small driver-side result without re-running its plan.
-  * `Dataset.ofRows` is package-private; this object opens it for one use.
+/** The engine's package-private API opened for two uses: reusing a
+  * small collected result without re-running its plan
+  * (`Dataset.ofRows`), and waiting for the listener bus to drain.
   */
 object LocalFrames {
 
@@ -23,4 +25,9 @@ object LocalFrames {
     (rows, classic.Dataset.ofRows(ds.sparkSession,
       LocalRelation(qe.analyzed.output, rows.toSeq)))
   }
+
+  /** Returns once every event posted so far has reached every listener
+    * of `sc`, so counts read afterwards cover all finished work.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -289,6 +289,21 @@ class GatewaySpec extends SparkSpec {
     } finally rm(wh)
   }
 
+  test("the ingest echo returns an id with a quote, a backslash and control chars intact") {
+    val wh = tmpWarehouse()
+    try {
+      val gw = new Gateway(spark, wh)
+      val id = "q\"b\\n\nc\u0001" // q"b\n<newline>c<U+0001>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val body = """{"content":[{"timestamp":1697049600000,"value":1.0}],""" +
+        s""""id":${mapper.writeValueAsString(id)},"timeGenerated":1697049600000,""" +
+        """"file":"factory-1/2023/10/11/16/x.parquet"}"""
+      val r = gw.handle(Request("POST", "/", body = body))
+      assert(r.status === 200)
+      assert(mapper.readTree(r.body).get("id").asText() === id)
+    } finally rm(wh)
+  }
+
   test("the query route replays the reference's own CSL envelopes verbatim") {
     val wh = tmpWarehouse()
     try {

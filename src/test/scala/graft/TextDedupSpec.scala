@@ -421,7 +421,8 @@ class TextDedupSpec extends SparkSpec {
     // piece, count floor >= 1), multi-char pieces survive EM with real
     // support, and the cost table is the half-bit quantization of the
     // count mass — cost(p) = f(T) - f(c) >= 0, monotone in c
-    val model = q("q_unigram_train")
+    // the model is the only checkpoint the output keeps pinned
+    val model = assertNoLeakedPins(q("q_unigram_train"))(Seq(_))
       .as[(String, Long, Long)].collect().toSeq
     assert(model.nonEmpty)
     val corpusChars = Tables.documents(spark, sfDir)

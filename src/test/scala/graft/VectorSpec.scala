@@ -343,7 +343,8 @@ class VectorSpec extends SparkSpec {
   }
 
   test("ANN recall harness: panel MEAN recall@10 for every index family") {
-    val rows = q("q_ann_recall").collect()
+    // the panel's fits, codes and score frames are all released
+    val rows = assertNoLeakedPins(q("q_ann_recall"))(Seq(_)).collect()
     assert(rows.map(_.getAs[String]("method")).toSet ===
       Set("lsh", "ivf", "ivfpq", "ivfpq_np1", "ivfpq_opq", "rerank", "bq",
         "trunc16", "ivf_np3x", "rerank_np3x", "rerank_sl50",

@@ -3,7 +3,8 @@
 
 Usage: python3 tools/benchdiff.py <bench_full_prev.json> <bench_full_cur.json>
 
-Compares the per-query WARM MINIMUMS of two builder-owned Profile artifacts
+Compares the per-query WARM MINIMUMS of two tools.Diag warm-table artifacts
+(SPARK_GRAFT_PROFILE_OUT)
 and prints a regression table. Queries are flagged only when BOTH
  - the ratio cur/prev exceeds 1.5x (the host shows +-45% single-run noise;
    warm minimums of 3 reps are steadier but sub-second entries still jitter),
