@@ -40,52 +40,22 @@ object Tables {
     * production pipeline runs: pay one linear pass, then every
     * downstream query scans a long column with full stats. Queries on
     * any of the three views push filters into the scan (PlanSpec pins
-    * this).
+    * this). The normalized copy is a [[Publish.derived]] layout: keyed by
+    * the fixture file's identity, so a regenerated fixture gets a fresh
+    * one, and rooted at `spark.graft.events.normRoot`, which on a
+    * cluster must be shared storage every executor reads.
     */
   def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(canonicalEvents(s, dir))
-
-  /** dir → published canonical path, resolved at most once per JVM. */
-  private val eventsNorm = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def canonicalEvents(s: SparkSession, dir: String): String =
-    eventsNorm.computeIfAbsent(dir, _ => {
-      val srcPath = new java.io.File(p(dir, "events"))
-      // cache key covers the fixture's byte identity: a driver
-      // regeneration (new mtime/size) gets a fresh normalization
-      val key = md5Hex(s"${srcPath.getAbsolutePath}:${srcPath.length}:${srcPath.lastModified}")
-      // the normalized-output root is configurable: on a cluster it must
-      // be SHARED storage every executor can read (the normalize-at-
-      // ingest job's published table), not the driver's local tmpdir —
-      // which remains the single-node harness default
-      val rootDir = s.conf.get("spark.graft.events.normRoot",
-        System.getProperty("java.io.tmpdir"))
-      val base = new java.io.File(rootDir, s"graft_events_norm_$key")
-      val dest = new java.io.File(base, "events.parquet")
-      if (dest.exists()) dest.getPath
-      else {
-        val raw = s.read.parquet(srcPath.getPath)
-        val ns = raw.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType => raw // TIMESTAMP(NANOS) fixture
-          case _ => // TIMESTAMP(MICROS) fixture: NTZ/LTZ → epoch-µs → epoch-ns
-            raw.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
-        }
-        // integer division — double `/` loses ulps at epoch-ns magnitude
-        val canon = ns
-          .withColumn("ts_us", expr("ts div 1000"))
-          .withColumn("ts_ts", timestamp_micros(expr("ts div 1000")))
-        // write aside, publish by atomic directory rename: a concurrent
-        // JVM either wins the rename or finds the winner's copy
-        val tmp = new java.io.File(base.getParentFile,
-          s"${base.getName}.tmp-${ProcessHandle.current().pid()}")
-        canon.write.mode("overwrite").option("compression", "snappy")
-          .parquet(new java.io.File(tmp, "events.parquet").getPath)
-        if (tmp.renameTo(base) || dest.exists()) dest.getPath
-        else new java.io.File(tmp, "events.parquet").getPath
+    s.read.parquet(Publish.derived(s, dir, "events.parquet", "events_norm") { out =>
+      val raw = s.read.parquet(p(dir, "events"))
+      val ns = raw.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType => raw // TIMESTAMP(NANOS) fixture
+        case _ => // TIMESTAMP(MICROS) fixture: NTZ/LTZ → epoch-µs → epoch-ns
+          raw.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
       }
+      // integer division — double `/` loses ulps at epoch-ns magnitude
+      ns.withColumn("ts_us", expr("ts div 1000"))
+        .withColumn("ts_ts", timestamp_micros(expr("ts div 1000")))
+        .write.option("compression", "snappy").parquet(out)
     })
-
-  private def md5Hex(v: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
 }

@@ -21,6 +21,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 object GatewaySocket {
 
+  /** The largest request body buffered, well above the reference's own
+    * 80k-row envelope (17.6 MB); a larger one gets a JSON 413 unread.
+    */
+  private val MaxBody = 64 << 20
+
   final class Handle private[GatewaySocket] (
       server: HttpServer, pool: java.util.concurrent.ExecutorService) {
     /** Bound port (useful when started on port 0 = ephemeral). */
@@ -35,13 +40,16 @@ object GatewaySocket {
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit =
         try {
-          val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-          val req = Gateway.Request(
-            ex.getRequestMethod,
-            ex.getRequestURI.getPath,
-            parseQuery(Option(ex.getRequestURI.getRawQuery)),
-            body)
-          val resp =
+          // refuse an oversized body before buffering it: by its declared
+          // length, or, when none is declared, by reading one byte past the cap
+          val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+            .flatMap(_.trim.toLongOption)
+          val body = Option.when(!declared.exists(_ > MaxBody))(
+            ex.getRequestBody.readNBytes(MaxBody + 1)).filter(_.length <= MaxBody)
+          val resp = body.fold(Gateway.Response(413,
+              s"""{"error":"request body above $MaxBody bytes"}""")) { b =>
+            val req = Gateway.Request(ex.getRequestMethod, ex.getRequestURI.getPath,
+              parseQuery(Option(ex.getRequestURI.getRawQuery)), new String(b, UTF_8))
             try gw.handle(req)
             catch {
               // the adapter must never leak a raw stack through the
@@ -51,10 +59,13 @@ object GatewaySocket {
                 Gateway.Response(500, s"""{"error":"${graft.tools.Runs.jsonEscape(
                     Option(e.getMessage).getOrElse(e.getClass.getName))}"}""")
             }
+          }
           val bytes = resp.body.getBytes(UTF_8)
           ex.getResponseHeaders.add("Content-Type", "application/json")
           ex.sendResponseHeaders(resp.status, bytes.length)
           ex.getResponseBody.write(bytes)
+          // flush the response before the exchange drains an unread body
+          ex.getResponseBody.close()
         } finally ex.close()
     })
     server.setExecutor(pool)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import graft.Tables
+import graft.{Publish, Tables}
 import Ox._
 
 /** Training-set assembly operators — the stage AFTER dedup/quality
@@ -141,9 +141,7 @@ object Curation {
     */
   private def shardWrite(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val outPath = java.nio.file.Files.createTempDirectory("graft_shards")
-    val out = outPath.toString
-    try {
+    Publish.scratch("graft_shards") { out =>
       Tables.documents(s, dir)
         .join(packedDocs(s, dir).select("doc_id", "shard_id"), "doc_id")
         .repartition(col("shard_id"))
@@ -159,10 +157,6 @@ object Curation {
         .as[(Long, Long)].head()
       Seq((row._1, row._2, row._3, orig._1, orig._2))
         .toDF("n_docs", "n_shards", "chars", "orig_docs", "orig_chars")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -183,9 +177,7 @@ object Curation {
     */
   private def fileManifest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val outPath = java.nio.file.Files.createTempDirectory("graft_manifest")
-    val out = outPath.toString
-    try {
+    Publish.scratch("graft_manifest") { out =>
       Tables.documents(s, dir)
         .join(packedDocs(s, dir).select("doc_id", "shard_id"), "doc_id")
         .repartition(col("shard_id"))
@@ -200,10 +192,6 @@ object Curation {
         .as[(Long, Long, Long, Long, Long)].collect().toSeq
       manifest.toDF("shard_id", "n_files", "n_docs", "min_doc", "max_doc")
         .orderBy("shard_id")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

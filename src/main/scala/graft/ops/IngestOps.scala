@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Publish, Tables}
 import graft.ingest.Ingest
 
 /** Reference Tier A ingest semantics as oracle-checked queries
@@ -61,9 +61,7 @@ object IngestOps {
     */
   private def parquetRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val outPath = java.nio.file.Files.createTempDirectory("graft_roundtrip")
-    val out = outPath.toString
-    try {
+    Publish.scratch("graft_roundtrip") { out =>
       val batch = Ingest.withPartitionColumns(
         Ingest.syntheticBatch(s, 50000), lit("factory-1"), col("timestamp"))
       Ingest.writeBatch(batch, out)
@@ -76,10 +74,6 @@ object IngestOps {
         countDistinct(col("hour")).as("n_hours"))
         .as[(Long, Long, Long, Long)].head()
       Seq(row).toDF("n", "min_ts", "max_ts", "n_hours")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -97,9 +91,7 @@ object IngestOps {
     import s.implicits._
     val base = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"), md5(col("text")).as("h"))
-    val outPath = java.nio.file.Files.createTempDirectory("graft_formats")
-    val out = outPath.toString
-    try {
+    Publish.scratch("graft_formats") { out =>
       def check(df: org.apache.spark.sql.DataFrame) = df.agg(
         count(lit(1)),
         sum(col("n_chars")),
@@ -123,10 +115,6 @@ object IngestOps {
       textual.map { case (f, (n, chars, sum)) => (f, n, chars, sum) }
         .toDF("format", "n_rows", "sum_chars", "checksum")
         .orderBy("format")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -150,9 +138,7 @@ object IngestOps {
     */
   private def compact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val outPath = java.nio.file.Files.createTempDirectory("graft_compact_q")
-    val out = outPath.toString
-    try {
+    Publish.scratch("graft_compact_q") { out =>
       val src = Tables.events(s, dir)
         .filter(col("ts_ts") < lit("2024-01-03").cast("timestamp"))
         .select(
@@ -181,10 +167,6 @@ object IngestOps {
         s.read.parquet(out).count())
       Seq(result)
         .toDF("rows_compacted", "compacted", "files_after", "rows_after")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Publish, Tables}
 import Ox._
 
 /** Physical-technique operators: the logical result is ordinary (and
@@ -53,24 +53,12 @@ object Physical {
       bucketedJoinBody(s, dir)
     }
 
-  /** Cache tag for per-source-dir derived layouts: hashes the dir string
-    * PLUS the anchor file's length and mtime, so a regenerated source is
-    * never served from a stale cached layout.
-    */
-  private def sourceTag(s: SparkSession, dir: String, anchor: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$anchor")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    java.lang.Long.toHexString(scala.util.hashing.MurmurHash3.stringHash(
-      s"$dir|${st.getLen}|${st.getModificationTime}").toLong & 0xffffffffL)
-  }
-
   private def bucketedJoinBody(s: SparkSession, dir: String): DataFrame = {
     val db = "graft_buckets"
     s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     // table names carry the source dir + file version: the cached bucketed
     // tables must never be served for a different SF or regenerated data
-    val dirTag = sourceTag(s, dir, "lineitem.parquet")
+    val dirTag = Publish.key(s, dir, "lineitem.parquet")
     def ensure(base: String, df: DataFrame, key: String): Unit = {
       val name = s"${base}_$dirTag"
       if (!s.catalog.tableExists(s"$db.$name")) {
@@ -177,23 +165,16 @@ object Physical {
     * partitions AT RUNTIME (`dynamicpruningexpression` in the scan's
     * PartitionFilters) — the partition-layout payoff (A6/B6) when the
     * qualifying keys are only known from a dim filter, not a literal.
-    * The layout is written once per source dir and cached, like the
-    * bucketed tables.
+    * The layout is a [[Publish.derived]] one: written once per source
+    * file identity and published by its marker.
     */
   private def dppJoin(s: SparkSession, dir: String): DataFrame = {
-    val dirTag = sourceTag(s, dir, "events.parquet")
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_dpp_$dirTag"
-    val loc = new org.apache.hadoop.fs.Path(path)
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // gate on the commit marker, not the directory: a crashed partial
-    // write must be rewritten, never served
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+    val fact = s.read.parquet(Publish.derived(s, dir, "events.parquet", "join_dpp") { out =>
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("value"),
           expr("ts_us div 86400000000").as("day_id"))
-        .write.mode("overwrite").partitionBy("day_id").parquet(path)
-    }
-    val fact = s.read.parquet(path)
+        .write.partitionBy("day_id").parquet(out)
+    })
     // date dimension: 30 epoch-days from 2024-01-01 (= day 19723), one
     // week selected — the qualifying day_ids exist only after the filter
     val dim = s.range(30).select(
@@ -314,9 +295,7 @@ object Physical {
     */
   private def schemaMerge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val outPath = java.nio.file.Files.createTempDirectory("graft_evolve")
-    val out = outPath.toString
-    try {
+    Publish.scratch("graft_evolve") { out =>
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       docs.filter(col("doc_id") % 2 === 0)
@@ -332,10 +311,6 @@ object Physical {
           col("sum_quality").cast("long"))
         .as[(Int, Long, Long, Long)].collect().toSeq.sorted
       rows.toDF("gen", "n_docs", "n_quality", "sum_quality")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Publish, Tables}
 import graft.functions.VectorFunctions
 import Ox._
 
@@ -863,9 +863,7 @@ object Text {
     Rounds.release(fin)
     val merges = tops.map(bpeRank1(_).select(col("step"), col("a"), col("b")))
       .reduce(_.unionByName(_))
-    val tokPath = java.nio.file.Files.createTempDirectory("graft_bpe_tok")
-    val tok = tokPath.toString
-    try {
+    Publish.scratch("graft_bpe_tok") { tok =>
       merges.coalesce(1).write.mode("overwrite").parquet(s"$tok/merges")
       tops.foreach(Rounds.release)
       val loaded = s.read.parquet(s"$tok/merges")
@@ -884,10 +882,6 @@ object Text {
         .localCheckpoint(true)
       Rounds.release(cur)
       out
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tokPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

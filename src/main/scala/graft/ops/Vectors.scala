@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Publish, Tables}
 import Ox._
 
 /** Similarity search + embedding operators over `embeddings`
@@ -1224,20 +1224,14 @@ object Vectors {
     */
   private def annPersist(s: SparkSession, dir: String): DataFrame = {
     val (c2, pcb2, codes, asgn) = ivfPqIndex(emb(s, dir))
-    val idxPath = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx")
-    val idx = idxPath.toString
-    def load(t: String): DataFrame = s.read.parquet(s"$idx/$t")
-    try {
+    Publish.scratch("graft_ivfpq_idx") { idx =>
+      def load(t: String): DataFrame = s.read.parquet(s"$idx/$t")
       Seq("coarse" -> c2, "codebooks" -> pcb2, "codes" -> codes,
         "assign" -> asgn).foreach { case (t, df) =>
         df.write.mode("overwrite").parquet(s"$idx/$t")
       }
       serveFunnel(s, dir, load("coarse"), load("codebooks"), load("codes"),
         load("assign")).localCheckpoint(true)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(idxPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, TTLConfig, ValueState}
+import graft.Publish
 import graft.ingest.Ingest
 
 /** Structured-Streaming formulations of the reference's unbounded-ingest
@@ -709,24 +710,25 @@ object StreamOps {
     * batch sees exactly the mark it saw the first time and splits
     * identically, and its overwrite replaces rather than re-appends.
     * Marks older than batchId − 1 are pruned (only the previous batch
-    * can ever replay), so state is O(1) files, not O(batches).
+    * can ever replay), so state is O(1) files, not O(batches). Marks are
+    * [[graft.Publish.marker]]s on the FS `stateDir` names.
     */
   def lateDataSink(events: DataFrame, mainDir: String, quarantineDir: String,
       stateDir: String, latenessUs: Long, checkpoint: String): StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
+    import org.apache.hadoop.fs.Path
+    val root = new Path(stateDir)
+    val fs = root.getFileSystem(events.sparkSession.sparkContext.hadoopConfiguration)
+    fs.mkdirs(root)
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val dir = new java.io.File(stateDir)
-        def markId(f: java.io.File): Option[Long] =
-          Option(f.getName).filter(_.startsWith("mark."))
-            .flatMap(_.stripPrefix("mark.").toLongOption)
-        val prior = dir.listFiles().toSeq
-          .flatMap(f => markId(f).filter(_ < id).map((_, f)))
-          .sortBy(-_._1).headOption
-        val mark = prior.map { case (_, f) =>
-          new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.toLong
-        }.getOrElse(Long.MinValue)
+        val marks = fs.listStatus(root).toSeq.map(_.getPath).flatMap { p =>
+          Option(p.getName).filter(_.startsWith("mark."))
+            .flatMap(_.stripPrefix("mark.").toLongOption).map((_, p))
+        }
+        val mark = marks.filter(_._1 < id).sortBy(-_._1).headOption
+          .flatMap { case (_, p) => Publish.read(fs, p) }
+          .map(_.toLong).getOrElse(Long.MinValue)
         val b = batch.localCheckpoint(true)
         val cut = if (mark == Long.MinValue) Long.MinValue else mark - latenessUs
         b.filter(col("ts_us") >= cut)
@@ -736,16 +738,11 @@ object StreamOps {
         val bmax = b.agg(max(col("ts_us"))).head().get(0)
         val newMark = math.max(mark,
           if (bmax == null) Long.MinValue else bmax.asInstanceOf[Long])
-        val markFile = new java.io.File(dir, s"mark.$id")
         // write-once: a replayed batch must NOT advance its own mark
-        if (!markFile.exists()) {
-          val tmp = new java.io.File(dir, s".mark.$id.tmp")
-          java.nio.file.Files.write(tmp.toPath, newMark.toString.getBytes)
-          tmp.renameTo(markFile)
-        }
+        try Publish.marker(fs, new Path(root, s"mark.$id"), newMark.toString)
+        catch { case _: java.nio.file.FileAlreadyExistsException => () }
         // only batch id-1 can ever replay; older marks are dead
-        dir.listFiles().foreach(f =>
-          markId(f).filter(_ < id - 1).foreach(_ => f.delete()))
+        marks.filter(_._1 < id - 1).foreach { case (_, p) => fs.delete(p, false) }
         ()
       }
       .start()
@@ -915,8 +912,8 @@ object StreamOps {
   /** The crash-safe generation fold shared by [[nearDupSelfSink]] and
     * [[vectorUpsertSink]]: fold all `bid < batchId` rows (distinct —
     * the tables are sets of identical-on-replay rows) into the FRESH
-    * partition `bid = -batchId`, publish with an atomic
-    * `_compacted_<batchId>` marker create, and only then delete
+    * partition `bid = -batchId`, publish it with one
+    * `_compacted_<batchId>` [[graft.Publish.marker]], and only then delete
     * superseded dirs and stale markers. A replay that sees the marker
     * SKIPS the fold, so a committed fold — by then possibly the sole
     * copy — is never overwritten mid-write (Spark's overwrite deletes
@@ -933,7 +930,7 @@ object StreamOps {
         .select(cols.map(col): _*)
         .distinct().localCheckpoint()
       folded.write.mode("overwrite").parquet(s"$root/bid=-$batchId")
-      fs.create(marker, false).close()
+      Publish.marker(fs, marker, "")
     }
     fs.listStatus(rootP).map(_.getPath)
       .filter { p =>
@@ -1050,15 +1047,14 @@ object StreamOps {
     * whose CONTENT names the data directory they publish. The live
     * state is the directory named by the HIGHEST marker; a data
     * directory no marker names is an uncommitted orphan and invisible.
-    * Publishing is a single `create(overwrite=false)` of the marker —
+    * Publishing is one create-once marker ([[graft.Publish.marker]]) —
     * never a directory rename — so visibility does not depend on rename
-    * atomicity: on HDFS/POSIX a create is atomic, on object stores
-    * (s3a/abfss) it is one PUT, equally atomic. The token makes the
-    * data path unique PER ATTEMPT: two writers racing to version N+1
-    * each write their own `v<N+1>-<token>` and contend only on the
-    * marker create — the loser's exception aborts its batch with the
-    * winner's part files untouched (a shared `v<N+1>` path would let
-    * the loser's overwrite clobber data the winner already committed).
+    * atomicity. The token makes the data path unique PER ATTEMPT: two
+    * writers racing to version N+1 each write their own `v<N+1>-<token>`
+    * and contend only on the marker create — the loser's exception
+    * aborts its batch with the winner's part files untouched (a shared
+    * `v<N+1>` path would let the loser's overwrite clobber data the
+    * winner already committed).
     * Crash anywhere:
     *   - before/while writing `v<N+1>-<t>` → no marker, the dir is an
     *     invisible orphan a later successful batch collects;
@@ -1128,14 +1124,13 @@ object StreamOps {
     val next = cur + 1
     // writer-unique staging: a concurrent attempt at the same
     // version writes somewhere else entirely
-    val token = java.util.UUID.randomUUID().toString.substring(0, 8)
-    val dataDir = new Path(root, s"v$next-$token")
+    val dataDir = new Path(root, s"v$next-${Publish.token()}")
     merged.write.mode("overwrite").parquet(dataDir.toString)
     // the atomic publish: exactly ONE writer's marker create succeeds —
     // a lost race aborts THIS batch (the streaming engine retries it
     // against the winner's state) instead of silently double-committing;
     // the content names the data dir this marker publishes
-    publishMarker(fs, new Path(root, s"_committed_$next"), dataDir.getName)
+    Publish.marker(fs, new Path(root, s"_committed_$next"), dataDir.getName)
     // best-effort GC of superseded versions (crash here is benign):
     // one listing, delete only entries that exist and are settled.
     // `retainVersions` is the time-travel retention window: the newest
@@ -1149,17 +1144,9 @@ object StreamOps {
     // our commit) is deliberately left alone.
     val keepFloor = next - math.max(1, retainVersions)
     val entries = fs.listStatus(root)
-    def markerContent(v: Long): Option[String] = {
-      val m = new Path(root, s"_committed_$v")
-      if (!fs.exists(m)) None
-      else {
-        val in = fs.open(m)
-        val c = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-        if (c.nonEmpty) Some(c) else None
-      }
-    }
     val referenced: Set[String] = ((keepFloor + 1) to next).flatMap { v =>
-      if (v == next) Some(dataDir.getName) else markerContent(v)
+      if (v == next) Some(dataDir.getName)
+      else Publish.read(fs, new Path(root, s"_committed_$v"))
     }.toSet
     entries.foreach { st =>
       val nm = st.getPath.getName
@@ -1173,35 +1160,6 @@ object StreamOps {
       }
     }
     ()
-  }
-
-  /** Win-or-throw marker creation. On HDFS `create(overwrite=false)` is
-    * an atomic namenode op, so the plain path is safe. On LOCAL
-    * filesystems it is an exists-check followed by an open — two racers
-    * can BOTH pass the check, both "win", and interleave content; each
-    * one's GC then deletes the dir the other published, wedging the
-    * marker on a dangling reference (found by the multi-writer race
-    * spec). There the arbiter is the POSIX lock-file idiom instead:
-    * write the content to a writer-unique sibling, then `link(2)` it to
-    * the marker name — hard-linking is kernel-atomic and fails with
-    * EEXIST for every racer but one, and the winner's content is fully
-    * visible the instant the name exists (no create→close window).
-    */
-  private def publishMarker(fs: org.apache.hadoop.fs.FileSystem,
-      marker: org.apache.hadoop.fs.Path, content: String): Unit = fs match {
-    case _: org.apache.hadoop.fs.LocalFileSystem |
-        _: org.apache.hadoop.fs.RawLocalFileSystem =>
-      val m = java.nio.file.Paths.get(marker.toUri.getPath)
-      // dot-prefixed so neither GC's "v"/"_committed_" branches nor
-      // currentState's marker parse ever see it; writer-unique via the
-      // tokened dir name; removed in finally even on a lost race
-      val tmp = m.resolveSibling(s".marker-$content")
-      java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-      try java.nio.file.Files.createLink(m, tmp)
-      finally java.nio.file.Files.deleteIfExists(tmp)
-    case _ =>
-      val out = fs.create(marker, false)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
   /** Resolve the live (version, dataDir) under an upsert state root:
@@ -1219,14 +1177,12 @@ object StreamOps {
     val versions = names.filter(_.startsWith("_committed_"))
       .flatMap(_.stripPrefix("_committed_").toLongOption).toSeq.sorted.reverse
     versions.iterator.flatMap { v =>
-      val content = {
-        val in = fs.open(new Path(root, s"_committed_$v"))
-        try new String(in.readAllBytes(), "UTF-8").trim
-        finally in.close()
-      }
-      if (content.nonEmpty && names.contains(content))
-        Some((v, new Path(root, content)))
-      else None
+      val m = new Path(root, s"_committed_$v")
+      val c = Publish.read(fs, m)
+      // listed but gone: a newer commit collected it, so this listing is
+      // stale — fail (the batch retries) rather than resolve an older one
+      if (c.isEmpty && !fs.exists(m)) throw new java.io.FileNotFoundException(m.toString)
+      c.filter(names.contains).map(d => (v, new Path(root, d)))
     }.nextOption().getOrElse((-1L, null))
   }
 
@@ -1260,12 +1216,10 @@ object StreamOps {
     require(fs.exists(marker),
       s"version $version of $stateDir is not available " +
         "(never committed, or outside the sink's retainVersions window)")
-    val in = fs.open(marker)
-    val content = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-    val dir = new Path(root, content)
-    require(content.nonEmpty && fs.exists(dir),
+    val dir = Publish.read(fs, marker).map(new Path(root, _)).filter(fs.exists)
+    require(dir.isDefined,
       s"version $version marker of $stateDir references a missing data dir")
-    s.read.parquet(dir.toString)
+    s.read.parquet(dir.get.toString)
   }
 
   /** Drive a streaming DataFrame to completion against a memory sink and

@@ -99,7 +99,11 @@ private[graft] object Runs {
       for (a <- i.submissionTime; b <- i.completionTime) {
         stageMs += b - a
         val m = i.taskMetrics
-        slow ::= (b - a, s"${i.stageId}:${i.name.takeWhile(_ != '(').trim} " +
+        // a stage AQE submits from its pool is named after the pool's call
+        // site, the same for every such stage: name it by its operators
+        val name = if (i.name.contains("withThreadLocalCaptured")) LocalFrames.stageScopes(i).mkString(" > ")
+          else i.name.takeWhile(_ != '(').trim
+        slow ::= (b - a, s"${i.stageId}:$name " +
           s"span=${b - a} run=${m.executorRunTime} cpu=${m.executorCpuTime / 1000000} " +
           s"deser=${m.executorDeserializeTime} tasks=${i.numTasks} " +
           s"@ ${stageDesc.getOrElse(i.stageId, "")}")

@@ -1,13 +1,15 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
 
-/** The engine's package-private API opened for two uses: reusing a
+/** The engine's package-private API opened for three uses: reusing a
   * small collected result without re-running its plan
-  * (`Dataset.ofRows`), and waiting for the listener bus to drain.
+  * (`Dataset.ofRows`), waiting for the listener bus to drain, and
+  * naming a stage by its RDD operation scopes.
   */
 object LocalFrames {
 
@@ -30,4 +32,10 @@ object LocalFrames {
     * of `sc`, so counts read afterwards cover all finished work.
     */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** The operation scopes of the stage's RDDs (`Exchange`,
+    * `WholeStageCodegen (3)`, …) in RDD order, each once.
+    */
+  def stageScopes(i: StageInfo): Seq[String] =
+    i.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
 }

@@ -87,6 +87,29 @@ class GatewaySocketSpec extends SparkSpec {
     }
   }
 
+  test("a body declared above the cap gets a JSON 413 without being read") {
+    withServer() { (base, _) =>
+      val sock = new java.net.Socket("127.0.0.1", URI.create(base).getPort)
+      try {
+        sock.setSoTimeout(10000)
+        // declare 1 GiB and send none of it: the server must answer now
+        sock.getOutputStream.write(("POST / HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          s"Content-Type: application/json\r\nContent-Length: ${1L << 30}\r\n\r\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        sock.getOutputStream.flush()
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+          sock.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
+        val status = in.readLine()
+        assert(status.startsWith("HTTP/1.1 413"), status)
+        val headers = Iterator.continually(in.readLine()).takeWhile(_.nonEmpty)
+          .map(_.split(":", 2)).map(h => h(0).trim.toLowerCase -> h(1).trim).toMap
+        assert(headers("content-type") === "application/json")
+        val body = new String(Array.fill(headers("content-length").toInt)(in.read().toChar))
+        assert(body.startsWith("""{"error":"request body above"""), body)
+      } finally sock.close()
+    }
+  }
+
   test("the ?key= auth gate 401s before any route, over the wire") {
     withServer(apiKey = Some("u5pvjtrozvx3c")) { (base, _) =>
       assert(get(s"$base/").statusCode() === 401)

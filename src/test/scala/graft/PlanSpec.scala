@@ -69,6 +69,11 @@ class PlanSpec extends SparkSpec {
         published.exists(_.getName.startsWith("graft_events_norm_")),
         s"normalized table not under the configured root: " +
           published.map(_.getName).mkString(","))
+      // every derived layout follows the same root, the dpp layout too
+      assert(SparkEntry.queries("q_join_dpp")(spark, fixture.toString).count() > 0)
+      val derived = root.toFile.listFiles().map(_.getName)
+      assert(derived.exists(_.startsWith("graft_join_dpp_")),
+        s"dpp layout not under the configured root: ${derived.mkString(",")}")
     } finally spark.conf.unset("spark.graft.events.normRoot")
   }
 

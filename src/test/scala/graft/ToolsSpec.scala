@@ -33,6 +33,12 @@ class ToolsSpec extends SparkSpec {
     assert(failedAction.frame.isEmpty && failedAction.secs === -1.0)
   }
 
+  test("a stage AQE submits from its pool is named by its operators in the slow list") {
+    val r = Runs.rep(spark, "q_agg_group", sfDir)
+    assert(r.ok && r.slow.nonEmpty, r.error)
+    assert(!r.slow.exists(_.contains("withThreadLocalCaptured")), r.slow)
+  }
+
   test("select refuses unknown names in one message and keeps the order given") {
     val e = intercept[IllegalArgumentException](
       Runs.select(Seq("q_agg_group", "q_nope", "q_nope2")))
